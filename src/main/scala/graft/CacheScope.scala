@@ -70,6 +70,8 @@ object CacheScope {
     * executor loss degrades to a file re-read, and cleanup is the
     * cluster's (`spark.cleaner.referenceTracking.cleanCheckpoints`
     * or the checkpoint dir's retention policy), not scope end.
+    * Asking for the reliable path without a checkpoint dir throws
+    * rather than quietly falling back to the local one.
     *
     * Scope contract (local path): the returned frame is DEAD after
     * `releaseAll()` — lineage was truncated to the released blocks,
@@ -79,9 +81,15 @@ object CacheScope {
   def trackCheckpoint(df: DataFrame): DataFrame = {
     val ss = df.sparkSession
     val reliable = ss.conf.get("spark.graft.checkpoint.reliable", "false")
-      .toBoolean && ss.sparkContext.getCheckpointDir.isDefined
-    if (reliable) df.checkpoint(true)
-    else {
+      .toBoolean
+    if (reliable) {
+      if (ss.sparkContext.getCheckpointDir.isEmpty)
+        throw new IllegalStateException(
+          "spark.graft.checkpoint.reliable=true needs a checkpoint dir " +
+            "(SparkContext.setCheckpointDir); refusing to fall back to " +
+            "a non-replicated localCheckpoint")
+      df.checkpoint(true)
+    } else {
       val c = df.localCheckpoint(true)
       deferred.get().add(() => c.queryExecution.analyzed.foreach {
         case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)

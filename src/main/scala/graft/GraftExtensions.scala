@@ -81,6 +81,17 @@ object GraftExtensions {
         graft.functions.expressions.MinHashSig(args(0),
           args(1).eval().asInstanceOf[Number].intValue())
       }),
+    (FunctionIdentifier("graft_minhash_bands"),
+      info("graft_minhash_bands",
+        "graft_minhash_bands(shingles, sigLen, bands) - LSH band keys array<struct<band, key>> of the sigLen-entry MinHash signature, computed once per row (keys bit-identical to xxhash64(b, array_join(slice(sig, b*r+1, r), ','))); sigLen and bands must be literals"),
+      { args: Seq[Expression] =>
+        require(args.length == 3, s"graft_minhash_bands expects 3 arguments, got ${args.length}")
+        require(args(1).foldable && args(2).foldable,
+          "graft_minhash_bands sigLen and bands must be literals")
+        graft.functions.expressions.MinHashBands(args(0),
+          args(1).eval().asInstanceOf[Number].intValue(),
+          args(2).eval().asInstanceOf[Number].intValue())
+      }),
     (FunctionIdentifier("graft_simhash"),
       info("graft_simhash",
         "graft_simhash(words) - 64-bit SimHash (one map-side pass; xxhash64 per word, bit-identical to the explode+bitsum form)"),

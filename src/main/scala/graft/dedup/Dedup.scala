@@ -13,6 +13,12 @@ import graft.functions.{Hashing, TextOps, VectorOps}
   * band keys for MinHash-LSH, 16-bit chunks for SimHash, shingles for
   * the exact-Jaccard join; exact verification runs only on candidate
   * pairs. Nothing here ever broadcasts or collects the corpus.
+  *
+  * Each signature kernel runs ONCE per doc — never reference an
+  * expensive native expression from inside a HOF lambda or through a
+  * column a filter is pushed over (Hashing's rule: `transform`-based
+  * band keys ran the 64-entry MinHash 33x per doc). Every MinHash
+  * path builds its band table through `bandTableOf`'s fused kernel.
   */
 object Dedup {
 
@@ -226,14 +232,13 @@ object Dedup {
       sigLen: Int, bands: Int, minJ: Double): DataFrame = {
     require(sigLen % bands == 0, "bands must divide signature length")
     val sh = persisted(withShingles(spread(docs), id, text, k))
-    val sig = Hashing.minhashSignatures(sh, id, "sh", sigLen)
-      .withColumn("bk", Hashing.bandKeys(col("sig"), bands, sigLen / bands))
-    val cand = Hashing.lshCandidates(sig.select(col(id), col("bk")), id, "bk")
+    // cached: both self-join branches read the (tiny) band table; at
+    // 100 TB the analogue is self-joining the at-rest band index
+    val cand = bandSelfPairs(
+      graft.CacheScope.track(bandTableOf(sh, id, sigLen, bands)))
     // exact verify on candidates only
-    val sa = sh.toDF("doc_a", "sh_a")
-    val sb = sh.toDF("doc_b", "sh_b")
-    cand.join(sa, cand(s"${id}_a") === sa("doc_a"))
-      .join(sb, cand(s"${id}_b") === sb("doc_b"))
+    cand.join(sh.toDF("doc_a", "sh_a"), Seq("doc_a"))
+      .join(sh.toDF("doc_b", "sh_b"), Seq("doc_b"))
       .withColumn("j", VectorOps.roundAt(Hashing.jaccard(col("sh_a"), col("sh_b")), 6))
       .filter(col("j") >= minJ)
       .select(col("doc_a"), col("doc_b"), col("j"))
@@ -290,12 +295,23 @@ object Dedup {
     bandTableOf(withShingles(spread(docs), id, text, k), id, sigLen, bands)
   }
 
+  /** The one band-table constructor: (id, band, key) rows of a shingle frame
+    * (`id`, `sh`). The explode takes the fused kernel directly — an
+    * explode over an attribute gets an inferred `size(..) > 0` filter,
+    * which would copy the kernel into a Filter again (see Hashing's
+    * rule). Docs with empty shingle arrays get no rows. */
   private def bandTableOf(sh: DataFrame, id: String, sigLen: Int,
       bands: Int): DataFrame =
-    Hashing.minhashSignatures(sh, id, "sh", sigLen)
-      .select(col(id),
-        explode(Hashing.bandKeys(col("sig"), bands, sigLen / bands)).as("bk"))
+    sh.select(col(id), explode(Hashing.minhashBands(col("sh"), sigLen, bands)).as("bk"))
       .select(col(id), col("bk.band").as("band"), col("bk.key").as("key"))
+
+  /** Within-table LSH candidates (doc_a < doc_b) of a band table: one
+    * self-join on (band, key). Cache `bt` first — both sides read it. */
+  private def bandSelfPairs(bt: DataFrame): DataFrame =
+    bt.toDF("doc_a", "band", "key")
+      .join(bt.toDF("doc_b", "band", "key"), Seq("band", "key"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b").distinct()
 
   /** `minhashIncrementalPairs` in its steady state: the base side
     * arrives as PERSISTED artifacts — the band index (id, band, key)
@@ -335,10 +351,7 @@ object Dedup {
     require(sigLen % bands == 0, "bands must divide signature length")
     val shN = persisted(withShingles(spread(batch), id, text, k))
     val bt = graft.CacheScope.track(bandTableOf(shN, id, sigLen, bands))
-    val candBB = bt.toDF("doc_a", "band", "key")
-      .join(bt.toDF("doc_b", "band", "key"), Seq("band", "key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val candBB = bandSelfPairs(bt)
     val candNB = bt.toDF("doc_a", "band", "key")
       .join(baseBands.toDF("doc_b", "band", "key"), Seq("band", "key"))
       .select("doc_a", "doc_b").distinct()

@@ -13,6 +13,17 @@ import org.apache.spark.sql.functions._
   * generation shuffles only (band-key, doc-id) pairs — O(docs × bands),
   * independent of document length — and exact verification runs only
   * on candidate pairs.
+  *
+  * Rule for native hash kernels (graft_minhash and friends): never
+  * reference an expensive expression from inside a higher-order
+  * function's lambda, nor through a column that a filter is pushed
+  * over. CollapseProject inlines the producing expression into every
+  * reference — a `transform` over the signature column ran
+  * graft_minhash once per band (16x at 64/16 banding), and the
+  * inferred `isnotnull(sig) AND size(bk) > 0` filter ran it 17 times
+  * more: 33 signatures per doc where one is needed. Fuse the consumer
+  * into the kernel instead (`minhashBands`) and feed a generator the
+  * expression itself, not an attribute holding it.
   */
 object Hashing {
 
@@ -55,13 +66,14 @@ object Hashing {
         call_function("graft_minhash", col(shingleCol), lit(k)).as("sig"))
       .filter(col("sig").isNotNull)
 
-  /** LSH band keys for a minhash signature: hash of each band of
-    * `rowsPerBand` consecutive signature entries, tagged with the band
-    * index so different bands never collide. */
-  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"),
-        xxhash64(b, array_join(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), ",")).as("key")))
+  /** LSH band keys of a shingle-array column's `sigLen`-entry MinHash
+    * signature: array<struct<band, key>>, key = hash of each band of
+    * sigLen/bands consecutive signature entries, tagged with the band
+    * index so different bands never collide. The native
+    * `graft_minhash_bands` computes the signature once per row; null
+    * for empty arrays. Explode it directly (see the rule above). */
+  def minhashBands(shingleArr: Column, sigLen: Int, bands: Int): Column =
+    call_function("graft_minhash_bands", shingleArr, lit(sigLen), lit(bands))
 
   /** 64-bit SimHash of a word-array column: per-word xxhash64, sum
     * ±1 per bit position over words, sign → bit.
@@ -109,29 +121,5 @@ object Hashing {
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
     inter / (size(a) + size(b) - inter)
-  }
-
-  /** Candidate-pair generation via LSH bands: explode band keys,
-    * self-join on (band, key), keep ordered pairs once. `df` must have
-    * columns (`idCol`, `sigCol` array). Shuffle is on band keys only.
-    */
-  def lshCandidates(df: DataFrame, idCol: String, bandsCol: String): DataFrame = {
-    // materialization barrier: the self-join references this frame
-    // TWICE, and without it each branch re-evaluates the entire
-    // signature pipeline upstream (64 minhashes per doc + band-key
-    // hashing) — measured at ~2x the whole stage's cost. The cached
-    // frame is tiny ((id, band, key) longs, bands rows per doc);
-    // CacheScope releases it when the query's action completes. At
-    // 100 TB the analogue is writing the band-key table once and
-    // self-joining the at-rest copy.
-    val e = graft.CacheScope.track(
-      df.select(col(idCol), explode(col(bandsCol)).as("bk"))
-        .select(col(idCol), col("bk.band").as("band"), col("bk.key").as("key")))
-    val l = e.toDF(s"${idCol}_a", "band", "key")
-    val r = e.toDF(s"${idCol}_b", "band", "key")
-    l.join(r, Seq("band", "key"))
-      .filter(col(s"${idCol}_a") < col(s"${idCol}_b"))
-      .select(col(s"${idCol}_a"), col(s"${idCol}_b"))
-      .distinct()
   }
 }

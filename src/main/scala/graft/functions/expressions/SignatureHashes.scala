@@ -1,9 +1,9 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** graft_minhash(shingles, k): the k-entry MinHash signature of a
@@ -82,6 +82,12 @@ object MinHashSig {
       n => Array.tabulate(n)(i => XXH64.hashInt(i, 42L)))
 
   def compute(arr: ArrayData, seeds: Array[Long]): GenericArrayData = {
+    val mins = signature(arr, seeds)
+    if (mins == null) null else new GenericArrayData(mins.map(m => m: Any))
+  }
+
+  /** The signature as a primitive array; null for an empty array. */
+  def signature(arr: ArrayData, seeds: Array[Long]): Array[Long] = {
     val n = arr.numElements()
     if (n == 0) return null
     val k = seeds.length
@@ -98,9 +104,95 @@ object MinHashSig {
       }
       j += 1
     }
-    val out = new Array[Any](k)
-    var i = 0
-    while (i < k) { out(i) = mins(i); i += 1 }
+    mins
+  }
+}
+
+/** graft_minhash_bands(shingles, sigLen, bands): the LSH band keys of
+  * a doc's `sigLen`-entry MinHash signature, as
+  * `array<struct<band:int, key:bigint>>`, with the signature computed
+  * ONCE per row (`MinHashSig.signature`).
+  *
+  * Key b is bit-identical to the declarative chain
+  * `xxhash64(b, array_join(cast(slice(sig, b*r+1, r) as array<string>), ","))`
+  * with r = sigLen / bands, i.e.
+  * `XXH64.hashUTF8String(joined, XXH64.hashInt(b, 42))` — so persisted
+  * band indexes stay valid. Empty arrays yield null, as
+  * graft_minhash does.
+  *
+  * Why fused: that chain is a `transform` lambda over the signature
+  * column, and CollapseProject inlines `graft_minhash` into the
+  * lambda — once per band, 16x at the standard 64/16 banding — and
+  * filter inference copies it into `isnotnull(sig) AND size(bk) > 0`
+  * (17x more). On a 1,000-doc corpus at local[4], the longest stage
+  * of `dedup_minhash` fell from 0.55 s to 0.07 s. Callers must
+  * explode this expression DIRECTLY (not an attribute holding it),
+  * or filter inference copies it back into a Filter.
+  */
+case class MinHashBands(child: Expression, sigLen: Int, bands: Int)
+    extends UnaryExpression {
+
+  require(bands >= 1 && sigLen >= bands && sigLen % bands == 0,
+    s"graft_minhash_bands needs bands dividing sigLen, got $sigLen/$bands")
+
+  // null on empty arrays regardless of child nullability (see MinHashSig)
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_minhash_bands"
+  override def dataType: DataType = MinHashBands.Type
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(StringType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"graft_minhash_bands expects array<string>, got ${other.catalogString}")
+    }
+
+  override protected def nullSafeEval(input: Any): Any =
+    MinHashBands.compute(input.asInstanceOf[ArrayData],
+      MinHashSig.seeds(sigLen), bands)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => {
+      val seeds = ctx.addReferenceObj("seeds", MinHashSig.seeds(sigLen), "long[]")
+      s"""
+         |${ev.value} = graft.functions.expressions.MinHashBands.compute(
+         |  $c, $seeds, $bands);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinHashBands {
+
+  val Type: ArrayType = ArrayType(StructType(Seq(
+    StructField("band", IntegerType, nullable = false),
+    StructField("key", LongType, nullable = false))), containsNull = false)
+
+  def compute(arr: ArrayData, seeds: Array[Long], bands: Int): GenericArrayData = {
+    val sig = MinHashSig.signature(arr, seeds)
+    if (sig == null) return null
+    val r = sig.length / bands
+    val out = new Array[Any](bands)
+    val sb = new java.lang.StringBuilder()
+    var b = 0
+    while (b < bands) {
+      sb.setLength(0)
+      var i = b * r
+      while (i < (b + 1) * r) {
+        if (i > b * r) sb.append(',')
+        sb.append(sig(i))
+        i += 1
+      }
+      val key = XXH64.hashUTF8String(UTF8String.fromString(sb.toString),
+        XXH64.hashInt(b, 42L))
+      out(b) = new GenericInternalRow(Array[Any](b, key))
+      b += 1
+    }
     new GenericArrayData(out)
   }
 }

@@ -243,8 +243,8 @@ object RelationalQueries {
         // word-agg exchanges are identical subtrees that ReuseExchange
         // dedupes inside the one physical plan (measured: caching here
         // ADDS a materialization pass and blocks AQE, ~2x slower —
-        // unlike lshCandidates, whose branches alias columns and so
-        // don't hash-match for reuse)
+        // unlike the LSH band-table self-join, whose branches alias
+        // columns and so don't hash-match for reuse)
         val words = li.select((col("l_orderkey") % 2000).as("src"),
             (col("l_partkey") % 2000).as("dst"))
           .filter(col("src") =!= col("dst"))

@@ -106,6 +106,9 @@ object ZarrWriter {
     case i: Int => i.toString
     case b: Boolean => b.toString
     case xs: Seq[Any] @unchecked => xs.map(jsonVal).mkString("[", ", ", "]")
+    // primitive arrays too: HDF5 attributes (e.g. Hdf5Save's
+    // NumPart_ThisFile, a long[]) read back as JVM arrays
+    case a: Array[_] => jsonVal(a.toSeq)
     case null => "null"
     case other => sys.error(s"unsupported attr value $other")
   }

@@ -39,9 +39,25 @@ class CacheScopeSpec extends SparkSpec {
     intercept[Exception] { ckpt.count() }
   }
 
+  // must run before the reliable-path test: a SparkContext's checkpoint
+  // dir cannot be unset once that test sets it
+  test("reliable path without a checkpoint dir throws instead of going local") {
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      "the shared session already has a checkpoint dir")
+    spark.conf.set("spark.graft.checkpoint.reliable", "true")
+    try {
+      val e = intercept[IllegalStateException] {
+        CacheScope.withScope(CacheScope.trackCheckpoint(spark.range(0, 10).toDF("id")))
+      }
+      assert(e.getMessage.contains("checkpoint dir"), e.getMessage)
+    } finally {
+      spark.conf.set("spark.graft.checkpoint.reliable", "false")
+    }
+  }
+
   test("reliable path: spark.graft.checkpoint.reliable survives scope end") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
     spark.conf.set("spark.graft.checkpoint.reliable", "true")
     try {
       val ckpt = CacheScope.withScope {
@@ -56,6 +72,7 @@ class CacheScopeSpec extends SparkSpec {
       assert(ckpt.count() == 50)
     } finally {
       spark.conf.set("spark.graft.checkpoint.reliable", "false")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 }

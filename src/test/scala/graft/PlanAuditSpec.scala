@@ -230,6 +230,75 @@ class PlanAuditSpec extends SparkSpec {
       "per-seed min aggregates mean the explode formulation came back:\n" + p.take(1500))
   }
 
+  /** Every physical operator of the final plans that `body`'s actions
+    * executed — including the plans that materialized cached frames —
+    * each operator once. */
+  private def executedOperators(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val marker = "plan_audit_marker"
+    def markerSeen = qes.toArray(Array.empty[QueryExecution])
+      .exists(_.analyzed.output.exists(_.name == marker))
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive in order: once the marker's is in, so
+      // are those of every action `body` ran
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerSeen, "query execution events did not arrive")
+    } finally spark.listenerManager.unregister(listener)
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def walk(p: SparkPlan): Unit = if (seen.add(p)) {
+      p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case s: QueryStageExec => walk(s.plan)
+        case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+        case r: ReusedExchangeExec => walk(r.child)
+        case _ => ()
+      }
+      p.children.foreach(walk)
+      p.subqueries.foreach(walk)
+    }
+    qes.forEach(qe => walk(qe.executedPlan))
+    seen.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  test("dedup_minhash, dedup_clusters: the MinHash kernel runs in ONE Generate") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
+    import org.apache.spark.sql.execution.GenerateExec
+    import graft.functions.expressions.{MinHashBands, MinHashSig}
+    def kernel(e: Expression) = e.exists {
+      case _: MinHashSig | _: MinHashBands => true
+      case _ => false
+    }
+    for (name <- Seq("dedup_minhash", "dedup_clusters")) {
+      val ops = executedOperators(
+        CacheScope.withScope(SparkEntry.queries(name)(spark, sfDir).collect()))
+      val evaluating = ops.filter(_.expressions.exists(kernel))
+      // one Generate exploding the fused kernel, and no Filter: a
+      // transform lambda over the signature, or a filter pushed over
+      // it, would evaluate the signature once more per band / filter
+      assert(evaluating.map(_.getClass) == Seq(classOf[GenerateExec]),
+        s"$name evaluates the kernel in:\n${evaluating.map(_.simpleString(400)).mkString("\n")}")
+      assert(!evaluating.head.expressions.exists(_.exists {
+        case l: LambdaFunction => kernel(l)
+        case _ => false
+      }), s"$name references the kernel inside a lambda")
+    }
+  }
+
   test("dedup_substring: positional hashes native; spans reuse the doc partitioning") {
     val p = plan("dedup_substring")
     assert(p.contains("graft_pos_shingles"), p.take(1200))

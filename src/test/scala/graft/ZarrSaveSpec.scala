@@ -110,6 +110,23 @@ class ZarrSaveSpec extends SparkSpec {
       (3L, 4.0, 40L), (4L, 5.0, 50L)))
   }
 
+  test("copyToZarr of an Hdf5Save snapshot (long[] header attrs) keeps count and sums") {
+    import graft.sources.Load
+    import graft.sources.hdf5.Hdf5Save
+    val dir = Files.createTempDirectory("graft_h2z").toString
+    val snap = s"$dir/snap"
+    Hdf5Save.save(spark.range(25).select(col("id"), (col("id") * 3).as("l"),
+      (col("id") * 0.5).as("d")), "id", snap, chunkRows = 10)
+    val store = s"$dir/store"
+    Load.copyToZarr(spark, snap, store, chunkRows = 7)
+    // Hdf5Save's NumPart_ThisFile header attr is a long[]
+    assert(ZarrStore.open(store).attrs("/").contains("NumPart_ThisFile"))
+    def reduced(p: String) = Load.dataFrame(spark, p)
+      .agg(count(lit(1)), sum("l"), sum("d")).head()
+    assert(reduced(store) == reduced(snap))
+    assert(reduced(store).getLong(0) == 25)
+  }
+
   test("non-contiguous or duplicated row index fails loudly") {
     val dir = Files.createTempDirectory("graft_zsave_bad").toString + "/s"
     val gap = Seq((0L, 1.0), (2L, 2.0)).toDF("id", "v") // id 1 missing

@@ -30,9 +30,9 @@ object Bench {
     // frames, offset catalogs) are released once the query's action
     // completes — without this, 51 queries × 2 passes accumulate dead
     // cached partitions and later queries pay eviction churn.
-    // benchQueries: identical to SparkEntry.queries except the sketch
-    // family, whose correctness gate computes the EXACT answer beside
-    // the sketch — here the sketch operator is timed alone
+    // benchQueries: each query's one build — the frame Verify checks,
+    // directly or through the verdict gate of the sketch and ANN
+    // recall queries (the gate's exact side is never timed)
     // failure reasons ride IN the JSON line: the driver keeps only the
     // tail of the run's output, so stderr messages from early queries
     // are lost — round 6's three sentinel rows arrived reason-less

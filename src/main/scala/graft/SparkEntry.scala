@@ -12,8 +12,9 @@ import graft.queries._
 object SparkEntry {
 
   /** All registered query families. Later registrations would win on
-    * name clash — names are kept globally unique. */
-  private def all: Map[String, QueryDef] =
+    * name clash — names are kept globally unique. Built once, so
+    * `queries` and `benchQueries` hand out the SAME build instances. */
+  private lazy val all: Map[String, QueryDef] =
     RelationalQueries.defs ++ ScidaQueries.defs ++ EventQueries.defs ++
       TextQueries.defs ++ DedupQueries.defs ++ AnnQueries.defs ++
       MultimodalQueries.defs ++ Hdf5Queries.defs ++ ZarrQueries.defs ++
@@ -23,21 +24,30 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     all("groupby_agg").build(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2 — what
+    * Verify checks: the build itself, or for a verdict-oracled query
+    * its gate applied to the build. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map { case (name, qd) =>
+      name -> qd.gate.fold(qd.build)(g => (s, d) => g(s, d, qd.build(s, d)))
+    }
+
+  /** What Bench times: every query's one build. Identical (`eq`) to
+    * `queries` except for the gated queries, where Verify wraps the
+    * same build in its verdict. */
+  def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
     all.map { case (name, qd) => name -> qd.build }
 
-  /** Bench-time builds: identical to `queries` except where a gate
-    * oracle computes an exact verdict alongside the operator — there
-    * the bench override times the operator alone (sketch family). */
-  def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map { case (name, qd) => name -> qd.benchBuild.getOrElse(qd.build) }
-
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
-    * Resolved lazily (thunks) — call AFTER running the builds so
-    * build-recorded state (signature-table paths) is current. */
-  def oracleSql: Map[String, String] =
-    all.collect { case (name, qd) if qd.oracle.isDefined =>
-      name -> qd.oracle.get }
+    * the tables of dataset dir `d`. Omitted for non-SQL-expressible
+    * ops. Artifact-backed oracles name the artifact their build writes
+    * for `d` in this process. */
+  def oracleSqlAt(d: String): Map[String, String] =
+    all.collect { case (name, QueryDef(_, Some(o), _)) => name -> o(d) }
+
+  /** `oracleSqlAt` with no dataset declared: constant oracles are
+    * complete; artifact-backed ones name a path no build writes, so
+    * their replay fails loudly instead of reading another dataset's
+    * artifact. */
+  def oracleSql: Map[String, String] = oracleSqlAt("<no dataset>")
 }

@@ -42,10 +42,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // declare which dataset's artifacts oracle thunks must resolve
-    // (split_by_cluster's label table is memoized per dataset)
-    graft.queries.OracleDataset.set(sfDir)
-    val json = SparkEntry.oracleSql
+    // artifact-backed oracles name this dataset's artifacts
+    val json = SparkEntry.oracleSqlAt(sfDir)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -490,8 +490,10 @@ object Dedup {
   def simhashPairsFromSigs(sigs: DataFrame, id: String,
       maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, "4-chunk banding is only complete for distance <= 3")
-    val bands = sigs.withColumn("bk", Hashing.simhashBands(col("sim")))
-    val e = bands.select(col(id), col("sim"), explode(col("bk")).as("b"))
+    // explode the band array itself, not a column holding it: an
+    // attribute input would get an inferred size(..) > 0 filter
+    val e = sigs.select(col(id), col("sim"),
+        explode(Hashing.simhashBands(col("sim"))).as("b"))
       .select(col(id), col("sim"), col("b.band").as("band"), col("b.key").as("key"))
     val l = e.toDF("doc_a", "sim_a", "band", "key")
     val r = e.toDF("doc_b", "sim_b", "band", "key")
@@ -504,10 +506,13 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs within `maxHamming` (<= 3 for the 4x16-bit
-    * banding to be lossless by pigeonhole). */
+    * banding to be lossless by pigeonhole). The signatures are cached:
+    * both self-join branches read them, and each would otherwise run
+    * the signature pass (a broadcast build side is never reused). */
   def simhashPairs(docs: DataFrame, id: String, text: String,
       maxHamming: Int): DataFrame =
-    simhashPairsFromSigs(simhashSigs(docs, id, text), id, maxHamming)
+    simhashPairsFromSigs(graft.CacheScope.track(simhashSigs(docs, id, text)),
+      id, maxHamming)
 
   /** Benchmark decontamination — the training-data step that removes
     * documents overlapping an evaluation set (the public n-gram
@@ -622,7 +627,7 @@ object Dedup {
   /** The normalized boilerplate line set (column `__norm`): lines in
     * >= minDocs distinct docs. At scale this is a maintained corpus
     * STATISTIC (refreshed at ingest beside the corpus, like a hot-key
-    * set) — dedup_lines' bench variant reads it persisted. */
+    * set) — dedup_lines reads it as a memoized set. */
   def boilerplateLineSet(docs: DataFrame, id: String, text: String,
       minDocs: Long, sep: String = "\n"): DataFrame =
     boilerFromLines(explodeLines(docs, id, text, sep), id, minDocs)

@@ -99,10 +99,12 @@ object Hashing {
     * aggregates shuffled partial sums per doc). Bit-identical to that
     * form; docs with empty word arrays are dropped, as explode
     * dropped them. Input: (idCol, wordsCol array). Output: (idCol,
-    * sim long). */
+    * sim long). The 1-element explode is a Generate barrier: the null
+    * filter stays above it, where a Project would let it be pushed
+    * below as a second graft_simhash evaluation (the rule above). */
   def simhashes(df: DataFrame, idCol: String, wordsCol: String): DataFrame =
     df.select(col(idCol),
-        call_function("graft_simhash", col(wordsCol)).as("sim"))
+        explode(array(call_function("graft_simhash", col(wordsCol)))).as("sim"))
       .filter(col("sim").isNotNull)
 
   /** Hamming distance between two int64 columns. */
@@ -111,11 +113,13 @@ object Hashing {
   /** SimHash band keys: the 4 16-bit chunks, tagged by chunk index.
     * Any pair within Hamming distance 3 shares at least one exact
     * chunk (pigeonhole), so a join on chunk keys finds all such pairs
-    * while shuffling only (chunk, doc) pairs. */
+    * while shuffling only (chunk, doc) pairs. A fixed 4-element
+    * array of shifts, not a transform lambda, so a signature
+    * expression feeding `sim` is never inlined once per band (the
+    * rule above); explode it directly. */
   def simhashBands(sim: Column): Column =
-    transform(sequence(lit(0), lit(3)), b =>
-      struct(b.as("band"),
-        call_function("shiftright", sim, b * 16).bitwiseAND(0xFFFFL).as("key")))
+    array((0 until 4).map(b => struct(lit(b).as("band"),
+      shiftright(sim, b * 16).bitwiseAND(0xFFFFL).as("key"))): _*)
 
   /** Exact Jaccard similarity between two shingle-set columns. */
   def jaccard(a: Column, b: Column): Column = {

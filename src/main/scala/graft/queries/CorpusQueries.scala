@@ -36,24 +36,19 @@ object CorpusQueries {
     "CASE lang " + budgetMap.toSeq.sorted.map { case (l, b) =>
       s"WHEN '$l' THEN $b" }.mkString(" ") + " END"
 
-  // sample_temperature's build→oracle handshake: the build derives the
-  // per-stratum copy rates from corpus counts (driver-side, O(strata))
-  // and records them; the oracle thunk — resolved AFTER builds run —
-  // interpolates the same (whole, frac-threshold) literals, so both
-  // engines resample with identical integer/string comparisons.
-  private val tempRatesRef =
-    new java.util.concurrent.atomic.AtomicReference[Map[String, Double]](Map.empty)
-
-  // rates are a corpus statistic (maintained at ingest in production):
-  // memoized per (JVM, dataset) like hotKeysOf/quantilesOf, so only
-  // the first execution pays the O(strata) count aggregate
+  // sample_temperature's per-stratum copy rates, derived from corpus
+  // counts (driver-side, O(strata)): a corpus statistic (maintained at
+  // ingest in production), memoized per (JVM, dataset) like
+  // hotKeysOf/quantilesOf, so only the first execution pays the count
+  // aggregate. The oracle interpolates the same dataset's rates as
+  // (whole, frac-threshold) literals, so both engines resample with
+  // identical integer/string comparisons.
   private val tempRatesMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, Double]]()
 
   // dedup_lines' deterministic line fixture: every doc gains a nav
   // line (shared by doc_id%8) and a footer (doc_id%100), then its
-  // text is re-lined into 10-word rows — shared by the gated build
-  // and the steady-state bench variant
+  // text is re-lined into 10-word rows
   private def linedDocs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val did = col("doc_id")
@@ -95,41 +90,17 @@ object CorpusQueries {
       s.read.parquet(p).collect().map(_.getString(0)).toSet
     })
 
-  // pack_sequences_bpe's oracle reads the shared BPE vocab artifact
-  // (TextQueries.bpeVocabFor); set at build time, read at oracle-dump
-  // time (QueryDef's by-name thunk contract)
-  private val bpePackVocabRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_bpe_vocab_default")
   // split_by_cluster's persisted full-corpus label table (the dedup
   // store's primary artifact — the ccBaseFor discipline), built once
   // per (JVM, dataset); the oracle replays split assignment and
   // leakage from the SAME labels
-  private val ccFullMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def ccFullPath(d: String): String =
+    Fixtures.tmpPath("graft_ccfull", d)
   private def ccFullFor(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    ccFullMemo.computeIfAbsent(d, _ => {
-      val p = Fixtures.tmpPath("graft_ccfull", d)
+    Fixtures.writeOnce(ccFullPath(d))(p =>
       Dedup.corpusLabels(Tables.documents(s, d), "doc_id", "text")
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-  // The oracle thunk resolves the label-table path PER DATASET: the
-  // consumer's declared dataset (OracleDataset, set by Verify/fuzz
-  // before dumping oracles) wins; the last-built dataset is the
-  // fallback for one-dataset JVMs. Either way the path comes out of
-  // the per-dataset memo, so it can only ever name an artifact that
-  // build actually wrote; an unbuilt (or never-declared) dataset
-  // resolves to a sentinel no build writes, and the replay fails
-  // loudly in DuckDB ("No files found") instead of silently reading
-  // another dataset's labels.
-  private val ccLastDataset =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private def ccFullPathForOracle(): String =
-    OracleDataset.current.orElse(Option(ccLastDataset.get))
-      .flatMap(d => Option(ccFullMemo.get(d)))
-      .getOrElse("/tmp/graft_ccfull_unbuilt")
+        .write.mode("overwrite").parquet(p))
 
   // ONE definition of the md5-prefix split fate (train:val:test =
   // 208:24:24 / 256) — split_assign and split_by_cluster derive both
@@ -312,12 +283,14 @@ object CorpusQueries {
     // rebuilds the same line table and replays the count rule. A doc
     // whose every line is boilerplate drops out entirely (C4
     // semantics: empty docs are discarded). ---
-    "dedup_lines" -> QueryDef.sqlBench(
-      // gated build: the statistic derives inline (one bounded probe
-      // action), then the strip is the map-side graft_strip_lines
-      // pass — see Dedup.stripBoilerplateLines/stripLines
-      (s, d) => dedupLinesSelect(Dedup.stripBoilerplateLines(
-        linedDocs(s, d), "doc_id", "aug", minDocs = 3L)),
+    "dedup_lines" -> QueryDef.sql(
+      // the boilerplate line set is a maintained corpus statistic
+      // (refreshed at ingest, the hotKeysOf argument — C4 deployments
+      // persist exactly this set): the build is the strip pass ALONE —
+      // one map-side graft_strip_lines pass over the corpus, the
+      // memoized set riding the plan as a literal, no extra action
+      (s, d) => dedupLinesSelect(Dedup.stripLinesLiteral(
+        linedDocs(s, d), "doc_id", "aug", boilerSetFor(s, d))),
       """WITH series AS (
         |  SELECT unnest(range(1, 65)) AS i
         |), ws AS (
@@ -342,16 +315,7 @@ object CorpusQueries {
         |SELECT doc_id, md5(string_agg(line, chr(10) ORDER BY pos)) AS fp,
         |  CAST(length(string_agg(line, chr(10) ORDER BY pos)) AS BIGINT)
         |    AS kept_chars
-        |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-      // bench: the boilerplate line set is a maintained corpus
-      // statistic (refreshed at ingest, the hotKeysOf argument — C4
-      // deployments persist exactly this set); steady state times the
-      // strip pass ALONE — one map-side graft_strip_lines pass over
-      // the corpus, the memoized set riding the plan as a literal —
-      // no statistic rebuild, no extra action. BenchEquivalenceSpec
-      // pins the outputs equal.
-      (s, d) => dedupLinesSelect(Dedup.stripLinesLiteral(
-        linedDocs(s, d), "doc_id", "aug", boilerSetFor(s, d)))),
+        |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // --- substring-level (span) exact dedup: maximal word spans of
     // length >= 8 occurring in >= 2 distinct docs — the passage-level
@@ -571,10 +535,9 @@ object CorpusQueries {
     // (the leak the cluster rule prevents). Labels come from the
     // persisted dedup-store artifact; both engines replay assignment
     // + leakage from the SAME table, all md5/count arithmetic. ---
-    "split_by_cluster" -> QueryDef.sql(
+    "split_by_cluster" -> QueryDef.sqlAt(
       (s, d) => {
         val p = ccFullFor(s, d)
-        ccLastDataset.set(d)
         val labels = s.read.parquet(p).select(col("doc_id"), col("cluster"))
         val a = labels.select(col("doc_id"), col("cluster"),
           splitFate(col("doc_id")).as("naive_split"),
@@ -591,9 +554,9 @@ object CorpusQueries {
             col("leaked").as("naive_leaked_clusters"))
           .transform(QueryDef.sortSmall(_, col("split")))
       },
-      s"""WITH l AS (
+      d => s"""WITH l AS (
         |  SELECT doc_id, cluster
-        |  FROM read_parquet('${ccFullPathForOracle()}/*.parquet')
+        |  FROM read_parquet('${ccFullPath(d)}/*.parquet')
         |), a AS (
         |  SELECT doc_id, cluster,
         |    ${splitFateSql("doc_id")} AS naive_split,
@@ -629,12 +592,11 @@ object CorpusQueries {
     // r copies per doc; a doc's fate is a pure function of its id.
     // Oracle replays the identical integer/string comparisons with
     // the recorded rates as literals. ---
-    "sample_temperature" -> QueryDef.sql(
+    "sample_temperature" -> QueryDef.sqlAt(
       (s, d) => {
         val docs = Tables.documents(s, d)
         val rates = tempRatesMemo.computeIfAbsent(d, _ =>
           Sampling.temperatureRates(docs, "lang", alpha = 0.5))
-        tempRatesRef.set(rates)
         // null-stratum rows are dropped on BOTH sides: the oracle's
         // inner join on lang never matches NULL, and repeatSample's
         // default branch would otherwise emit them with one copy
@@ -642,8 +604,9 @@ object CorpusQueries {
             "doc_id", "lang", rates)
           .select("doc_id", "lang", "copy")
           .sortWithinPartitions("doc_id", "copy")
-      }, {
-        val rates = tempRatesRef.get
+      }, d => {
+        // unbuilt dataset: no rates, and the replay fails loudly
+        val rates = Option(tempRatesMemo.get(d)).getOrElse(Map.empty)
         val rows = rates.toSeq.sorted.map { case (l, r) =>
           s"('$l', ${math.floor(r).toLong}, '${Sampling.fracHex6(r)}')"
         }.mkString(", ")
@@ -750,11 +713,10 @@ object CorpusQueries {
     // bucketed two-phase scan. Oracle: per-word counts from the
     // persisted vocab artifact (bpe_tokens' protocol) summed per doc,
     // then the same integer window arithmetic. ---
-    "pack_sequences_bpe" -> QueryDef.sql(
+    "pack_sequences_bpe" -> QueryDef.sqlAt(
       (s, d) => {
         val ctx = 512
         val tok = TextQueries.bpeTokenizerFor(s, d)
-        bpePackVocabRef.set(TextQueries.bpeVocabFor(s, d))
         val toks = Tables.documents(s, d).select(col("doc_id"),
           graft.functions.BpeColumns.tokenCount(col("text"), tok)
             .cast("long").as("n_tokens"))
@@ -768,11 +730,11 @@ object CorpusQueries {
               .as("n_splits"))
           .sortWithinPartitions("doc_id")
       },
-      s"""WITH ws AS (
+      d => s"""WITH ws AS (
          |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
          |v AS (
          |  SELECT word, n_tokens
-         |  FROM read_parquet('${bpePackVocabRef.get}/*.parquet')),
+         |  FROM read_parquet('${TextQueries.bpeVocabPath(d)}/*.parquet')),
          |toks AS (
          |  SELECT w.doc_id, CAST(sum(v.n_tokens) AS BIGINT) AS n_tokens
          |  FROM ws w JOIN v USING (word) GROUP BY w.doc_id),

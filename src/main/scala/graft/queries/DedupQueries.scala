@@ -14,140 +14,84 @@ import graft.sources.Tables
   */
 object DedupQueries {
 
-  // dedup_simhash's signature-persist handshake: the build writes the
-  // signature table to a DATASET-KEYED path and records it; the oracle
-  // string — which Verify generates AFTER running the builds — then
-  // points at the same run's table. Keying by dataset dir means a
-  // bench pass at another scale writes a DIFFERENT path and can never
-  // clobber the table this pass's oracle reads, whatever order the
-  // driver interleaves verify / compare / bench.
-  private val simhashSigPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_simhash_sigs_default")
-  // lsh_bucket_stats' persisted band-index handshake (same protocol)
-  private val lshBandsPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_lsh_bands_default")
-  // bench steady state: the band index is a maintained dedup-store
-  // artifact — write it once per (JVM, dataset), time only the stats
-  private val lshBandsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // Artifact protocol: an artifact-backed oracle replays from a table
+  // its build wrote, at a path that is a pure function of the dataset
+  // (Fixtures.tmpPath) — the oracle computes the same path from the
+  // dataset dir. Keying by dataset means a pass at another scale writes
+  // a DIFFERENT path and can never clobber the table this pass's
+  // oracle reads.
+
+  // lsh_bucket_stats' band index (id, band, key): a maintained
+  // dedup-store artifact, written once per (JVM, dataset) by the same
+  // native signature expressions — the build times the monitor's two
+  // partial-agg passes, not the index rebuild
+  private def lshBandsPath(d: String): String =
+    Fixtures.tmpPath("graft_lsh_bands", d)
   private def lshBandsFor(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    lshBandsMemo.computeIfAbsent(d, _ => {
-      val p = Fixtures.tmpPath("graft_lsh_bands", d)
+    Fixtures.writeOnce(lshBandsPath(d))(p =>
       Dedup.minhashBandIndex(Tables.documents(s, d), "doc_id", "text",
           k = 3, sigLen = 64, bands = 16)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.mode("overwrite").parquet(p))
 
-  /** The monitor aggregation lsh_bucket_stats times: per-band bucket
-    * count / max bucket / exact candidate-pair bound from a persisted
-    * (id, band, key) index. */
-  private def lshBucketStatsFrame(s: org.apache.spark.sql.SparkSession,
-      p: String) =
-    s.read.parquet(p)
-      .groupBy("band", "key").agg(count(lit(1)).as("sz"))
-      .groupBy("band")
-      .agg(count(lit(1)).as("n_buckets"),
-        max("sz").as("max_size"),
-        sum(expr("sz * (sz - 1) div 2")).as("cand_pairs"))
-      // bounded result (one row per band) — see QueryDef.sortSmall
-      .transform(QueryDef.sortSmall(_, col("band")))
   private def simhashSigPath(d: String): String =
     Fixtures.tmpPath("graft_simhash_sigs", d)
 
-  // dedup_embcos uses the same signature-persist handshake for its
-  // IVF cell-assignment table (the vector-derived blocking key)
-  private val embcosCellPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_embcos_cells_default")
+  // dedup_embcos' (vec_id, cell) assignment table: the corpus's ANN
+  // index, which production maintains beside the vectors (rebuilt at
+  // ingest) — written once per (JVM, dataset), so the build times the
+  // near-dup operator (candidate join + cosine verify), never the
+  // quantizer train; the oracle replays from the same table
   private def embcosCellPath(d: String): String =
     Fixtures.tmpPath("graft_embcos_cells", d)
-
-  // Bench-path cell index, built ONCE per (JVM, dataset): the cell
-  // assignment is the corpus's ANN index — production maintains it as
-  // a persisted artifact beside the vectors (rebuilt at ingest), so
-  // the measured near-dup query is the candidate join + verify, not
-  // the index build + parquet write the Verify path keeps for its
-  // oracle handshake. Same fixture pattern as ScidaQueries'
-  // zOrderedPart. Distinct path from embcosCellPath: bench must never
-  // clobber the table a concurrent verify pass's oracle reads.
-  // dedup_incremental_bloom's bench-path filter, built once per (JVM,
-  // dataset) — see the query's bench note
-  private val bloomMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.util.sketch.BloomFilter]()
-
-  private val embcosBenchCells =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def embcosBenchCellsFor(s: org.apache.spark.sql.SparkSession,
+  private def embcosCellsFor(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    embcosBenchCells.computeIfAbsent(d, _ => {
-      val p = Fixtures.tmpPath("graft_embcos_bench", d)
+    Fixtures.writeOnce(embcosCellPath(d)) { p =>
       val embs = Tables.embeddings(s, d)
       val (_, centers) = graft.ann.Ivf.build(
         embs, "vec_id", "embedding", nCells = 8)
       Dedup.cellAssignments(embs, "vec_id", "embedding", centers, nProbe = 3)
         .write.mode("overwrite").parquet(p)
-      p
-    })
+    }
+
+  // dedup_incremental_bloom's filter over the base, built once per
+  // (JVM, dataset) — see the query's note
+  private val bloomMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, org.apache.spark.util.sketch.BloomFilter]()
 
   // dedup_semantic persists TWO artifacts the oracle replays from:
   // the single-nearest cluster assignment and the quantizer itself
   // (cell -> centroid), so the centroid-cosine ranking is computed by
   // DuckDB from the same doubles the Spark plan carries as a literal
-  private val semCellPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_sem_cells_default")
   private def semCellPath(d: String): String =
     Fixtures.tmpPath("graft_sem_cells", d)
-  private val semCentPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_sem_cents_default")
   private def semCentPath(d: String): String =
     Fixtures.tmpPath("graft_sem_cents", d)
 
-  // dedup_clusters_incremental's persisted base artifact: the base
-  // corpus's component labels, built ONCE per (JVM, dataset) — in
-  // production the label table is the dedup store's primary artifact,
-  // maintained across batches; the measured increment is batch
-  // signatures + band probe + the super-node merge, never base CC.
-  // Oracle handshake: the path is recorded so DuckDB replays the
-  // merge from the SAME labels.
-  private val ccBasePathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_ccbase_default")
-  // Bench-path base INDEX artifacts (band table + shingle table),
-  // built once per (JVM, dataset): production maintains them
-  // append-only beside the label table, so the measured increment is
-  // batch signatures + band probe + super-node merge — never base
-  // re-shingling. Verify keeps the inline derivation for its oracle
-  // handshake (same pattern as embcosBenchCells).
-  private val ccBenchIdx = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String)]()
-  private def ccBenchIdxFor(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, String) =
-    ccBenchIdx.computeIfAbsent(d, _ => {
-      val pb = Fixtures.tmpPath("graft_ccbase_bands", d)
-      val ps = Fixtures.tmpPath("graft_ccbase_sh", d)
-      val base = Tables.documents(s, d)
-        .filter(pmod(col("doc_id"), lit(3)) =!= 0)
-      Dedup.minhashBandIndex(base, "doc_id", "text",
-        k = 3, sigLen = 64, bands = 16).write.mode("overwrite").parquet(pb)
-      Dedup.withShingles(base, "doc_id", "text", 3)
-        .write.mode("overwrite").parquet(ps)
-      (pb, ps)
-    })
-  private val ccBaseMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ccBaseFor(s: org.apache.spark.sql.SparkSession, d: String): String =
-    ccBaseMemo.computeIfAbsent(d, _ => {
-      val p = Fixtures.tmpPath("graft_ccbase", d)
-      Dedup.corpusLabels(Tables.documents(s, d)
-          .filter(pmod(col("doc_id"), lit(3)) =!= 0), "doc_id", "text")
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+  // dedup_clusters_incremental's base artifacts, built once per (JVM,
+  // dataset): the base corpus's component labels — in production the
+  // dedup store's primary artifact, maintained across batches, and
+  // the table the oracle replays the merge from — plus the base band
+  // and shingle index kept append-only beside it. The measured
+  // increment is batch signatures + band probe + the super-node
+  // merge, never base CC or base re-shingling.
+  private def baseDocs(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.documents(s, d).filter(pmod(col("doc_id"), lit(3)) =!= 0)
+  private def ccBasePath(d: String): String =
+    Fixtures.tmpPath("graft_ccbase", d)
+  private def ccBaseFor(s: org.apache.spark.sql.SparkSession,
+      d: String): String =
+    Fixtures.writeOnce(ccBasePath(d))(p =>
+      Dedup.corpusLabels(baseDocs(s, d), "doc_id", "text")
+        .write.mode("overwrite").parquet(p))
+  private def ccIndexFor(s: org.apache.spark.sql.SparkSession,
+      d: String): (String, String) = (
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_ccindex_bands", d))(p =>
+      Dedup.minhashBandIndex(baseDocs(s, d), "doc_id", "text",
+        k = 3, sigLen = 64, bands = 16).write.mode("overwrite").parquet(p)),
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_ccindex_sh", d))(p =>
+      Dedup.withShingles(baseDocs(s, d), "doc_id", "text", 3)
+        .write.mode("overwrite").parquet(p)))
 
   // shared engine-stable cosine fragment — see QueryDef.cosSql
 
@@ -261,27 +205,11 @@ object DedupQueries {
     // anti-join — the scale path when the base is billions of hashes
     // and each batch is mostly novel. Bit-identical output (no false
     // negatives; the exact join resolves every maybe). ---
-    "dedup_incremental_bloom" -> QueryDef.sqlBench(
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        Dedup.incrementalKeepBloom(
-          Dedup.baseHashes(docs.filter(pmod(col("doc_id"), lit(3)) =!= 0), "text"),
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-          "doc_id", "text", expectedItems = 8192)
-          .orderBy("h")
-      },
-      """WITH base AS (
-        |  SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 3 <> 0
-        |), inc AS (
-        |  SELECT doc_id, md5(text) AS h FROM documents WHERE doc_id % 3 = 0
-        |)
-        |SELECT h, min(doc_id) AS doc_id FROM inc
-        |WHERE h NOT IN (SELECT h FROM base)
-        |GROUP BY h ORDER BY h""".stripMargin,
-      // bench path: the Bloom over the base is a maintenance-cycle
-      // artifact (rebuilt when the base compacts, not per batch) —
-      // memoized per (JVM, dataset), so the measured increment is the
-      // probe + anti-join sliver, the steady-state cost
+    "dedup_incremental_bloom" -> QueryDef.sql(
+      // the Bloom over the base is a maintenance-cycle artifact
+      // (rebuilt when the base compacts, not per batch) — memoized per
+      // (JVM, dataset), so the measured increment is the probe +
+      // anti-join sliver, the steady-state cost
       (s, d) => {
         val docs = Tables.documents(s, d)
         val base = Dedup.baseHashes(
@@ -291,7 +219,15 @@ object DedupQueries {
         Dedup.incrementalKeepWithBloom(bloom, base,
           docs.filter(pmod(col("doc_id"), lit(3)) === 0), "doc_id", "text")
           .orderBy("h")
-      }),
+      },
+      """WITH base AS (
+        |  SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 3 <> 0
+        |), inc AS (
+        |  SELECT doc_id, md5(text) AS h FROM documents WHERE doc_id % 3 = 0
+        |)
+        |SELECT h, min(doc_id) AS doc_id FROM inc
+        |WHERE h NOT IN (SELECT h FROM base)
+        |GROUP BY h ORDER BY h""".stripMargin),
 
     // --- keep-list materialization: drop the higher-id side of every
     // near-dup pair (first-wins policy, the standard LSH-dedup keep
@@ -436,27 +372,23 @@ object DedupQueries {
     // banding drift, a lost doc, or a wrong bound all hash-fail
     // (signature correctness itself is pinned by HashingSpec).
     // s·(s−1) is even, so `div 2` stays exact integer arithmetic. ---
-    "lsh_bucket_stats" -> QueryDef.sqlBench(
-      (s, d) => {
-        val p = Fixtures.tmpPath("graft_lsh_bands", d)
-        lshBandsPathRef.set(p)
-        Dedup.minhashBandIndex(Tables.documents(s, d), "doc_id", "text",
-            k = 3, sigLen = 64, bands = 16)
-          .write.mode("overwrite").parquet(p)
-        lshBucketStatsFrame(s, p)
-      },
-      s"""WITH b AS (
+    "lsh_bucket_stats" -> QueryDef.sqlAt(
+      (s, d) => s.read.parquet(lshBandsFor(s, d))
+        .groupBy("band", "key").agg(count(lit(1)).as("sz"))
+        .groupBy("band")
+        .agg(count(lit(1)).as("n_buckets"),
+          max("sz").as("max_size"),
+          sum(expr("sz * (sz - 1) div 2")).as("cand_pairs"))
+        // bounded result (one row per band) — see QueryDef.sortSmall
+        .transform(QueryDef.sortSmall(_, col("band"))),
+      d => s"""WITH b AS (
         |  SELECT band, key, count(*) AS sz
-        |  FROM read_parquet('${lshBandsPathRef.get}/*.parquet')
+        |  FROM read_parquet('${lshBandsPath(d)}/*.parquet')
         |  GROUP BY band, key
         |)
         |SELECT band, count(*) AS n_buckets, max(sz) AS max_size,
         |  CAST(sum(sz * (sz - 1) // 2) AS BIGINT) AS cand_pairs
-        |FROM b GROUP BY band ORDER BY band""".stripMargin,
-      // bench: the index is a maintained artifact (written once per
-      // JVM+dataset) — time the monitor's two partial-agg passes, not
-      // the index rebuild
-      (s, d) => lshBucketStatsFrame(s, lshBandsFor(s, d))),
+        |FROM b GROUP BY band ORDER BY band""".stripMargin),
 
     // --- per-doc n-gram novelty (the corpus-curation profiling
     // statistic behind "how much of this batch is genuinely new
@@ -609,24 +541,22 @@ object DedupQueries {
     // batch-touching pair set from the SAME persisted labels, so a
     // wrong projection, a lost relabel, or a recomputed base
     // hash-fails. ---
-    "dedup_clusters_incremental" -> QueryDef.sqlBench(
+    "dedup_clusters_incremental" -> QueryDef.sqlAt(
+      // ONE batch signature pass, shared between the within-batch
+      // self-join and the base-index probe
       (s, d) => {
-        val p = ccBaseFor(s, d)
-        ccBasePathRef.set(p)
-        val docs = Tables.documents(s, d)
-        val base = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-        val batch = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-        val baseLabels = s.read.parquet(p).select("doc_id", "cluster")
-        val bb = Dedup.minhashLshPairs(batch, "doc_id", "text",
-          k = 3, sigLen = 64, bands = 16, minJ = 0.8).select("doc_a", "doc_b")
-        val nb = Dedup.minhashIncrementalPairs(base, batch, "doc_id", "text",
-            k = 3, sigLen = 64, bands = 16, minJ = 0.8)
-          .select(col("doc_n").as("doc_a"), col("doc_b"))
-        Dedup.clustersIncremental(baseLabels, batch.select("doc_id"),
-            bb.union(nb))
+        val (pb, ps) = ccIndexFor(s, d)
+        val batch = Tables.documents(s, d)
+          .filter(pmod(col("doc_id"), lit(3)) === 0)
+        val baseLabels = s.read.parquet(ccBaseFor(s, d))
+          .select("doc_id", "cluster")
+        val edges = Dedup.minhashIncrementalEdgesFromIndex(
+          s.read.parquet(pb), s.read.parquet(ps), batch, "doc_id", "text",
+          k = 3, sigLen = 64, bands = 16, minJ = 0.8)
+        Dedup.clustersIncremental(baseLabels, batch.select("doc_id"), edges)
           .orderBy("doc_id")
       },
-      shingleCte.replaceFirst("WITH ws", "WITH RECURSIVE ws") +
+      d => shingleCte.replaceFirst("WITH ws", "WITH RECURSIVE ws") +
         s"""
         |, np AS (
         |  SELECT a.doc_id AS a, b.doc_id AS b
@@ -637,7 +567,7 @@ object DedupQueries {
         |  GROUP BY a.doc_id, b.doc_id, sa.n, sb.n
         |  HAVING floor((count(*)::DOUBLE / (sa.n + sb.n - count(*)))*1000000 + 0.5)/1000000 >= 0.8
         |), bl AS (
-        |  SELECT doc_id, cluster FROM read_parquet('${ccBasePathRef.get}/*.parquet')
+        |  SELECT doc_id, cluster FROM read_parquet('${ccBasePath(d)}/*.parquet')
         |), edges AS (
         |  SELECT a, b FROM np UNION ALL SELECT b, a FROM np
         |  UNION ALL SELECT doc_id AS a, cluster AS b FROM bl WHERE doc_id <> cluster
@@ -648,26 +578,7 @@ object DedupQueries {
         |  SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.id
         |)
         |SELECT id AS doc_id, min(lbl) AS cluster
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-      // bench: steady-state increment against the PERSISTED base
-      // index (band + shingle tables, built once per dataset like any
-      // maintained dedup-store artifact) — measures ONE batch
-      // signature pass (shared between the within-batch self-join and
-      // the base-index probe — the r9 form shingled+signed the batch
-      // twice), band probe, and the super-node merge; never base
-      // re-shingling
-      (s, d) => {
-        val p = ccBaseFor(s, d)
-        val (pb, ps) = ccBenchIdxFor(s, d)
-        val docs = Tables.documents(s, d)
-        val batch = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-        val baseLabels = s.read.parquet(p).select("doc_id", "cluster")
-        val edges = Dedup.minhashIncrementalEdgesFromIndex(
-          s.read.parquet(pb), s.read.parquet(ps), batch, "doc_id", "text",
-          k = 3, sigLen = 64, bands = 16, minJ = 0.8)
-        Dedup.clustersIncremental(baseLabels, batch.select("doc_id"), edges)
-          .orderBy("doc_id")
-      }),
+        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin),
 
     // --- 64-bit SimHash, 4×16-bit band join, Hamming <= 3 — oracled
     // via the signature-persist protocol: the build writes the per-doc
@@ -679,18 +590,17 @@ object DedupQueries {
     // band explode, equi-join, Hamming filter placement, distinct —
     // is hash-gated; arithmetic-shift band keys match because
     // (sim >> s) & 0xFFFF is sign-extension-invariant. ---
-    "dedup_simhash" -> QueryDef.sql(
+    "dedup_simhash" -> QueryDef.sqlAt(
       (s, d) => {
         val p = simhashSigPath(d)
-        simhashSigPathRef.set(p)
         val sigs = Dedup.simhashSigs(Tables.documents(s, d), "doc_id", "text")
         sigs.write.mode("overwrite").parquet(p)
         Dedup.simhashPairsFromSigs(s.read.parquet(p),
             "doc_id", maxHamming = 3)
           .orderBy("doc_a", "doc_b")
       },
-      s"""WITH sigs AS (
-         |  SELECT doc_id, sim FROM read_parquet('${simhashSigPathRef.get}/*.parquet')
+      d => s"""WITH sigs AS (
+         |  SELECT doc_id, sim FROM read_parquet('${simhashSigPath(d)}/*.parquet')
          |), e AS (
          |  SELECT doc_id, sim, band, (sim >> (band * 16)) & 65535 AS key
          |  FROM sigs CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) b
@@ -722,25 +632,16 @@ object DedupQueries {
     // DECLARED candidate set, so the change re-declares the query and
     // its oracle: first item for the next build round, out of scope
     // for an optimization round. ---
-    "dedup_embcos" -> QueryDef.sqlBench(
+    "dedup_embcos" -> QueryDef.sqlAt(
       // sortBarrier: the candidate join broadcasts at test scale (no
       // shuffle files) — the ORDER BY's sampling would re-run every
       // pairwise dot product without the barrier
-      (s, d) => {
-        val p = embcosCellPath(d)
-        embcosCellPathRef.set(p)
-        val embs = Tables.embeddings(s, d)
-        val (_, centers) = graft.ann.Ivf.build(
-          embs, "vec_id", "embedding", nCells = 8)
-        Dedup.cellAssignments(embs, "vec_id", "embedding", centers, nProbe = 3)
-          .write.mode("overwrite").parquet(p)
-        QueryDef.sortBarrier(
-          Dedup.embCosPairsFromCells(s.read.parquet(p), embs,
-            "vec_id", "embedding", minCos = 0.4))
-          .orderBy("id_a", "id_b")
-      },
-      s"""WITH asg AS (
-         |  SELECT vec_id, cell FROM read_parquet('${embcosCellPathRef.get}/*.parquet')
+      (s, d) => QueryDef.sortBarrier(
+          Dedup.embCosPairsFromCells(s.read.parquet(embcosCellsFor(s, d)),
+            Tables.embeddings(s, d), "vec_id", "embedding", minCos = 0.4))
+        .orderBy("id_a", "id_b"),
+      d => s"""WITH asg AS (
+         |  SELECT vec_id, cell FROM read_parquet('${embcosCellPath(d)}/*.parquet')
          |), cand AS (
          |  SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
          |  FROM asg x JOIN asg y ON x.cell = y.cell AND x.vec_id < y.vec_id
@@ -751,19 +652,7 @@ object DedupQueries {
          |  JOIN embeddings a ON a.vec_id = c.id_a
          |  JOIN embeddings b ON b.vec_id = c.id_b)
          |SELECT id_a, id_b, cos FROM p WHERE cos >= 0.4
-         |ORDER BY id_a, id_b""".stripMargin,
-      // bench path: the measured work is the near-dup OPERATOR
-      // (candidate equi-join on cell + cosine verify + distinct), fed
-      // from the memoized persisted index — not the quantizer train +
-      // assignment parquet write the Verify build performs for its
-      // signature-persist oracle
-      (s, d) => {
-        val p = embcosBenchCellsFor(s, d)
-        QueryDef.sortBarrier(
-          Dedup.embCosPairsFromCells(s.read.parquet(p),
-            Tables.embeddings(s, d), "vec_id", "embedding", minCos = 0.4))
-          .orderBy("id_a", "id_b")
-      }),
+         |ORDER BY id_a, id_b""".stripMargin),
 
     // --- SemDeDup pruning (arXiv:2303.09540): k-means cells +
     // within-cell dominance drop — the KEEP/DROP decision operator on
@@ -773,12 +662,10 @@ object DedupQueries {
     // the surviving set from those tables — the whole distributed
     // half (assignment pass, cell self-join, rank filter placement,
     // anti-join) is hash-gated. ---
-    "dedup_semantic" -> QueryDef.sql(
+    "dedup_semantic" -> QueryDef.sqlAt(
       (s, d) => {
         val p = semCellPath(d)
         val pc = semCentPath(d)
-        semCellPathRef.set(p)
-        semCentPathRef.set(pc)
         val embs = Tables.embeddings(s, d)
         val (indexed, centers) = graft.ann.Ivf.build(
           embs, "vec_id", "embedding", nCells = 8)
@@ -794,10 +681,10 @@ object DedupQueries {
             centers, minCos = 0.4)
           .orderBy("vec_id")
       },
-      s"""WITH asg AS (
-         |  SELECT vec_id, cell FROM read_parquet('${semCellPathRef.get}/*.parquet')
+      d => s"""WITH asg AS (
+         |  SELECT vec_id, cell FROM read_parquet('${semCellPath(d)}/*.parquet')
          |), cents AS (
-         |  SELECT cell, centroid FROM read_parquet('${semCentPathRef.get}/*.parquet')
+         |  SELECT cell, centroid FROM read_parquet('${semCentPath(d)}/*.parquet')
          |), v AS (
          |  SELECT a.vec_id, a.cell,
          |    floor((

@@ -14,13 +14,12 @@ import graft.sources.fits.FitsWriter
   */
 object FitsQueries {
 
-  private val fileCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ordersFits(s: org.apache.spark.sql.SparkSession, d: String): String =
-    fileCache.computeIfAbsent(d, _ => writeOrdersFits(s, d))
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_fits_orders", d) + ".fits")(p =>
+      writeOrdersFits(s, d, p))
 
-  private def writeOrdersFits(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val path = Fixtures.tmpPath("graft_fits_orders", d) + ".fits"
+  private def writeOrdersFits(s: org.apache.spark.sql.SparkSession, d: String,
+      path: String): Unit = {
     val rows = Tables.orders(s, d)
       .select("o_orderkey", "o_custkey", "o_totalprice")
       .orderBy("o_orderkey")
@@ -30,7 +29,6 @@ object FitsQueries {
       FitsWriter.K("CustKey", rows.map(_.getLong(1))),
       FitsWriter.D("TotalPrice", rows.map(_.getDouble(2)))),
       primaryCards = Seq("ORIGIN" -> "'graft'"))
-    path
   }
 
   def defs: Map[String, QueryDef] = Map(

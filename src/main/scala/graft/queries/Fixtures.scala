@@ -9,10 +9,11 @@ package graft.queries
   * overwrite a fixture another process was mid-reading (observed:
   * UNABLE_TO_INFER_SCHEMA when a second Verify's overwrite emptied
   * the sorted-lineitem copy under a concurrent scan). Pid isolation
-  * makes every fixture single-writer by construction; the oracle
-  * handshake paths stay correct because each process interpolates its
-  * OWN recorded path into its oracle SQL, and the files outlive the
-  * process for the baseline replay.
+  * makes every fixture single-writer by construction. Within a
+  * process a fixture's path is a pure function of its prefix and the
+  * dataset dir, so an oracle computes the path its build wrote from
+  * the dataset alone; the files outlive the process for the baseline
+  * replay.
   */
 object Fixtures {
   private val pid = ProcessHandle.current().pid()
@@ -58,4 +59,15 @@ object Fixtures {
     sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/" + prefix +
       "_" + pid + "_" + Integer.toHexString(datasetDir.hashCode)
   }
+
+  private val written = scala.collection.mutable.Set.empty[String]
+
+  /** The per-(JVM, dataset) artifact at `p`: runs `write(p)` the first
+    * time `p` is asked for in this process, then returns `p`.
+    * Reentrant, so one artifact may be built from another. */
+  def writeOnce(p: String)(write: String => Unit): String =
+    written.synchronized {
+      if (!written(p)) { write(p); written += p }
+      p
+    }
 }

@@ -37,15 +37,13 @@ object Hdf5Queries {
     * bench passes and all queries sharing the fixture reuse the first
     * write — in production the snapshot pre-exists on disk; the
     * measured operator is the DataSource V2 READ. */
-  private val snapCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ordersSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    snapCache.computeIfAbsent(d, _ => writeOrdersSnapshot(s, d))
-
-  private val partCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_h5_orders", d))(p =>
+      writeOrdersSnapshot(s, d, new File(p)))
 
   private def particleSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    partCache.computeIfAbsent(d, _ => writeParticleSnapshot(s, d))
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_h5_part", d))(p =>
+      writeParticleSnapshot(s, d, new File(p)))
 
   /** Contiguous 0..N-1 row index in o_orderkey order via the scalable
     * PrefixSum (bucketed range partitioning + per-bucket cumsum — no
@@ -61,8 +59,8 @@ object Hdf5Queries {
     * dataset, exactly how TNG/Illustris snapshots ship. Field values
     * derive from orders columns so the DuckDB oracle can replay them.
     * Written by the DISTRIBUTED chunked writer (Hdf5Save). */
-  private def writeParticleSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = new File(Fixtures.tmpPath("graft_h5_part", d))
+  private def writeParticleSnapshot(s: org.apache.spark.sql.SparkSession, d: String,
+      dir: File): Unit = {
     val df = indexedOrders(s, d).select(col("__row"),
       col("o_orderkey").as("OrderKey"),
       col("o_totalprice").as("Coordinates"),
@@ -85,13 +83,11 @@ object Hdf5Queries {
         "UnitLength_in_cm" -> FixtureUnitLength,
         "UnitMass_in_g" -> FixtureUnitMass,
         "UnitVelocity_in_cm_per_s" -> FixtureUnitVelocity))
-    dir.getPath
   }
 
-  private val mtngCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def mtngSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    mtngCache.computeIfAbsent(d, _ => writeMtngSnapshot(s, d))
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_h5_mtng", d))(p =>
+      writeMtngSnapshot(s, d, new File(p)))
 
   /** An MTNG-shaped snapshot dir (customs/arepo/MTNG/dataset.py):
     * the REGULAR chunk set (`snapshot_042.K.hdf5`, DM particles, no
@@ -101,8 +97,8 @@ object Hdf5Queries {
     * it). The regular set goes through the distributed writer; the
     * companion is a tiny driver-written chunk (written AFTER — the
     * distributed writer's publish step clears the dir's .hdf5 files). */
-  private def writeMtngSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = new File(Fixtures.tmpPath("graft_h5_mtng", d))
+  private def writeMtngSnapshot(s: org.apache.spark.sql.SparkSession, d: String,
+      dir: File): Unit = {
     val df = indexedOrders(s, d).select(col("__row"),
       col("o_orderkey").as("OrderKey"),
       col("o_totalprice").as("Coordinates"),
@@ -125,20 +121,18 @@ object Hdf5Queries {
         "PartType1" -> Hdf5Writer.Group(children = Seq(
           "MostBoundID" -> Hdf5Writer.I64(Array(1L, 2L, 3L, 4L)),
           "Coordinates" -> Hdf5Writer.F64(Array(0.25, 0.5, 0.75, 1.0)))))))
-    dir.getPath
   }
 
-  private val aurigaCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def aurigaSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    aurigaCache.computeIfAbsent(d, _ => writeAurigaSnapshot(s, d))
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_h5_auriga", d))(p =>
+      writeAurigaSnapshot(s, d, new File(p)))
 
   /** An Auriga-shaped snapshot: gadget/arepo markers and a
     * cosmological header, identified as Auriga by PATH NAME ALONE
     * (simulations.yaml:115 "can only rely on path" — the dir name
     * carries "auriga"), no unit attrs anywhere. */
-  private def writeAurigaSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = new File(Fixtures.tmpPath("graft_h5_auriga", d))
+  private def writeAurigaSnapshot(s: org.apache.spark.sql.SparkSession, d: String,
+      dir: File): Unit = {
     val df = indexedOrders(s, d).select(col("__row"),
       col("o_orderkey").as("OrderKey"),
       col("o_totalprice").as("Coordinates"),
@@ -150,13 +144,11 @@ object Hdf5Queries {
         "Time" -> (1.0 / (1.0 + FixtureRedshift)),
         "Redshift" -> FixtureRedshift, "HubbleParam" -> FixtureHubble,
         "Git_commit" -> "0badc0de"))
-    dir.getPath
   }
 
-  private val lgalCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def lgalaxiesCatalog(s: org.apache.spark.sql.SparkSession, d: String): String =
-    lgalCache.computeIfAbsent(d, _ => writeLgalaxiesCatalog(s, d))
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_h5_lgal", d))(p =>
+      writeLgalaxiesCatalog(s, d, new File(p)))
 
   /** The fixed-h LGalaxies hubble factor (lgalaxies.yaml `units: h:
     * 0.673` — the Millennium value, pinned in the UNIT FILE because
@@ -169,8 +161,8 @@ object Hdf5Queries {
   /** An L-Galaxies catalog: one `Galaxy` table, identified by the
     * Header `Simulation` banner (simulations.yaml:159), units from
     * the lgalaxies flavor's fixed-h macro system. */
-  private def writeLgalaxiesCatalog(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = new File(Fixtures.tmpPath("graft_h5_lgal", d))
+  private def writeLgalaxiesCatalog(s: org.apache.spark.sql.SparkSession, d: String,
+      dir: File): Unit = {
     val df = indexedOrders(s, d).select(col("__row"),
       col("o_orderkey").as("OrderKey"),
       col("o_totalprice").as("Pos"),
@@ -183,13 +175,11 @@ object Hdf5Queries {
         "Simulation" -> "L-Galaxies run on the Millennium Simulation",
         "Time" -> (1.0 / (1.0 + FixtureRedshift)),
         "Redshift" -> FixtureRedshift, "HubbleParam" -> FixtureHubble))
-    dir.getPath
   }
 
-  private val catSnapCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def catalogSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    catSnapCache.computeIfAbsent(d, _ => writeCatalogSnapshot(s, d))
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_h5cat", d))(p =>
+      writeCatalogSnapshot(s, d, new File(p))) + "/snapdir_042"
 
   /** A TNG-layout snapshot+catalog PAIR: `snapdir_042/snap_042.K.hdf5`
     * (orders as particles, distributed writer) beside
@@ -200,10 +190,9 @@ object Hdf5Queries {
     * (customs/arepo/dataset.py:264-271: `snapdir`→`groups`). The
     * catalog is DIMENSION-scale (one row per customer), so the
     * driver-side fixture writer is the right tool; the snapshot side
-    * stays on the executor-parallel Hdf5Save. Returns the snapshot
-    * dir. */
-  private def writeCatalogSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val base = new File(Fixtures.tmpPath("graft_h5cat", d))
+    * stays on the executor-parallel Hdf5Save. */
+  private def writeCatalogSnapshot(s: org.apache.spark.sql.SparkSession, d: String,
+      base: File): Unit = {
     val snapDir = new File(base, "snapdir_042")
     val df = indexedOrders(s, d).select(col("__row"),
       col("o_orderkey").as("OrderKey"),
@@ -240,15 +229,14 @@ object Hdf5Queries {
           "SubhaloGrNr" -> Hdf5Writer.I64(subRows.map(_.getLong(0))),
           "SubhaloPrio" -> Hdf5Writer.I64(subRows.map(_.getLong(1))),
           "SubhaloLen" -> Hdf5Writer.I64(subRows.map(_.getLong(2))))))))
-    snapDir.getPath
   }
 
   /** Write orders as a chunked Gadget-shaped HDF5 snapshot via the
-    * distributed writer; returns the snapshot directory.
+    * distributed writer into `dir`.
     * Deterministic: rows indexed in o_orderkey order, fixed chunking,
     * fixed header attrs. */
-  private def writeOrdersSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = new File(Fixtures.tmpPath("graft_h5_orders", d))
+  private def writeOrdersSnapshot(s: org.apache.spark.sql.SparkSession, d: String,
+      dir: File): Unit = {
     val df = indexedOrders(s, d).select(col("__row"),
       col("o_orderkey").as("OrderKey"),
       col("o_custkey").as("CustKey"),
@@ -258,7 +246,6 @@ object Hdf5Queries {
       headerAttrs = Seq(
         "Time" -> (1.0 / (1.0 + FixtureRedshift)),
         "Redshift" -> FixtureRedshift, "HubbleParam" -> FixtureHubble))
-    dir.getPath
   }
 
   def defs: Map[String, QueryDef] = Map(

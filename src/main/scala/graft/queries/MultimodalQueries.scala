@@ -50,36 +50,24 @@ object MultimodalQueries {
     // whole distributed encode→decode loop (real codec both ways)
     // must be faithful for the hash to match. No driver-side data
     // motion anywhere: generation and decode are both mapPartitions. ---
-    "multimodal_decode" -> QueryDef.sqlBench(
-      (s, d) => {
-        val imgs = synthImages(s, d)
-        // orderBy = range exchange, whose boundary-sampling job
-        // re-executes the child; this child is MAP-ONLY (scan →
-        // encode → decode — no shuffle files to reuse), so without a
-        // materialization barrier every PNG is encoded and decoded
-        // TWICE. The decoded meta frame is tiny (4 scalars/doc) —
-        // cache it and let both the sample and the sort read the
-        // cache. CacheScope releases it at query end.
-        QueryDef.sortBarrier(
-          BinaryMeta.decodeImageMeta(imgs, "doc_id", "payload")
-            .toDF()
-            .select(col("id"), col("width"), col("height"), col("format")))
-          .orderBy("id")
-      },
-      """SELECT doc_id AS id,
-        |  CAST(doc_id % 31 + 1 AS INT) AS width,
-        |  CAST(doc_id % 17 + 1 AS INT) AS height,
-        |  'png' AS format
-        |FROM documents ORDER BY id""".stripMargin,
-      // bench path: production images EXIST at rest — the measured
-      // operator is the parquet blob scan + real pixel decode, not
-      // the fixture's synthesis pass (memoized one-time write)
+    "multimodal_decode" -> QueryDef.sql(
+      // orderBy = range exchange, whose boundary-sampling job
+      // re-executes the child; this child is MAP-ONLY (scan → decode
+      // — no shuffle files to reuse), so without a materialization
+      // barrier every PNG is decoded TWICE. The decoded meta frame is
+      // tiny (4 scalars/doc) — cache it and let both the sample and
+      // the sort read the cache. CacheScope releases it at query end.
       (s, d) => QueryDef.sortBarrier(
         BinaryMeta.decodeImageMeta(s.read.parquet(imgBlobsFor(s, d)),
           "doc_id", "payload")
           .toDF()
           .select(col("id"), col("width"), col("height"), col("format")))
-        .orderBy("id")),
+        .orderBy("id"),
+      """SELECT doc_id AS id,
+        |  CAST(doc_id % 31 + 1 AS INT) AS width,
+        |  CAST(doc_id % 17 + 1 AS INT) AS height,
+        |  'png' AS format
+        |FROM documents ORDER BY id""".stripMargin),
 
     // --- REAL audio decode under the oracle gate, same shape as
     // multimodal_decode: executors synthesize a PCM WAV per document
@@ -88,19 +76,16 @@ object MultimodalQueries {
     // and DuckDB predicts every field arithmetically. duration is an
     // exact-integer double division, so it is bit-identical across
     // engines. ---
-    "multimodal_audio" -> QueryDef.sqlBench(
-      (s, d) => {
-        val wavs = synthWavs(s, d)
-        // same map-only-child barrier as multimodal_decode: without
-        // it the orderBy's sampling job synthesizes+parses every WAV
-        // a second time
-        QueryDef.sortBarrier(
-          BinaryMeta.decodeAudioMeta(wavs, "doc_id", "payload")
-            .toDF()
-            .select(col("id"), col("sample_rate").cast("int").as("sample_rate"),
-              col("channels"), col("bits"), col("n_frames"), col("duration_s")))
-          .orderBy("id")
-      },
+    "multimodal_audio" -> QueryDef.sql(
+      // same map-only-child barrier as multimodal_decode: without it
+      // the orderBy's sampling job parses every WAV a second time
+      (s, d) => QueryDef.sortBarrier(
+        BinaryMeta.decodeAudioMeta(s.read.parquet(wavBlobsFor(s, d)),
+          "doc_id", "payload")
+          .toDF()
+          .select(col("id"), col("sample_rate").cast("int").as("sample_rate"),
+            col("channels"), col("bits"), col("n_frames"), col("duration_s")))
+        .orderBy("id"),
       """SELECT doc_id AS id,
         |  CAST(8000 * (1 + doc_id % 3) AS INT) AS sample_rate,
         |  CAST(1 + doc_id % 2 AS INT) AS channels,
@@ -108,16 +93,7 @@ object MultimodalQueries {
         |  CAST(1600 + (doc_id % 7) * 800 AS BIGINT) AS n_frames,
         |  CAST(1600 + (doc_id % 7) * 800 AS DOUBLE)
         |    / (8000 * (1 + doc_id % 3)) AS duration_s
-        |FROM documents ORDER BY id""".stripMargin,
-      // bench path: blobs at rest, measured operator = scan + RIFF
-      // header parse (see multimodal_decode's bench note)
-      (s, d) => QueryDef.sortBarrier(
-        BinaryMeta.decodeAudioMeta(s.read.parquet(wavBlobsFor(s, d)),
-          "doc_id", "payload")
-          .toDF()
-          .select(col("id"), col("sample_rate").cast("int").as("sample_rate"),
-            col("channels"), col("bits"), col("n_frames"), col("duration_s")))
-        .orderBy("id")),
+        |FROM documents ORDER BY id""".stripMargin),
 
     // --- image-level dedup via 64-bit perceptual hash (the visual
     // dedup step a multimodal pipeline runs before training): REAL
@@ -130,15 +106,12 @@ object MultimodalQueries {
     // within a class, or a lost blob all hash-fail. Near-dup
     // tolerance (the property hash-equality can't gate) is pinned in
     // ImageDecodeSpec. ---
-    "dedup_phash" -> QueryDef.sqlBench(
-      (s, d) => phashGroups(synthClassImages(s, d)),
+    "dedup_phash" -> QueryDef.sql(
+      (s, d) => phashGroups(s.read.parquet(clsBlobsFor(s, d))),
       """SELECT doc_id,
         |  min(doc_id) OVER (PARTITION BY doc_id % 16) AS keep_doc,
         |  count(*) OVER (PARTITION BY doc_id % 16) AS n_dups
-        |FROM documents ORDER BY doc_id""".stripMargin,
-      // bench: blobs at rest — measured operator = scan + decode +
-      // DCT + group, not the fixture synthesis (memoized write)
-      (s, d) => phashGroups(s.read.parquet(clsBlobsFor(s, d)))),
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // --- audio-level dedup via 64-bit acoustic fingerprint (the
     // audio sibling of dedup_phash, completing multimodal dedup):
@@ -150,13 +123,12 @@ object MultimodalQueries {
     // oracle PREDICTS the grouping arithmetically: a fingerprint
     // collision across classes, a split within one, or a dropped
     // blob all hash-fail. ---
-    "dedup_audiofp" -> QueryDef.sqlBench(
-      (s, d) => afpGroups(synthClassWavs(s, d)),
+    "dedup_audiofp" -> QueryDef.sql(
+      (s, d) => afpGroups(s.read.parquet(clsWavBlobsFor(s, d))),
       """SELECT doc_id,
         |  min(doc_id) OVER (PARTITION BY doc_id % 12) AS keep_doc,
         |  count(*) OVER (PARTITION BY doc_id % 12) AS n_dups
-        |FROM documents ORDER BY doc_id""".stripMargin,
-      (s, d) => afpGroups(s.read.parquet(clsWavBlobsFor(s, d))))
+        |FROM documents ORDER BY doc_id""".stripMargin)
   )
 
   /** Executor-parallel CLASS-pattern PNG synthesis for dedup_phash:
@@ -197,13 +169,9 @@ object MultimodalQueries {
       }.toDF("doc_id", "payload")
   }
 
-  private val clsBlobCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def clsBlobsFor(s: org.apache.spark.sql.SparkSession, d: String): String =
-    clsBlobCache.computeIfAbsent(d, _ => {
-      val p = Fixtures.tmpPath("graft_mm_cls_png", d)
-      synthClassImages(s, d).write.mode("overwrite").parquet(p)
-      p
-    })
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_mm_cls_png", d))(p =>
+      synthClassImages(s, d).write.mode("overwrite").parquet(p))
 
   /** pHash grouping over an image frame: hash map-side (the real
     * decode+DCT), group stats on the 8-byte hash key, broadcast-join
@@ -272,13 +240,9 @@ object MultimodalQueries {
       }.toDF("doc_id", "payload")
   }
 
-  private val clsWavBlobCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def clsWavBlobsFor(s: org.apache.spark.sql.SparkSession, d: String): String =
-    clsWavBlobCache.computeIfAbsent(d, _ => {
-      val p = Fixtures.tmpPath("graft_mm_cls_wav", d)
-      synthClassWavs(s, d).write.mode("overwrite").parquet(p)
-      p
-    })
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_mm_cls_wav", d))(p =>
+      synthClassWavs(s, d).write.mode("overwrite").parquet(p))
 
   /** Executor-parallel PNG synthesis (fixture generation — dims and
     * pixels pure functions of doc_id so the oracle can predict). */
@@ -349,24 +313,16 @@ object MultimodalQueries {
       }.toDF("doc_id", "payload")
   }
 
-  // Bench-path blob fixtures, written ONCE per (JVM, dataset): at
-  // rest a multimodal corpus IS parquet binary columns — the Verify
-  // path keeps synthesis inside the gate (encode must be faithful for
-  // the decode hash to match), the bench path measures the operator a
-  // production pipeline actually runs: scan + decode.
-  private val imgBlobCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // Blob fixtures, written ONCE per (JVM, dataset): at rest a
+  // multimodal corpus IS parquet binary columns, so the builds measure
+  // the operator a production pipeline runs — scan + decode. Encode
+  // stays gated: the fixture's encode must be faithful for the decode
+  // hash to match the oracle's prediction.
   private def imgBlobsFor(s: org.apache.spark.sql.SparkSession, d: String): String =
-    imgBlobCache.computeIfAbsent(d, _ => {
-      val p = Fixtures.tmpPath("graft_mm_png", d)
-      synthImages(s, d).write.mode("overwrite").parquet(p)
-      p
-    })
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_mm_png", d))(p =>
+      synthImages(s, d).write.mode("overwrite").parquet(p))
 
-  private val wavBlobCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def wavBlobsFor(s: org.apache.spark.sql.SparkSession, d: String): String =
-    wavBlobCache.computeIfAbsent(d, _ => {
-      val p = Fixtures.tmpPath("graft_mm_wav", d)
-      synthWavs(s, d).write.mode("overwrite").parquet(p)
-      p
-    })
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_mm_wav", d))(p =>
+      synthWavs(s, d).write.mode("overwrite").parquet(p))
 }

@@ -7,28 +7,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * driver hash-compares against. Column names/aliases MUST match the
   * Spark output exactly; double aggregates are rounded identically on
   * both sides; every query carries a deterministic ORDER BY.
+  *
+  * ONE build per query: Bench times `build`, and Verify checks the
+  * same frame — through `gate` where the oracle is a verdict (the
+  * sketch bound checks, the ANN recall checks): the gate receives the
+  * built frame and derives the verdict from it, so it can never check
+  * a different path than the one timed.
   */
 final case class QueryDef(
     build: (SparkSession, String) => DataFrame,
-    // by-name thunk, resolved at READ time: some oracles interpolate
-    // state the build records (dedup_simhash's signature-table path),
-    // so a consumer that snapshots oracle strings before running the
-    // builds must still see the post-build value — eager strings froze
-    // the defs-construction-time default instead
-    oracleThunk: Option[() => String] = None,
-    // optional bench-only build: gate-oracled queries compute an exact
-    // verdict alongside the operator for Verify; Bench times the
-    // operator ALONE via this override (sketch family)
-    benchBuild: Option[(SparkSession, String) => DataFrame] = None) {
-  def oracle: Option[String] = oracleThunk.map(_())
-}
+    // oracle SQL for a dataset dir: an artifact-backed query (a
+    // signature table, a quantizer) names its artifact's path, a pure
+    // function of the query and the dataset (Fixtures.tmpPath) — the
+    // same path its build writes in this process
+    oracle: Option[String => String] = None,
+    gate: Option[(SparkSession, String, DataFrame) => DataFrame] = None)
 
 object QueryDef {
   def sql(b: (SparkSession, String) => DataFrame, o: => String): QueryDef =
-    QueryDef(b, Some(() => o))
-  def sqlBench(b: (SparkSession, String) => DataFrame, o: => String,
-      bench: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(b, Some(() => o), Some(bench))
+    QueryDef(b, Some(_ => o))
+  /** An oracle that replays from the dataset's artifacts. */
+  def sqlAt(b: (SparkSession, String) => DataFrame,
+      o: String => String): QueryDef =
+    QueryDef(b, Some(o))
+  /** A verdict oracle: Verify checks `g` applied to the built frame. */
+  def gated(b: (SparkSession, String) => DataFrame, o: => String,
+      g: (SparkSession, String, DataFrame) => DataFrame): QueryDef =
+    QueryDef(b, Some(_ => o), Some(g))
   def rowsOnly(b: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(b, None)
 

@@ -542,19 +542,19 @@ object RelationalQueries {
     // is a deterministic verdict — the query emits exact distincts +
     // the two verdicts, the oracle answers from exact SQL, and any
     // HLL regression (wrong lgK, broken merge, truncation) hash-fails.
-    // The exact side runs as its own aggregate cross-joined in, so
-    // the sketch plan shape stays pristine.
-    // Bench override (sqlBench): the gate build computes the EXACT
-    // distinct beside the sketch, so timing it times both; the bench
-    // build is the sketch aggregation alone — the operator a user
-    // actually runs at 100 TB.
-    "sketch_distinct" -> QueryDef.sqlBench(
-      (s, d) => {
-        val li = Tables.lineitem(s, d)
-        val est = li.agg(
-          hll_sketch_estimate(hll_sketch_agg(col("l_partkey"), lit(14))).as("est_p"),
-          hll_sketch_estimate(hll_sketch_agg(col("l_suppkey"), lit(14))).as("est_s"))
-        val exact = li.agg(
+    // The build is the sketch aggregation alone — the operator a user
+    // actually runs at 100 TB; the gate computes the EXACT distinct as
+    // its own aggregate, cross-joined onto the built estimates.
+    "sketch_distinct" -> QueryDef.gated(
+      (s, d) => Tables.lineitem(s, d).agg(
+        hll_sketch_estimate(hll_sketch_agg(col("l_partkey"), lit(14))).as("est_p"),
+        hll_sketch_estimate(hll_sketch_agg(col("l_suppkey"), lit(14))).as("est_s")),
+      """SELECT count(DISTINCT l_partkey) AS n_parts,
+        |  count(DISTINCT l_suppkey) AS n_supps,
+        |  TRUE AS parts_ok, TRUE AS supps_ok
+        |FROM lineitem""".stripMargin,
+      (s, d, est) => {
+        val exact = Tables.lineitem(s, d).agg(
           countDistinct(col("l_partkey")).as("n_parts"),
           countDistinct(col("l_suppkey")).as("n_supps"))
         est.crossJoin(exact).select(col("n_parts"), col("n_supps"),
@@ -562,33 +562,30 @@ object RelationalQueries {
             .as("parts_ok"),
           (abs(col("est_s").cast("double") / col("n_supps") - 1.0) <= 0.05)
             .as("supps_ok"))
-      },
-      """SELECT count(DISTINCT l_partkey) AS n_parts,
-        |  count(DISTINCT l_suppkey) AS n_supps,
-        |  TRUE AS parts_ok, TRUE AS supps_ok
-        |FROM lineitem""".stripMargin,
-      (s, d) => Tables.lineitem(s, d).agg(
-        hll_sketch_estimate(hll_sketch_agg(col("l_partkey"), lit(14))).as("est_p"),
-        hll_sketch_estimate(hll_sketch_agg(col("l_suppkey"), lit(14))).as("est_s"))),
+      }),
     // sketch MERGEABILITY — the reason sketches win at 100 TB: build
     // one HLL per group (per day / per partition / per shard in
     // production), persist those tiny binaries, and answer the global
     // question later by UNIONING them — no re-scan of the raw data.
     // Estimates are exact-algebra on the sketch state, so
     // union-of-groups equals the single-pass sketch.
-    // Bound-check oracled: per-group sketches union to the global
-    // estimate; the verdicts pin union == single-pass (exact algebra
-    // on sketch state) and union within 5% of the exact distinct.
-    "sketch_union" -> QueryDef.sqlBench(
-      (s, d) => {
-        val li = Tables.lineitem(s, d)
-        val unioned = li.groupBy("l_returnflag")
-          .agg(hll_sketch_agg(col("l_partkey"), lit(14)).as("sk"))
-          .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est_union"),
-            count(lit(1)).as("n_groups"))
-        val single = li.agg(
+    // Bound-check oracled: the build is the per-group sketches +
+    // union alone (the mergeability pattern itself); the gate's
+    // verdicts pin union == single-pass (exact algebra on sketch
+    // state) and union within 5% of the exact distinct.
+    "sketch_union" -> QueryDef.gated(
+      (s, d) => Tables.lineitem(s, d).groupBy("l_returnflag")
+        .agg(hll_sketch_agg(col("l_partkey"), lit(14)).as("sk"))
+        .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est_union")),
+      """SELECT count(DISTINCT l_returnflag) AS n_groups,
+        |  count(DISTINCT l_partkey) AS n_parts,
+        |  TRUE AS union_eq_single, TRUE AS union_ok
+        |FROM lineitem""".stripMargin,
+      (s, d, unioned) => {
+        val single = Tables.lineitem(s, d).agg(
           hll_sketch_estimate(hll_sketch_agg(col("l_partkey"), lit(14)))
             .as("est_single"),
+          countDistinct(col("l_returnflag")).as("n_groups"),
           countDistinct(col("l_partkey")).as("n_parts"))
         unioned.crossJoin(single).select(col("n_groups"), col("n_parts"),
           // union and single-pass sketches summarize the same set but
@@ -599,32 +596,31 @@ object RelationalQueries {
             <= 0.02).as("union_eq_single"),
           (abs(col("est_union").cast("double") / col("n_parts") - 1.0) <= 0.05)
             .as("union_ok"))
-      },
-      """SELECT count(DISTINCT l_returnflag) AS n_groups,
-        |  count(DISTINCT l_partkey) AS n_parts,
-        |  TRUE AS union_eq_single, TRUE AS union_ok
-        |FROM lineitem""".stripMargin,
-      // bench: per-group sketches + union alone (the mergeability
-      // pattern itself), no exact distinct or single-pass re-sketch
-      (s, d) => Tables.lineitem(s, d).groupBy("l_returnflag")
-        .agg(hll_sketch_agg(col("l_partkey"), lit(14)).as("sk"))
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est_union"))),
+      }),
     // Count-Min point-frequency estimates for a watchlist of keys —
     // one map-side pass + broadcast sketch, no per-key groupBy.
     // Oracled as a BOUND CHECK: the estimate value is sketch-specific
     // (no engine can replay it), but CM's guarantees are checkable —
     // never below the true count, above it by at most ceil(eps·N) —
     // so the query emits the exact count plus the two bound verdicts,
-    // and the oracle answers TRUE/TRUE from exact SQL. The sketch is
+    // and the oracle answers TRUE/TRUE from exact SQL. The build is one
+    // CM build pass + broadcast point estimates; the gate joins the
+    // exact per-key counts beside them. The sketch is
     // fix-seeded, so the verdicts are deterministic; any CM
     // regression (underestimate, merge bug, overflow) hash-fails.
     // SketchSpec additionally pins the error distribution.
-    "sketch_freq" -> QueryDef.sqlBench(
-      (s, d) => {
+    "sketch_freq" -> QueryDef.gated(
+      (s, d) => graft.operators.FrequencySketch.estimateCounts(
+        Tables.lineitem(s, d), "l_partkey", s.range(1, 101).toDF("l_partkey")),
+      """SELECT r.k AS l_partkey, coalesce(c.cnt, 0) AS true_cnt,
+        |  TRUE AS never_under, TRUE AS within_eps
+        |FROM range(1, 101) r(k)
+        |LEFT JOIN (SELECT l_partkey, count(*) AS cnt
+        |           FROM lineitem GROUP BY l_partkey) c
+        |  ON c.l_partkey = r.k
+        |ORDER BY l_partkey""".stripMargin,
+      (s, d, est) => {
         val li = Tables.lineitem(s, d)
-        val watchlist = s.range(1, 101).toDF("l_partkey")
-        val est = graft.operators.FrequencySketch.estimateCounts(
-          li, "l_partkey", watchlist)
         val exact = li.groupBy("l_partkey").agg(count(lit(1)).as("true_cnt"))
         val tot = li.agg(count(lit(1)).as("__n"))
         est.join(exact, Seq("l_partkey"), "left")
@@ -635,33 +631,26 @@ object RelationalQueries {
             (col("est_cnt") <= col("true_cnt")
               + ceil(col("__n") * lit(1e-4))).as("within_eps"))
           .transform(QueryDef.sortSmall(_, col("l_partkey")))
-      },
-      """SELECT r.k AS l_partkey, coalesce(c.cnt, 0) AS true_cnt,
-        |  TRUE AS never_under, TRUE AS within_eps
-        |FROM range(1, 101) r(k)
-        |LEFT JOIN (SELECT l_partkey, count(*) AS cnt
-        |           FROM lineitem GROUP BY l_partkey) c
-        |  ON c.l_partkey = r.k
-        |ORDER BY l_partkey""".stripMargin,
-      // bench: one CM build pass + broadcast point estimates — no
-      // exact per-key groupBy beside it
-      (s, d) => graft.operators.FrequencySketch.estimateCounts(
-        Tables.lineitem(s, d), "l_partkey", s.range(1, 101).toDF("l_partkey"))),
+      }),
     // Bound-check oracled: approx_percentile(accuracy=10000) returns
     // an actual element within ~1e-4 rank error, so each estimate must
     // fall between the exact quantiles at p ± 0.001 (10x slack) —
     // verdicts beside the exact percentiles, TRUE/TRUE/TRUE in SQL.
-    "sketch_percentiles" -> QueryDef.sqlBench(
-      (s, d) => {
-        val li = Tables.lineitem(s, d)
-        val est = li
-          .agg(expr("approx_percentile(l_extendedprice, array(0.25D, 0.5D, 0.75D), 10000)").as("ps"))
-          .select(
-            element_at(col("ps"), 1).as("e25"),
-            element_at(col("ps"), 2).as("e50"),
-            element_at(col("ps"), 3).as("e75"))
+    // The build is the mergeable quantile sketch alone; the exact
+    // bracketing belongs to the gate, not the operator.
+    "sketch_percentiles" -> QueryDef.gated(
+      (s, d) => Tables.lineitem(s, d)
+        .agg(expr("approx_percentile(l_extendedprice, array(0.25D, 0.5D, 0.75D), 10000)").as("ps"))
+        .select(
+          element_at(col("ps"), 1).as("e25"),
+          element_at(col("ps"), 2).as("e50"),
+          element_at(col("ps"), 3).as("e75")),
+      s"""SELECT p25, p50, p75, TRUE AS ok25, TRUE AS ok50, TRUE AS ok75
+        |FROM (${QueryDef.exactQuantileSql("lineitem", "l_extendedprice",
+          Seq(0.25 -> "p25", 0.5 -> "p50", 0.75 -> "p75"))})""".stripMargin,
+      (s, d, est) => {
         val exact = graft.operators.ExactQuantiles.quantiles(
-          li, "l_extendedprice",
+          Tables.lineitem(s, d), "l_extendedprice",
           probs = Seq(0.249, 0.25, 0.251, 0.499, 0.5, 0.501, 0.749, 0.75, 0.751),
           names = Seq("lo25", "p25", "hi25", "lo50", "p50", "hi50",
             "lo75", "p75", "hi75"))
@@ -670,18 +659,7 @@ object RelationalQueries {
           col("e25").between(col("lo25"), col("hi25")).as("ok25"),
           col("e50").between(col("lo50"), col("hi50")).as("ok50"),
           col("e75").between(col("lo75"), col("hi75")).as("ok75"))
-      },
-      s"""SELECT p25, p50, p75, TRUE AS ok25, TRUE AS ok50, TRUE AS ok75
-        |FROM (${QueryDef.exactQuantileSql("lineitem", "l_extendedprice",
-          Seq(0.25 -> "p25", 0.5 -> "p50", 0.75 -> "p75"))})""".stripMargin,
-      // bench: the mergeable quantile sketch alone (the exact-quantile
-      // bracketing belongs to the correctness gate, not the operator)
-      (s, d) => Tables.lineitem(s, d)
-        .agg(expr("approx_percentile(l_extendedprice, array(0.25D, 0.5D, 0.75D), 10000)").as("ps"))
-        .select(
-          element_at(col("ps"), 1).as("e25"),
-          element_at(col("ps"), 2).as("e50"),
-          element_at(col("ps"), 3).as("e75"))),
+      }),
 
     // --- bounded-depth BFS (frontier expansion — the reachability /
     // shortest-hop primitive completing the graph family beside

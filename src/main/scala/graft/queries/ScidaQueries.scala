@@ -17,20 +17,12 @@ object ScidaQueries {
     * production the table is ALREADY stored this way
     * (`Spatial.writeZOrdered` at ingest); the measured spatial query
     * is the scan, not the one-time layout write. */
-  private val zPartCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def zOrderedPart(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val dir = zPartCache.computeIfAbsent(d, _ => {
-      val out = Fixtures.tmpPath("graft_zpart", d)
-      Spatial.writeZOrdered(Tables.part(s, d), out,
+      d: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(Fixtures.writeOnce(Fixtures.tmpPath("graft_zpart", d))(p =>
+      Spatial.writeZOrdered(Tables.part(s, d), p,
         Seq(("p_size", 1.0, 51.0), ("p_retailprice", 900.0, 2000.0)),
-        numFiles = 16)
-      out
-    })
-    s.read.parquet(dir)
-  }
+        numFiles = 16)))
 
   /** Primary-key-clustered at-rest copy of `lineitem` (range-
     * partitioned + sorted by (l_orderkey, l_linenumber)), written once
@@ -42,21 +34,13 @@ object ScidaQueries {
     * queries ordered by the key then need only a LOCAL sort over the
     * already-sorted scan — no range exchange, no boundary-sampling
     * re-execution of the child. */
-  private val sortedLiCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def sortedLineitem(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val dir = sortedLiCache.computeIfAbsent(d, _ => {
-      val out = Fixtures.tmpPath("graft_li_sorted", d)
+      d: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(Fixtures.writeOnce(Fixtures.tmpPath("graft_li_sorted", d))(p =>
       Tables.lineitem(s, d)
         .repartitionByRange(16, col("l_orderkey"), col("l_linenumber"))
         .sortWithinPartitions("l_orderkey", "l_linenumber")
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(dir)
-  }
+        .write.mode("overwrite").parquet(p)))
 
   /** Exact quantile boundaries memoized per (dataset, column) — the
     * same table-statistic argument as hotKeysOf in RelationalQueries:

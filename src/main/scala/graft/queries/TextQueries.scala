@@ -14,28 +14,22 @@ import graft.sources.Tables
   */
 object TextQueries {
 
-  // bpe_tokens' build→oracle handshake (dedup_simhash's pattern): the
-  // build writes the per-word token-count artifact to a dataset-keyed
-  // path and records it; the oracle thunk — resolved AFTER builds —
-  // replays the per-doc totals from that same table.
   /** text_compress_ratio's per-doc row: the typed map's output. */
   final case class DeflateRow(doc_id: Long, n_def: Long)
-
-  // text_compress_ratio's persisted per-doc artifact handshake
-  private val deflatePathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_deflate_default")
-
-  private val bpeVocabPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_bpe_vocab_default")
 
   // trained merges are a corpus artifact (maintained at ingest in
   // production): memoized per (JVM, dataset dir) like quantilesOf, so
   // only the first execution pays the TakeOrdered word-count job and
-  // the driver-side merge loop
+  // the driver-side merge loop. The same pass persists the per-WORD
+  // token-count table the BPE oracles replay against (bpe_tokens'
+  // protocol), written by the SAME codegen'd expression that
+  // tokenizes the corpus, so any distributed-application
+  // inconsistency hash-fails downstream.
   private val bpeTokMemo = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.broadcast.Broadcast[graft.functions.BpeTokenizer]]()
+
+  private[queries] def bpeVocabPath(d: String): String =
+    Fixtures.tmpPath("graft_bpe_vocab", d)
 
   private[queries] def bpeTokenizerFor(s: org.apache.spark.sql.SparkSession,
       d: String)
@@ -50,28 +44,14 @@ object TextQueries {
         .orderBy(col("cnt").desc, col("word"))
         .limit(65536)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      s.sparkContext.broadcast(new graft.functions.BpeTokenizer(
+      val tok = s.sparkContext.broadcast(new graft.functions.BpeTokenizer(
         graft.functions.Bpe.trainMerges(wc, numMerges = 512)))
-    })
-
-  // The per-WORD token-count artifact the BPE oracles replay against
-  // (bpe_tokens' protocol): written once per (JVM, dataset) by the
-  // SAME codegen'd expression that tokenizes the corpus, so any
-  // distributed-application inconsistency hash-fails downstream.
-  // Returns the parquet path.
-  private val bpeVocabMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[queries] def bpeVocabFor(s: org.apache.spark.sql.SparkSession,
-      d: String): String =
-    bpeVocabMemo.computeIfAbsent(d, _ => {
-      val tok = bpeTokenizerFor(s, d)
-      val p = Fixtures.tmpPath("graft_bpe_vocab", d)
       Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("word")).distinct()
         .select(col("word"),
           graft.functions.BpeColumns.tokenCount(col("word"), tok).as("n_tokens"))
-        .write.mode("overwrite").parquet(p)
-      p
+        .write.mode("overwrite").parquet(bpeVocabPath(d))
+      tok
     })
 
   /** Per-doc bigram-LM score frame (doc_id, lang, score_micro) —
@@ -105,17 +85,29 @@ object TextQueries {
         / count(lit(1)).cast("double") + 0.5).cast("long").as("score_micro"))
   }
 
-  // the persisted score-table artifact (perplexity_bucket's
-  // steady-state bench input), written once per (JVM, dataset)
-  private val lmScoredMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // the persisted score-table artifact (perplexity_bucket's input),
+  // written once per (JVM, dataset)
   private def lmScoredPathFor(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    lmScoredMemo.computeIfAbsent(d, _ => {
-      val p = Fixtures.tmpPath("graft_lm_scored", d)
-      lmScored(s, d).write.mode("overwrite").parquet(p)
-      p
-    })
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_lm_scored", d))(p =>
+      lmScored(s, d).write.mode("overwrite").parquet(p))
+
+  // text_compress_ratio's per-doc DEFLATE lengths: a spread map-side
+  // typed map (CPU-bound per row — exactly the stage the
+  // full-parallelism guard exists for)
+  private def deflateRows(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    QueryDef.spread(Tables.documents(s, d))
+      .select(col("doc_id"), col("text"))
+      .as[(Long, String)]
+      .map { case (id, t) =>
+        DeflateRow(id, TextOps.deflateLen(
+          t.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toLong) }
+      .toDF()
+  }
+  private def deflatePath(d: String): String =
+    Fixtures.tmpPath("graft_deflate", d)
 
   /** CCNet tercile cut over a per-doc score frame: per-LANGUAGE
     * head/middle/tail at exact interpolated terciles, computed
@@ -251,8 +243,7 @@ object TextQueries {
       |)""".stripMargin
 
   // Hashed bag-of-words feature frame shared by the logreg family
-  // (one definition site: training, inference and the steady-state
-  // bench all hash identically).
+  // (one definition site: training and inference hash identically).
   private def logregFeatures(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     graft.CacheScope.track(
@@ -301,8 +292,8 @@ object TextQueries {
   // The trained model as a maintained artifact (the bpe_tokens /
   // boilerplate-set discipline): the 32-row weight table collected
   // once per (JVM, dataset) — a production quality filter trains
-  // periodically and scores continuously, so the steady-state bench
-  // shape rides the weights as a plan literal.
+  // periodically and scores continuously, so logreg_predict rides
+  // the weights as a plan literal.
   private val logregWMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Map[Int, Long]]()
   private def logregWeightsFor(s: org.apache.spark.sql.SparkSession,
@@ -311,9 +302,9 @@ object TextQueries {
       logregWeights(s, d)._2.select(col("j"), col("new_w_micro"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
 
-  // Margin → (score, keep) tail shared by logreg_predict's gated and
-  // steady-state builds: the hard-sigmoid score in micros and the
-  // engine-exact keep rule (margin >= 0 ⟺ p >= 0.5).
+  // Margin → (score, keep) tail of logreg_predict: the
+  // hard-sigmoid score in micros and the engine-exact keep rule
+  // (margin >= 0 ⟺ p >= 0.5).
   private def logregScore(margins: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val t = col("margin_micro").cast("double") / lit(1000000.0)
@@ -581,36 +572,25 @@ object TextQueries {
     // row, non-deterministic encode) hash-fails; encode CORRECTNESS
     // itself is pinned by BpeSpec's known-merges + reconstruction
     // invariants. ---
-    "bpe_tokens" -> QueryDef.sqlBench(
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        val tok = bpeTokenizerFor(s, d)
-        bpeVocabPathRef.set(bpeVocabFor(s, d))
-        docs.select(col("doc_id"),
-            TextOps.wsTokenCount(col("text")).cast("long").as("n_words"),
-            graft.functions.BpeColumns.tokenCount(col("text"), tok)
-              .cast("long").as("n_bpe_tokens"))
-          .sortWithinPartitions("doc_id")
-      },
-      s"""WITH ws AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
-        |), v AS (
-        |  SELECT word, n_tokens
-        |  FROM read_parquet('${bpeVocabPathRef.get}/*.parquet')
-        |)
-        |SELECT w.doc_id, count(*) AS n_words,
-        |  CAST(sum(v.n_tokens) AS BIGINT) AS n_bpe_tokens
-        |FROM ws w JOIN v USING (word)
-        |GROUP BY w.doc_id ORDER BY doc_id""".stripMargin,
-      // bench: the steady-state shape — a production tokenizer is an
-      // ingest-maintained artifact, so time ONLY the codegen'd apply
-      // pass (the memoized trainer runs once per JVM+dataset)
+    "bpe_tokens" -> QueryDef.sqlAt(
+      // the tokenizer is an ingest-maintained artifact (trained once
+      // per JVM+dataset): the build is the codegen'd apply pass
       (s, d) => Tables.documents(s, d)
         .select(col("doc_id"),
           TextOps.wsTokenCount(col("text")).cast("long").as("n_words"),
           graft.functions.BpeColumns.tokenCount(col("text"), bpeTokenizerFor(s, d))
             .cast("long").as("n_bpe_tokens"))
-        .sortWithinPartitions("doc_id")),
+        .sortWithinPartitions("doc_id"),
+      d => s"""WITH ws AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
+        |), v AS (
+        |  SELECT word, n_tokens
+        |  FROM read_parquet('${bpeVocabPath(d)}/*.parquet')
+        |)
+        |SELECT w.doc_id, count(*) AS n_words,
+        |  CAST(sum(v.n_tokens) AS BIGINT) AS n_bpe_tokens
+        |FROM ws w JOIN v USING (word)
+        |GROUP BY w.doc_id ORDER BY doc_id""".stripMargin),
 
     // --- distributed BPE pair counting (the inner statistic of the
     // Sennrich merge loop, made corpus-scale): the top-20 adjacent
@@ -665,19 +645,14 @@ object TextQueries {
     // any nondeterminism in the distributed application hash-fails;
     // deflateLen itself is pinned by TextPipelineSpec on known
     // compressible/incompressible inputs. ---
-    "text_compress_ratio" -> QueryDef.sqlBench(
+    "text_compress_ratio" -> QueryDef.sqlAt(
+      // the deflate pass IS the operator: the build computes it
+      // in-plan; the artifact the oracle replays from is the same
+      // helper's output, persisted once per (JVM, dataset)
       (s, d) => {
-        import s.implicits._
-        val p = Fixtures.tmpPath("graft_deflate", d)
-        deflatePathRef.set(p)
-        QueryDef.spread(Tables.documents(s, d))
-          .select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .map { case (id, t) =>
-            DeflateRow(id, TextOps.deflateLen(
-              t.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toLong) }
-          .write.mode("overwrite").parquet(p)
-        s.read.parquet(p)
+        Fixtures.writeOnce(deflatePath(d))(p =>
+          deflateRows(s, d).write.mode("overwrite").parquet(p))
+        deflateRows(s, d)
           .join(Tables.documents(s, d).select(col("doc_id"),
             octet_length(col("text")).cast("long").as("n_raw")), Seq("doc_id"))
           .select(col("doc_id"), col("n_raw"), col("n_def"),
@@ -685,33 +660,14 @@ object TextQueries {
             (col("n_def") * 100 < col("n_raw") * 35).as("low_entropy"))
           .orderBy("doc_id")
       },
-      s"""SELECT d.doc_id, strlen(d.text) AS n_raw, f.n_def,
+      d => s"""SELECT d.doc_id, strlen(d.text) AS n_raw, f.n_def,
         |  floor((CAST(f.n_def AS DOUBLE) / strlen(d.text))
         |    *1000000 + 0.5)/1000000 AS ratio,
         |  f.n_def * 100 < strlen(d.text) * 35 AS low_entropy
         |FROM documents d
-        |JOIN read_parquet('${deflatePathRef.get}/*.parquet') f
+        |JOIN read_parquet('${deflatePath(d)}/*.parquet') f
         |  ON f.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-      // bench: the deflate pass IS the operator — keep it, but skip
-      // the Verify handshake's artifact write+read round-trip (that
-      // parquet exists only so the oracle can replay the lengths)
-      (s, d) => {
-        import s.implicits._
-        QueryDef.spread(Tables.documents(s, d))
-          .select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .map { case (id, t) =>
-            DeflateRow(id, TextOps.deflateLen(
-              t.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toLong) }
-          .toDF()
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            octet_length(col("text")).cast("long").as("n_raw")), Seq("doc_id"))
-          .select(col("doc_id"), col("n_raw"), col("n_def"),
-            roundAt(col("n_def").cast("double") / col("n_raw"), 6).as("ratio"),
-            (col("n_def") * 100 < col("n_raw") * 35).as("low_entropy"))
-          .orderBy("doc_id")
-      }),
+        |ORDER BY d.doc_id""".stripMargin),
 
     // --- collocation mining by lift (the PMI-without-the-log
     // association statistic: lift(a,b) = N·c(ab)/(c(a)·c(b)), PMI =
@@ -1323,8 +1279,11 @@ object TextQueries {
     // (lang × bucket) agg. Engine-exact: integer counts, stored
     // doubles rank-selected (never re-derived), one interpolation
     // with identical operand order, integer mean finish. ---
-    "perplexity_bucket" -> QueryDef.sqlBench(
-      (s, d) => perplexityBucketize(lmScored(s, d)),
+    "perplexity_bucket" -> QueryDef.sql(
+      // the per-doc score table is persisted once per (JVM, dataset)
+      // — the CCNet production shape: scores are computed at ingest,
+      // the tercile cut is the steady-state op
+      (s, d) => perplexityBucketize(s.read.parquet(lmScoredPathFor(s, d))),
       {
         val q1 = 1.0 / 3; val q2 = 2.0 / 3
         s"""WITH ws AS (
@@ -1387,13 +1346,7 @@ object TextQueries {
         |    / CAST(count(*) * 1000000 AS DOUBLE))*1000000 + 0.5)/1000000 AS mean_logp
         |FROM sc JOIN thr ON sc.lang = thr.lang
         |GROUP BY 1, 2 ORDER BY sc.lang, bucket""".stripMargin
-      },
-      // bench: bucket the PERSISTED per-doc score table (the CCNet
-      // production shape — scores are computed once at ingest, the
-      // tercile cut is the steady-state op); pinned equal to the
-      // gated build by BenchEquivalenceSpec
-      (s, d) => perplexityBucketize(
-        s.read.parquet(lmScoredPathFor(s, d)))),
+      }),
 
     // --- per-document TF-IDF top-3 terms, exchange-free. TF-IDF is a
     // PER-DOCUMENT statistic once df is known, and df is a
@@ -1610,13 +1563,17 @@ object TextQueries {
     // the expensive trunk (features) is shared with training, and
     // the model rides the plan as a broadcast literal — the same
     // artifact discipline as the ANN codebooks. ---
-    "logreg_predict" -> QueryDef.sqlBench(
+    "logreg_predict" -> QueryDef.sql(
+      // the model is a maintained artifact (the 32-weight table,
+      // trained once per JVM+dataset, riding as a literal map): the
+      // build is the pure scoring pass — feature agg + map-side weight
+      // lookup + doc-keyed margin agg
       (s, d) => {
-        val (feat, weights) = logregWeights(s, d)
-        logregScore(feat
-          .join(broadcast(weights.select(col("j"), col("new_w_micro"))), "j")
+        val wmap = typedLit(logregWeightsFor(s, d))
+        logregScore(logregFeatures(s, d)
           .groupBy("doc_id")
-          .agg(sum(col("new_w_micro") * col("x")).as("margin_micro")))
+          .agg(sum(element_at(wmap, col("j")) * col("x"))
+            .as("margin_micro")))
       },
       """WITH w AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
@@ -1656,19 +1613,6 @@ object TextQueries {
         |      0.25 * (CAST(margin_micro AS DOUBLE) / 1000000.0) + 0.5))
         |    * 1000000.0 + 0.5) AS BIGINT) AS p_micro,
         |  margin_micro >= 0 AS keep
-        |FROM sc ORDER BY doc_id""".stripMargin,
-      // bench: steady-state inference — the model is a maintained
-      // artifact (memoized 32-weight table riding as a literal map),
-      // so the timed shape is the pure scoring pass: feature agg +
-      // map-side weight lookup + doc-keyed margin agg. No join, no
-      // training rebuild. The gated build above still exercises the
-      // full train-then-score composition.
-      (s, d) => {
-        val wmap = typedLit(logregWeightsFor(s, d))
-        logregScore(logregFeatures(s, d)
-          .groupBy("doc_id")
-          .agg(sum(element_at(wmap, col("j")) * col("x"))
-            .as("margin_micro")))
-      })
+        |FROM sc ORDER BY doc_id""".stripMargin)
   )
 }

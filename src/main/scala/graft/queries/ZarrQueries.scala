@@ -17,13 +17,12 @@ import graft.sources.zarr.ZarrWriter
   */
 object ZarrQueries {
 
-  private val storeCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ordersStore(s: org.apache.spark.sql.SparkSession, d: String): String =
-    storeCache.computeIfAbsent(d, _ => writeOrdersStore(s, d))
+    Fixtures.writeOnce(Fixtures.tmpPath("graft_zarr_orders", d))(p =>
+      writeOrdersStore(s, d, new File(p)))
 
-  private def writeOrdersStore(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = new File(Fixtures.tmpPath("graft_zarr_orders", d))
+  private def writeOrdersStore(s: org.apache.spark.sql.SparkSession, d: String,
+      dir: File): Unit = {
     if (dir.exists()) {
       def rm(f: File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rm)
@@ -43,7 +42,6 @@ object ZarrQueries {
       "TotalPrice" -> ZarrWriter.F64(rows.map(_.getDouble(2)))),
       attrs = Map("/" -> Map("source" -> "orders", "sf_dir" -> d)),
       chunkRows = chunkRows, compress = true)
-    dir.getPath
   }
 
   def defs: Map[String, QueryDef] = Map(

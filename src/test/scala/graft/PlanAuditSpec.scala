@@ -184,13 +184,19 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("ann_ivf: assignment is one map-side pass (no iterative ML stages, no shuffle join)") {
-    val p = plan("ann_ivf")
-    assert(p.contains("graft_nearest_centroid"), p.take(800))
+    // cell assignment runs in the memoized index build the query
+    // probes: the codegen'd nearest-centroid pass, join-free
+    val idx = graft.queries.AnnQueries.ivfIndexed(spark, sfDir)._1
+      .queryExecution.executedPlan.toString
+    assert(idx.contains("graft_nearest_centroid"), idx.take(800))
+    assert(!idx.contains("SortMergeJoin") && !idx.contains("ShuffledHashJoin"),
+      "cell assignment must not plan a shuffle join:\n" + idx.take(1200))
     // the recall-verdict wrapper adds broadcast joins (semi vs exact
-    // top-k, the query-vector cross); cell ASSIGNMENT must still be
-    // join-free — no shuffle join anywhere in the plan
+    // top-k, the query-vector cross); no shuffle join anywhere in the
+    // plan Verify checks either
+    val p = plan("ann_ivf")
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
-      "cell assignment must not plan a shuffle join:\n" + p.take(1200))
+      "the probe must not plan a shuffle join:\n" + p.take(1200))
     assert(p.contains("TakeOrderedAndProject"), "probe top-k must be a k-heap")
   }
 
@@ -275,28 +281,44 @@ class PlanAuditSpec extends SparkSpec {
     seen.toArray(Array.empty[SparkPlan]).toSeq
   }
 
-  test("dedup_minhash, dedup_clusters: the MinHash kernel runs in ONE Generate") {
-    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
+  /** The native `kernel` is evaluated by exactly one operator of
+    * everything `body` executed — a `GenerateExec` — and never inside
+    * a lambda: a transform lambda over the signature, or a filter
+    * pushed over it, would evaluate it once more per band / filter. */
+  private def assertKernelInOneGenerate(what: String,
+      kernel: org.apache.spark.sql.catalyst.expressions.Expression => Boolean)
+      (body: => Unit): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
     import org.apache.spark.sql.execution.GenerateExec
-    import graft.functions.expressions.{MinHashBands, MinHashSig}
-    def kernel(e: Expression) = e.exists {
-      case _: MinHashSig | _: MinHashBands => true
+    val evaluating = executedOperators(body)
+      .filter(_.expressions.exists(_.exists(kernel)))
+    assert(evaluating.map(_.getClass) == Seq(classOf[GenerateExec]),
+      s"$what evaluates the kernel in:\n${evaluating.map(_.simpleString(400)).mkString("\n")}")
+    assert(!evaluating.head.expressions.exists(_.exists {
+      case l: LambdaFunction => l.exists(kernel)
       case _ => false
-    }
-    for (name <- Seq("dedup_minhash", "dedup_clusters")) {
-      val ops = executedOperators(
-        CacheScope.withScope(SparkEntry.queries(name)(spark, sfDir).collect()))
-      val evaluating = ops.filter(_.expressions.exists(kernel))
-      // one Generate exploding the fused kernel, and no Filter: a
-      // transform lambda over the signature, or a filter pushed over
-      // it, would evaluate the signature once more per band / filter
-      assert(evaluating.map(_.getClass) == Seq(classOf[GenerateExec]),
-        s"$name evaluates the kernel in:\n${evaluating.map(_.simpleString(400)).mkString("\n")}")
-      assert(!evaluating.head.expressions.exists(_.exists {
-        case l: LambdaFunction => kernel(l)
+    }), s"$what references the kernel inside a lambda")
+  }
+
+  test("dedup_minhash, dedup_clusters: the MinHash kernel runs in ONE Generate") {
+    import graft.functions.expressions.{MinHashBands, MinHashSig}
+    for (name <- Seq("dedup_minhash", "dedup_clusters"))
+      assertKernelInOneGenerate(name, {
+        case _: MinHashSig | _: MinHashBands => true
         case _ => false
-      }), s"$name references the kernel inside a lambda")
-    }
+      })(CacheScope.withScope(SparkEntry.queries(name)(spark, sfDir).collect()))
+  }
+
+  test("Dedup.simhashPairs: the SimHash kernel runs in ONE Generate") {
+    import graft.functions.expressions.SimHashSig
+    // nothing is cached: both self-join branches plan the signature
+    // pass, and exchange reuse must leave one evaluation of it
+    assertKernelInOneGenerate("simhashPairs", {
+      case _: SimHashSig => true
+      case _ => false
+    })(CacheScope.withScope(graft.dedup.Dedup.simhashPairs(
+      graft.sources.Tables.documents(spark, sfDir), "doc_id", "text",
+      maxHamming = 3).collect()))
   }
 
   test("dedup_substring: positional hashes native; spans reuse the doc partitioning") {
@@ -753,16 +775,24 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("logreg_predict: weights broadcast onto the feature frame; margins partial-agg") {
+    // the 32-row model rides the scoring pass as a plan literal (every
+    // task gets it, as with a broadcast): no join at all, so the
+    // feature frame never shuffles for the model
     val p = plan("logreg_predict")
-    // the 32-row model must broadcast (training's gradient path also
-    // carries broadcasts, so assert the count stays small and no
-    // cartesian/nested-loop leaks in beyond the scalar n_docs cross)
-    assert(p.contains("BroadcastHashJoin"), p.take(1200))
-    assert(!p.contains("CartesianProduct"), p.take(800))
-    assert("BroadcastNestedLoopJoin".r.findAllIn(p).length <= 1,
-      "only the scalar n_docs cross may nest-loop:\n" + p.take(1200))
+    for (op <- Seq("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin",
+        "CartesianProduct", "BroadcastNestedLoopJoin"))
+      assert(!p.contains(op), s"unexpected $op:\n" + p.take(1200))
     assert(p.contains("partial_sum"), p.take(1200))
     assert(windowsPartitioned("logreg_predict")._1 == 0)
+    // the memoized training the model comes from (logreg_step's
+    // plan): its gradient path broadcasts, and no cartesian/nested
+    // loop leaks in beyond the scalar n_docs cross
+    val t = plan("logreg_step")
+    assert(t.contains("BroadcastHashJoin"), t.take(1200))
+    assert(!t.contains("CartesianProduct"), t.take(800))
+    assert("BroadcastNestedLoopJoin".r.findAllIn(t).length <= 1,
+      "only the scalar n_docs cross may nest-loop:\n" + t.take(1200))
+    assert(windowsPartitioned("logreg_step")._1 == 0)
   }
 
   test("pack_sequences_bpe: PrefixSum shape — no global window, counts map-side") {

@@ -23,37 +23,30 @@ object Ivf {
 
   /** Train the quantizer and assign every vector its cell.
     *
-    * The driver collects at most `maxTrain` training vectors, chosen
-    * DETERMINISTICALLY (id-ordered TakeOrdered after the optional
-    * `sampleFraction` thinning) — a coarse quantizer needs no more,
-    * the full corpus is never collected, and the index is identical
-    * across partitionings/cluster sizes. At corpus scale pass a
-    * `sampleFraction` so the TakeOrdered scans a thinned stream.
+    * The driver collects at most `MaxTrain` training vectors, chosen
+    * DETERMINISTICALLY (the first in `id` order, one TakeOrdered) — a
+    * coarse quantizer needs no more, the full corpus is never
+    * collected, and the index is identical across partitionings and
+    * cluster sizes.
     * @return (indexed frame = input + `cell` column, centroids) */
-  def build(embs: DataFrame, id: String, vec: String, nCells: Int,
-      seed: Long = 42L, sampleFraction: Double = 1.0,
-      maxTrain: Int = 65536, maxIter: Int = 10): (DataFrame, Array[Array[Double]]) = {
-    val trainDf = if (sampleFraction < 1.0)
-      embs.sample(withReplacement = false, sampleFraction, seed) else embs
-    val sample = trainDf.orderBy(id).limit(maxTrain)
+  def build(embs: DataFrame, id: String, vec: String,
+      nCells: Int): (DataFrame, Array[Array[Double]]) = {
+    val sample = embs.orderBy(id).limit(MaxTrain)
       .select(col(vec).cast("array<double>"))
       .collect().map(_.getSeq[Double](0).toArray)
-    buildFromSample(embs, vec, nCells, sample, seed, maxIter)
+    val centers = train(sample, nCells)
+    (assign(embs, vec, centers), centers)
   }
 
-  /** Build from a caller-supplied training sample — lets one driver
-    * job serve several consumers (e.g. the query-vector fetch and the
-    * quantizer sample share a single TakeOrdered; see
-    * AnnQueries.headSample). Same geometry as `build` given the same
-    * sample. */
-  def buildFromSample(embs: DataFrame, vec: String, nCells: Int,
-      sample: Array[Array[Double]], seed: Long = 42L,
-      maxIter: Int = 10): (DataFrame, Array[Array[Double]]) = {
-    val centers = lloyd(sample, nCells, seed, maxIter)
-    val centLit = typedLit(centers.map(_.toSeq).toSeq)
-    (embs.withColumn("cell",
-      call_function("graft_nearest_centroid", col(vec), centLit)), centers)
-  }
+  /** The training-sample bound of [[build]]. */
+  val MaxTrain = 65536
+
+  /** `embs` plus its `cell` column: the codegen'd nearest-centroid
+    * pass, the centroids a plan literal. */
+  def assign(embs: DataFrame, vec: String,
+      centers: Array[Array[Double]]): DataFrame =
+    embs.withColumn("cell", call_function("graft_nearest_centroid", col(vec),
+      typedLit(centers.map(_.toSeq).toSeq)))
 
   /** BATCH top-k through the IVF blocking — the similarity-JOIN shape
     * at corpus scale: instead of crossing every query with the whole
@@ -172,9 +165,7 @@ object Ivf {
     * the delta cell assignment frame for statistic maintenance. */
   def compact(delta: DataFrame, centers: Array[Array[Double]],
       vec: String, path: String): DataFrame = {
-    val centLit = typedLit(centers.map(_.toSeq).toSeq)
-    val assigned = delta.withColumn("cell",
-      call_function("graft_nearest_centroid", col(vec), centLit))
+    val assigned = assign(delta, vec, centers)
     // Column contract: the delta must carry EXACTLY the at-rest
     // layout's columns (same names, same types) — a narrower or wider
     // delta would silently fork the parquet schema under one
@@ -226,15 +217,17 @@ object Ivf {
     s
   }
 
-  /** Deterministic Lloyd's k-means with k-means++ seeding and
-    * farthest-point reseeding of emptied clusters. Runs on the
-    * driver over the (bounded) training sample. */
-  private def lloyd(xs: Array[Array[Double]], k: Int, seed: Long,
-      maxIter: Int): Array[Array[Double]] = {
+  /** The `k`-cell quantizer of a training sample: deterministic
+    * Lloyd's k-means (fixed seed, at most 10 iterations) with
+    * k-means++ seeding and farthest-point reseeding of emptied
+    * clusters, run on the driver. The centers are a function of
+    * (`xs`, `k`) alone. */
+  def train(xs: Array[Array[Double]], k: Int): Array[Array[Double]] = {
+    val maxIter = 10
     val n = xs.length
     require(n >= k, s"need at least $k training vectors, got $n")
     val dims = xs(0).length
-    val rnd = new scala.util.Random(seed)
+    val rnd = new scala.util.Random(42L)
     // k-means++ init: each next center sampled ∝ distance² to the set
     val centers = new Array[Array[Double]](k)
     centers(0) = xs(rnd.nextInt(n)).clone()

@@ -47,22 +47,16 @@ object IvfPq {
       }.toDF("id", "cell", "res")
   }
 
-  /** Build the composite index: IVF cells, then PQ codebooks trained
-    * on residuals, then per-vector (cell, code) rows — the at-rest
-    * representation (store clustered by cell to make probes
-    * partition-pruned scans). */
-  def build(embs: DataFrame, id: String, vec: String, nCells: Int,
-      m: Int, k: Int,
-      coarseSample: Array[Array[Double]] = null): (Dataset[CellCode], Index) = {
-    val spark = embs.sparkSession
+  /** Build the composite index over a trained coarse quantizer
+    * (`coarse` = the cell-labeled frame + its centroids, as
+    * `Ivf.build` returns them): PQ codebooks trained on residuals,
+    * then per-vector (cell, code) rows — the at-rest representation
+    * (store clustered by cell to make probes partition-pruned scans). */
+  def build(coarse: (DataFrame, Array[Array[Double]]), id: String,
+      vec: String, m: Int, k: Int): (Dataset[CellCode], Index) = {
+    val (indexed, centers) = coarse
+    val spark = indexed.sparkSession
     import spark.implicits._
-    // caller-supplied coarse sample lets one driver job feed both the
-    // query-vector fetch and the quantizer (AnnQueries.headSample);
-    // the residual PQ sample is derived and keeps its own collect
-    val (indexed, centers) =
-      if (coarseSample != null)
-        Ivf.buildFromSample(embs, vec, nCells, coarseSample)
-      else Ivf.build(embs, id, vec, nCells)
     // three consumers read `res` (Pq.train's sample, Pq.encode, the
     // cell join-back) — without a barrier each would replay the whole
     // residual lineage including the upstream cell assignment

@@ -42,8 +42,7 @@ object Pq {
   }
 
   /** Train from a caller-supplied sample (one driver job can feed
-    * both the query-vector fetch and this training; see
-    * AnnQueries.headSample). */
+    * several indexes; see AnnQueries' embedding head). */
   def trainFromSample(sample: Array[Array[Double]], m: Int, k: Int,
       iters: Int = 15): Codebooks = {
     require(sample.nonEmpty, "empty training sample")

@@ -31,21 +31,56 @@ object AnnQueries {
       .select(lit(10).as("k"), (col("hits") >= minHits).as("recall_ok"))
   }
 
-  /** ONE TakeOrdered driver job fetches the query vector (vec_id 0 —
-    * first in id order) AND the id-ordered training sample the
-    * quantizer needs — the two driver round-trips the r4 verdict
-    * flagged, merged (SURVEY §7 forward item: "train-sample collect +
-    * query-vector head could share one job"). */
-  private[queries] def headSample(e: org.apache.spark.sql.DataFrame,
-      n: Int): (Seq[Double], Array[Array[Double]]) = {
-    val rows = e.orderBy("vec_id").limit(n + 1)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-    val q = rows.find(_.getLong(0) == 0L)
-      .getOrElse(sys.error("query vector vec_id=0 missing"))
-      .getSeq[Double](1)
-    (q, rows.filter(_.getLong(0) != 0L).map(_.getSeq[Double](1).toArray))
+  /** The dataset's embedding head, ONE TakeOrdered driver job for the
+    * whole family: the first 65537 vectors in vec_id order. `q` is the
+    * query vector (vec_id 0, first in id order), `sample` the head
+    * without it — the training sample of the corpus quantizers — and
+    * `full` its first 65536 rows, exactly Ivf.build's own sample. */
+  private final case class Head(q: Seq[Double],
+      sample: Array[Array[Double]], full: Array[Array[Double]])
+  private def headOf(s: org.apache.spark.sql.SparkSession, d: String): Head =
+    Fixtures.memo("ann_head", d) {
+      val rows = Tables.embeddings(s, d).orderBy("vec_id")
+        .limit(Ivf.MaxTrain + 1)
+        .select(col("vec_id"), col("embedding").cast("array<double>"))
+        .collect()
+      val ids = rows.map(_.getLong(0))
+      val vecs = rows.map(_.getSeq[Double](1).toArray)
+      val qi = ids.indexOf(0L)
+      if (qi < 0) sys.error("query vector vec_id=0 missing")
+      Head(vecs(qi).toSeq, vecs.indices.filter(ids(_) != 0L).map(vecs).toArray,
+        vecs.take(Ivf.MaxTrain))
+    }
+
+  /** The `nCells` k-means quantizer trained from the head's `sample`
+    * (or, `full`, from Ivf.build's sample): its centers depend on
+    * (sample, nCells) alone, so every index of the dataset asking for
+    * the same pair shares one Lloyd run. */
+  private[queries] def quantizer(s: org.apache.spark.sql.SparkSession,
+      d: String, nCells: Int, full: Boolean = false): Array[Array[Double]] =
+    Fixtures.memo(s"ann_quantizer/$nCells/${if (full) "full" else "sample"}", d) {
+      val h = headOf(s, d)
+      Ivf.train(if (full) h.full else h.sample, nCells)
+    }
+
+  /** The √N-cell quantizer of the radius and batch indexes. */
+  private def sqrtQuantizer(s: org.apache.spark.sql.SparkSession,
+      d: String): Array[Array[Double]] =
+    quantizer(s, d, batchIvfCells(headOf(s, d).sample.length))
+
+  /** Writes a quantizer's (cell, centroid) table — the table an
+    * oracle replays an assignment from. */
+  private[queries] def writeCentroids(s: org.apache.spark.sql.SparkSession,
+      centers: Array[Array[Double]])(p: String): Unit = {
+    import s.implicits._
+    centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("cell", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(p)
   }
+
+  /** Writes a cell-labeled frame in the at-rest IVF layout. */
+  private def writeCells(indexed: org.apache.spark.sql.DataFrame)(p: String): Unit =
+    indexed.write.mode("overwrite").partitionBy("cell").parquet(p)
 
   private[queries] def corpusWithQuery(e: org.apache.spark.sql.DataFrame) = {
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("q_vec"))
@@ -112,28 +147,16 @@ object AnnQueries {
       .transform(QueryDef.sortSmall(_, col("cell"), col("dim")))
   }
 
-  // the 8-cell corpus codebook (k-means quantizer, fixed seed) that
-  // cluster_assign, sample_diverse and kmeans_step run from: an
-  // ingest-maintained artifact, trained once per (JVM, dataset) and
-  // persisted, so their builds time the assignment pass with the
-  // codebook as a plan literal; their oracles replay the argmin from
-  // the persisted centroids
-  private def codebookPath(d: String): String =
-    Fixtures.tmpPath("graft_codebook", d)
-  private val codebookMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Double]]]()
+  // the 8-cell corpus codebook that cluster_assign, sample_diverse
+  // and kmeans_step run from: their builds carry it as a plan
+  // literal, their oracles replay the argmin from the persisted
+  // centroids
   private def codebookFor(s: org.apache.spark.sql.SparkSession,
-      d: String): Array[Array[Double]] =
-    codebookMemo.computeIfAbsent(d, _ => {
-      val e = Tables.embeddings(s, d)
-      val (_, sample) = headSample(e, 65536)
-      val centers = Ivf.buildFromSample(e, "embedding", nCells = 8, sample)._2
-      import s.implicits._
-      centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(codebookPath(d))
-      centers
-    })
+      d: String): Array[Array[Double]] = {
+    val centers = quantizer(s, d, 8)
+    Fixtures.writeOnce("graft_codebook", d)(writeCentroids(s, centers))
+    centers
+  }
 
   /** DuckDB replay of the codebook assignment: CTE `r` ranks every
     * (vec_id, cell) by squared L2 to the persisted centroid (ties to
@@ -142,7 +165,7 @@ object AnnQueries {
   private def nearestCellSql(d: String): String =
     s"""WITH cents AS (
       |  SELECT cell, centroid
-      |  FROM read_parquet('${codebookPath(d)}/*.parquet')
+      |  FROM read_parquet('${Fixtures.tmpPath("graft_codebook", d)}/*.parquet')
       |), d AS (
       |  SELECT e.vec_id, e.embedding, c.cell,
       |    list_sum(list_transform(range(1, 65),
@@ -154,76 +177,55 @@ object AnnQueries {
       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rk
       |  FROM d)""".stripMargin
 
-  // ann_radius_ivf's index artifacts: the cell-partitioned corpus at
-  // rest + quantizer + per-cell radii, built once per (JVM, dataset)
-  // like any ingest-maintained index, so the build times the pruned
-  // scan
-  private val ivfRadiusIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Double]], Map[Int, Double], Seq[Double])]()
-  private def ivfRadiusIndexFor(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, Array[Array[Double]], Map[Int, Double], Seq[Double]) =
-    ivfRadiusIndexMemo.computeIfAbsent(d, _ => {
-      val e = Tables.embeddings(s, d)
-      val (q, sample) = headSample(e, 65536)
-      val corpus = e.filter(col("vec_id") =!= 0)
-      val (indexed, centers) = Ivf.buildFromSample(corpus, "embedding",
-        nCells = batchIvfCells(sample.length), sample)
-      val idx = graft.CacheScope.track(indexed)
-      val radii = Ivf.cellRadii(idx, centers, "embedding")
-      val p = Fixtures.tmpPath("graft_ivfradius_index", d)
-      idx.write.mode("overwrite").partitionBy("cell").parquet(p)
-      (p, centers, radii, q)
-    })
+  // the index + delta split: vectors with vec_id ≡ 4 (mod 5) arrive
+  // after the base index was built
+  private def isDelta = pmod(col("vec_id"), lit(5)) === 4
+  private def baseRows(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.embeddings(s, d).filter(col("vec_id") =!= 0 && !isDelta)
+  private def deltaRows(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.embeddings(s, d).filter(col("vec_id") =!= 0 && isDelta)
 
-  // ann_delta_search's index artifacts: the cell-partitioned
-  // BASE corpus (vectors indexed at rest) + quantizer + radii — the
-  // main-index half of the index+delta layout; the delta segment is
-  // never part of the artifact (that is the point)
-  private val ivfDeltaIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Double]], Map[Int, Double], Seq[Double])]()
-  private def ivfDeltaIndexFor(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, Array[Array[Double]], Map[Int, Double], Seq[Double]) =
-    ivfDeltaIndexMemo.computeIfAbsent(d, _ => {
-      val e = Tables.embeddings(s, d)
-      val (q, sample) = headSample(e, 65536)
-      val base = e.filter(col("vec_id") =!= 0 &&
-        pmod(col("vec_id"), lit(5)) =!= 4)
-      val (indexed, centers) = Ivf.buildFromSample(base, "embedding",
-        nCells = batchIvfCells(sample.length), sample)
-      val idx = graft.CacheScope.track(indexed)
-      val radii = Ivf.cellRadii(idx, centers, "embedding")
-      val p = Fixtures.tmpPath("graft_ivfdelta_index", d)
-      idx.write.mode("overwrite").partitionBy("cell").parquet(p)
-      (p, centers, radii, q)
-    })
+  /** A radius-searchable index artifact: `rows` cell-partitioned at
+    * rest under the √N quantizer, plus the per-cell angular radii of
+    * the written layout — so the build times the pruned scan. */
+  private type RadiusIndex = (String, Array[Array[Double]], Map[Int, Double])
+  private def radiusIndex(s: org.apache.spark.sql.SparkSession, d: String,
+      prefix: String, rows: org.apache.spark.sql.DataFrame): RadiusIndex =
+    Fixtures.memo(prefix, d) {
+      val centers = sqrtQuantizer(s, d)
+      val p = Fixtures.tmpPath(prefix, d)
+      writeCells(Ivf.assign(rows, "embedding", centers))(p)
+      (p, centers, Ivf.cellRadii(s.read.parquet(p), centers, "embedding"))
+    }
+
+  private[queries] def ivfRadiusIndexFor(s: org.apache.spark.sql.SparkSession,
+      d: String): RadiusIndex = radiusIndex(s, d, "graft_ivfradius_index",
+    Tables.embeddings(s, d).filter(col("vec_id") =!= 0))
+
+  // ann_delta_search's index: the BASE corpus only — the delta
+  // segment is never part of the artifact (that is the point)
+  private[queries] def ivfDeltaIndexFor(s: org.apache.spark.sql.SparkSession,
+      d: String): RadiusIndex =
+    radiusIndex(s, d, "graft_ivfdelta_index", baseRows(s, d))
 
   // ann_stream_search's artifacts: the LSM story driven END TO END by
-  // the REAL streaming runtime — base indexed at rest, the delta
+  // the REAL streaming runtime — ann_delta_search's base (same rows,
+  // same quantizer, so its radii) in its own layout, the delta
   // arriving as file-source micro-batches through
   // VectorStreams.ingest (one Ivf.compact append per batch, commit
   // markers making replay idempotent), radii merged from the delta
-  // alone. Built once per (JVM, dataset) — ingest is an artifact
-  // event, search is the steady-state query. No driver collect
-  // anywhere: the arrival simulation writes the delta as two parquet
-  // files and streams them with maxFilesPerTrigger=1.
-  private val streamSearchMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Double]], Map[Int, Double], Seq[Double])]()
-  private def streamSearchFor(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, Array[Array[Double]], Map[Int, Double], Seq[Double]) =
-    streamSearchMemo.computeIfAbsent(d, _ => {
-      val e = Tables.embeddings(s, d)
-      val (q, sample) = headSample(e, 65536)
-      val base = e.filter(col("vec_id") =!= 0 &&
-        pmod(col("vec_id"), lit(5)) =!= 4)
-      val delta = e.filter(col("vec_id") =!= 0 &&
-        pmod(col("vec_id"), lit(5)) === 4)
-      val (indexed, centers) = Ivf.buildFromSample(base, "embedding",
-        nCells = batchIvfCells(sample.length), sample)
-      val idx = graft.CacheScope.track(indexed)
-      val radii = Ivf.cellRadii(idx, centers, "embedding")
+  // alone. Ingest is an artifact event, search is the steady-state
+  // query. No driver collect anywhere: the arrival simulation writes
+  // the delta as two parquet files and streams them with
+  // maxFilesPerTrigger=1.
+  private[queries] def streamSearchFor(s: org.apache.spark.sql.SparkSession,
+      d: String): RadiusIndex =
+    Fixtures.memo("graft_streamsearch", d) {
+      val (_, centers, radii) = ivfDeltaIndexFor(s, d)
+      val delta = deltaRows(s, d)
       val tmp = Fixtures.tmpPath("graft_streamsearch", d)
       val path = tmp + "/idx"
-      idx.write.mode("overwrite").partitionBy("cell").parquet(path)
+      writeCells(Ivf.assign(baseRows(s, d), "embedding", centers))(path)
       // arrival simulation: two files → two micro-batches
       val arrivals = tmp + "/arrivals"
       delta.repartition(2).write.mode("overwrite").parquet(arrivals)
@@ -234,88 +236,46 @@ object AnnQueries {
       try sq.processAllAvailable() finally sq.stop()
       // statistic maintenance from the delta alone (O(delta) pass)
       val merged = Ivf.cellRadiiMerge(
-        graft.streaming.VectorStreams.cellAssign(delta, centers),
+        Ivf.assign(delta, "embedding", centers),
         centers, "embedding", radii)
-      (path, centers, merged, q)
-    })
+      (path, centers, merged)
+    }
 
-  // ann_ivf / ann_pq / ann_ivfpq index artifacts, built ONCE per
-  // (JVM, dataset) and persisted (cell-partitioned where the index has
-  // cells — the at-rest IVF layout): production maintains codebooks
-  // and the cell assignment / code table beside the vectors, so
-  // retraining them per query execution would measure the ingest
-  // pipeline, not the probe. The recall gate checks the probe over
-  // this index.
-  /** ann_ivf's index before it is persisted: the 16-cell quantizer,
-    * trained from the head sample, and the corpus frame labeled with
-    * cells by its codegen'd assignment pass (unexecuted) — plus the
-    * query vector. */
+  // ann_ivf / ann_batch_ivf / ann_pq / ann_ivfpq index artifacts,
+  // persisted (cell-partitioned where the index has cells — the
+  // at-rest IVF layout): production maintains codebooks and the cell
+  // assignment / code table beside the vectors, so retraining them
+  // per query execution would measure the ingest pipeline, not the
+  // probe. The recall gate checks the probe over this index.
+  /** ann_ivf's index before it is persisted: the corpus labeled with
+    * the 16-cell quantizer's cells (unexecuted) + the centroids. */
   private[graft] def ivfIndexed(s: org.apache.spark.sql.SparkSession,
-      d: String): (org.apache.spark.sql.DataFrame, Array[Array[Double]], Seq[Double]) = {
-    val e = Tables.embeddings(s, d)
-    val (q, sample) = headSample(e, 65536)
-    val (indexed, centers) = Ivf.buildFromSample(
-      e.filter(col("vec_id") =!= 0), "embedding", nCells = 16, sample)
-    (indexed, centers, q)
+      d: String): (org.apache.spark.sql.DataFrame, Array[Array[Double]]) = {
+    val centers = quantizer(s, d, 16)
+    (Ivf.assign(Tables.embeddings(s, d).filter(col("vec_id") =!= 0),
+      "embedding", centers), centers)
   }
-  private val ivfIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Double]], Seq[Double])]()
-  private def ivfIndexFor(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, Array[Array[Double]], Seq[Double]) =
-    ivfIndexMemo.computeIfAbsent(d, _ => {
-      val (indexed, centers, q) = ivfIndexed(s, d)
-      val p = Fixtures.tmpPath("graft_ivf_index", d)
-      indexed.write.mode("overwrite").partitionBy("cell").parquet(p)
-      (p, centers, q)
-    })
 
-  // ann_batch_ivf's index artifact: quantizer + the
-  // cell-partitioned >=10 corpus (its split differs from ann_ivf's)
-  private val ivfBatchIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Double]])]()
-  private def ivfBatchIndexFor(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, Array[Array[Double]]) =
-    ivfBatchIndexMemo.computeIfAbsent(d, _ => {
-      val e = Tables.embeddings(s, d)
-      val (_, sample) = headSample(e, 65536)
-      val (indexed, centers) = Ivf.buildFromSample(
-        e.filter(col("vec_id") >= 10), "embedding",
-        nCells = batchIvfCells(sample.length), sample)
-      val p = Fixtures.tmpPath("graft_ivfbatch_index", d)
-      indexed.write.mode("overwrite").partitionBy("cell").parquet(p)
-      (p, centers)
-    })
+  // ann_batch_ivf's index: the cell-partitioned >=10 corpus (its
+  // split differs from ann_ivf's) under the √N quantizer
+  private[queries] def ivfBatchIndexFor(s: org.apache.spark.sql.SparkSession,
+      d: String): (String, Array[Array[Double]]) = {
+    val centers = sqrtQuantizer(s, d)
+    (Fixtures.writeOnce("graft_ivfbatch_index", d)(writeCells(Ivf.assign(
+      Tables.embeddings(s, d).filter(col("vec_id") >= 10), "embedding",
+      centers))), centers)
+  }
 
-  private val pqIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, graft.ann.Pq.Codebooks, Seq[Double])]()
-  private def pqIndexFor(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, graft.ann.Pq.Codebooks, Seq[Double]) =
-    pqIndexMemo.computeIfAbsent(d, _ => {
-      val e = Tables.embeddings(s, d)
-      val (q, sample) = headSample(e, 2048)
-      val corpus = e.filter(col("vec_id") =!= 0)
-      val cb = Pq.trainFromSample(sample, m = 8, k = 256)
-      val p = Fixtures.tmpPath("graft_pq_index", d)
-      Pq.encode(corpus, "vec_id", "embedding", cb).toDF()
-        .write.mode("overwrite").parquet(p)
-      (p, cb, q)
-    })
-
-  private val ivfpqIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, graft.ann.IvfPq.Index, Seq[Double])]()
+  // ann_ivfpq's code table encodes over ann_ivf's 16-cell index
   private def ivfpqIndexFor(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, graft.ann.IvfPq.Index, Seq[Double]) =
-    ivfpqIndexMemo.computeIfAbsent(d, _ => {
-      val e = Tables.embeddings(s, d)
-      val (q, sample) = headSample(e, 65536)
-      val corpus = e.filter(col("vec_id") =!= 0)
-      val (codes, index) = graft.ann.IvfPq.build(corpus,
-        "vec_id", "embedding", nCells = 16, m = 8, k = 16,
-        coarseSample = sample)
+      d: String): (String, graft.ann.IvfPq.Index) =
+    Fixtures.memo("graft_ivfpq_index", d) {
+      val (codes, index) = graft.ann.IvfPq.build(ivfIndexed(s, d),
+        "vec_id", "embedding", m = 8, k = 16)
       val p = Fixtures.tmpPath("graft_ivfpq_index", d)
-      codes.toDF().write.mode("overwrite").partitionBy("cell").parquet(p)
-      (p, index, q)
-    })
+      writeCells(codes.toDF())(p)
+      (p, index)
+    }
 
   def defs: Map[String, QueryDef] = Map(
     // --- exact cosine top-k vs query vector (TakeOrderedAndProject) ---
@@ -511,7 +471,8 @@ object AnnQueries {
       // probe the persisted cell-partitioned corpus with the quantizer
       // + radii — a partition-pruned scan
       (s, d) => {
-        val (p, centers, radii, q) = ivfRadiusIndexFor(s, d)
+        val (p, centers, radii) = ivfRadiusIndexFor(s, d)
+        val q = headOf(s, d).q
         val probes = Ivf.radiusProbeCells(centers, radii, q, minCos = 0.2)
         graft.ann.Ann.radiusSearch(
           s.read.parquet(p)
@@ -535,15 +496,14 @@ object AnnQueries {
     "ann_delta_search" -> QueryDef.sql(
       // probe the PERSISTED cell-partitioned base + brute-scan the delta
       (s, d) => {
-        val (p, centers, radii, q) = ivfDeltaIndexFor(s, d)
+        val (p, centers, radii) = ivfDeltaIndexFor(s, d)
+        val q = headOf(s, d).q
         val probes = Ivf.radiusProbeCells(centers, radii, q, minCos = 0.2)
-        val delta = Tables.embeddings(s, d).filter(col("vec_id") =!= 0 &&
-          pmod(col("vec_id"), lit(5)) === 4)
         Ann.radiusSearch(
             s.read.parquet(p)
               .filter(col("cell").isin(probes.map(Integer.valueOf): _*)),
             "vec_id", "embedding", typedLit(q), minCos = 0.2)
-          .unionByName(Ann.radiusSearch(delta, "vec_id", "embedding",
+          .unionByName(Ann.radiusSearch(deltaRows(s, d), "vec_id", "embedding",
             typedLit(q), minCos = 0.2))
       },
       radiusOracleSql),
@@ -563,9 +523,9 @@ object AnnQueries {
     // partition-pruned scan. ---
     "ann_stream_search" -> QueryDef.sql(
       (s, d) => {
-        val (p, centers, radii, q) = streamSearchFor(s, d)
+        val (p, centers, radii) = streamSearchFor(s, d)
         Ivf.radiusSearch(s.read.parquet(p), centers, radii,
-            "vec_id", "embedding", q, minCos = 0.2)
+            "vec_id", "embedding", headOf(s, d).q, minCos = 0.2)
           .orderBy("vec_id")
       },
       radiusOracleSql),
@@ -577,9 +537,10 @@ object AnnQueries {
       // probe the persisted cell-partitioned assignment (pruned scan +
       // exact re-rank)
       (s, d) => {
-        val (p, centers, q) = ivfIndexFor(s, d)
+        val (indexed, centers) = ivfIndexed(s, d)
+        val p = Fixtures.writeOnce("graft_ivf_index", d)(writeCells(indexed))
         Ivf.topK(s.read.parquet(p), centers, "vec_id", "embedding",
-          q, k = 10, nProbe = 6)
+          headOf(s, d).q, k = 10, nProbe = 6)
       },
       ORACLE_RECALL,
       (s, d, ann) => recallVerdict(ann,
@@ -596,10 +557,14 @@ object AnnQueries {
       // ADC-scan the persisted code table (code scan + refine re-rank)
       (s, d) => {
         import s.implicits._
-        val (p, cb, q) = pqIndexFor(s, d)
+        val cb = Fixtures.memo("ann_pq_codebooks", d)(Pq.trainFromSample(
+          headOf(s, d).sample.take(2048), m = 8, k = 256))
         val corpus = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
+        val p = Fixtures.writeOnce("graft_pq_index", d)(out =>
+          Pq.encode(corpus, "vec_id", "embedding", cb).toDF()
+            .write.mode("overwrite").parquet(out))
         Pq.topK(s.read.parquet(p).as[graft.ann.Pq.Code], corpus, cb,
-          "vec_id", "embedding", q, k = 10, refine = 100)
+          "vec_id", "embedding", headOf(s, d).q, k = 10, refine = 100)
       },
       ORACLE_RECALL,
       (s, d, ann) => recallVerdict(ann,
@@ -616,7 +581,8 @@ object AnnQueries {
       // partition pruning fires.
       (s, d) => {
         import s.implicits._
-        val (p, index, q) = ivfpqIndexFor(s, d)
+        val (p, index) = ivfpqIndexFor(s, d)
+        val q = headOf(s, d).q
         val probes = graft.ann.IvfPq.probeCells(index, q, nProbe = 6)
         val codes = s.read.parquet(p)
           .filter(col("cell").isin(probes.map(Int.box): _*))

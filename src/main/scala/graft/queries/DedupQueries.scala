@@ -25,11 +25,9 @@ object DedupQueries {
   // dedup-store artifact, written once per (JVM, dataset) by the same
   // native signature expressions — the build times the monitor's two
   // partial-agg passes, not the index rebuild
-  private def lshBandsPath(d: String): String =
-    Fixtures.tmpPath("graft_lsh_bands", d)
   private def lshBandsFor(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    Fixtures.writeOnce(lshBandsPath(d))(p =>
+    Fixtures.writeOnce("graft_lsh_bands", d)(p =>
       Dedup.minhashBandIndex(Tables.documents(s, d), "doc_id", "text",
           k = 3, sigLen = 64, bands = 16)
         .write.mode("overwrite").parquet(p))
@@ -42,31 +40,27 @@ object DedupQueries {
   // ingest) — written once per (JVM, dataset), so the build times the
   // near-dup operator (candidate join + cosine verify), never the
   // quantizer train; the oracle replays from the same table
-  private def embcosCellPath(d: String): String =
-    Fixtures.tmpPath("graft_embcos_cells", d)
   private def embcosCellsFor(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    Fixtures.writeOnce(embcosCellPath(d)) { p =>
-      val embs = Tables.embeddings(s, d)
-      val (_, centers) = graft.ann.Ivf.build(
-        embs, "vec_id", "embedding", nCells = 8)
-      Dedup.cellAssignments(embs, "vec_id", "embedding", centers, nProbe = 3)
-        .write.mode("overwrite").parquet(p)
-    }
-
-  // dedup_incremental_bloom's filter over the base, built once per
-  // (JVM, dataset) — see the query's note
-  private val bloomMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.util.sketch.BloomFilter]()
+    Fixtures.writeOnce("graft_embcos_cells", d)(p =>
+      Dedup.cellAssignments(Tables.embeddings(s, d), "vec_id", "embedding",
+          AnnQueries.quantizer(s, d, 8, full = true), nProbe = 3)
+        .write.mode("overwrite").parquet(p))
 
   // dedup_semantic persists TWO artifacts the oracle replays from:
   // the single-nearest cluster assignment and the quantizer itself
-  // (cell -> centroid), so the centroid-cosine ranking is computed by
-  // DuckDB from the same doubles the Spark plan carries as a literal
-  private def semCellPath(d: String): String =
-    Fixtures.tmpPath("graft_sem_cells", d)
-  private def semCentPath(d: String): String =
-    Fixtures.tmpPath("graft_sem_cents", d)
+  // (cell -> centroid, dedup_embcos' 8 cells), so the centroid-cosine
+  // ranking is computed by DuckDB from the same doubles the Spark plan
+  // carries as a literal; the build times the prune alone
+  private def semIndexFor(s: org.apache.spark.sql.SparkSession,
+      d: String): (String, Array[Array[Double]]) = {
+    val centers = AnnQueries.quantizer(s, d, 8, full = true)
+    Fixtures.writeOnce("graft_sem_cents", d)(AnnQueries.writeCentroids(s, centers))
+    (Fixtures.writeOnce("graft_sem_cells", d)(p =>
+      graft.ann.Ivf.assign(Tables.embeddings(s, d), "embedding", centers)
+        .select("vec_id", "cell").write.mode("overwrite").parquet(p)),
+      centers)
+  }
 
   // dedup_clusters_incremental's base artifacts, built once per (JVM,
   // dataset): the base corpus's component labels — in production the
@@ -77,19 +71,17 @@ object DedupQueries {
   // merge, never base CC or base re-shingling.
   private def baseDocs(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.documents(s, d).filter(pmod(col("doc_id"), lit(3)) =!= 0)
-  private def ccBasePath(d: String): String =
-    Fixtures.tmpPath("graft_ccbase", d)
   private def ccBaseFor(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    Fixtures.writeOnce(ccBasePath(d))(p =>
+    Fixtures.writeOnce("graft_ccbase", d)(p =>
       Dedup.corpusLabels(baseDocs(s, d), "doc_id", "text")
         .write.mode("overwrite").parquet(p))
   private def ccIndexFor(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String) = (
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_ccindex_bands", d))(p =>
+    Fixtures.writeOnce("graft_ccindex_bands", d)(p =>
       Dedup.minhashBandIndex(baseDocs(s, d), "doc_id", "text",
         k = 3, sigLen = 64, bands = 16).write.mode("overwrite").parquet(p)),
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_ccindex_sh", d))(p =>
+    Fixtures.writeOnce("graft_ccindex_sh", d)(p =>
       Dedup.withShingles(baseDocs(s, d), "doc_id", "text", 3)
         .write.mode("overwrite").parquet(p)))
 
@@ -214,7 +206,7 @@ object DedupQueries {
         val docs = Tables.documents(s, d)
         val base = Dedup.baseHashes(
           docs.filter(pmod(col("doc_id"), lit(3)) =!= 0), "text")
-        val bloom = bloomMemo.computeIfAbsent(d, _ =>
+        val bloom = Fixtures.memo("dedup_base_bloom", d)(
           base.stat.bloomFilter(base.columns.head, 8192, 0.01))
         Dedup.incrementalKeepWithBloom(bloom, base,
           docs.filter(pmod(col("doc_id"), lit(3)) === 0), "doc_id", "text")
@@ -383,7 +375,7 @@ object DedupQueries {
         .transform(QueryDef.sortSmall(_, col("band"))),
       d => s"""WITH b AS (
         |  SELECT band, key, count(*) AS sz
-        |  FROM read_parquet('${lshBandsPath(d)}/*.parquet')
+        |  FROM read_parquet('${Fixtures.tmpPath("graft_lsh_bands", d)}/*.parquet')
         |  GROUP BY band, key
         |)
         |SELECT band, count(*) AS n_buckets, max(sz) AS max_size,
@@ -567,7 +559,7 @@ object DedupQueries {
         |  GROUP BY a.doc_id, b.doc_id, sa.n, sb.n
         |  HAVING floor((count(*)::DOUBLE / (sa.n + sb.n - count(*)))*1000000 + 0.5)/1000000 >= 0.8
         |), bl AS (
-        |  SELECT doc_id, cluster FROM read_parquet('${ccBasePath(d)}/*.parquet')
+        |  SELECT doc_id, cluster FROM read_parquet('${Fixtures.tmpPath("graft_ccbase", d)}/*.parquet')
         |), edges AS (
         |  SELECT a, b FROM np UNION ALL SELECT b, a FROM np
         |  UNION ALL SELECT doc_id AS a, cluster AS b FROM bl WHERE doc_id <> cluster
@@ -641,7 +633,7 @@ object DedupQueries {
             Tables.embeddings(s, d), "vec_id", "embedding", minCos = 0.4))
         .orderBy("id_a", "id_b"),
       d => s"""WITH asg AS (
-         |  SELECT vec_id, cell FROM read_parquet('${embcosCellPath(d)}/*.parquet')
+         |  SELECT vec_id, cell FROM read_parquet('${Fixtures.tmpPath("graft_embcos_cells", d)}/*.parquet')
          |), cand AS (
          |  SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
          |  FROM asg x JOIN asg y ON x.cell = y.cell AND x.vec_id < y.vec_id
@@ -664,27 +656,16 @@ object DedupQueries {
     // anti-join) is hash-gated. ---
     "dedup_semantic" -> QueryDef.sqlAt(
       (s, d) => {
-        val p = semCellPath(d)
-        val pc = semCentPath(d)
-        val embs = Tables.embeddings(s, d)
-        val (indexed, centers) = graft.ann.Ivf.build(
-          embs, "vec_id", "embedding", nCells = 8)
-        indexed.select("vec_id", "cell")
-          .write.mode("overwrite").parquet(p)
-        import s.implicits._
-        centers.zipWithIndex
-          .map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(pc)
+        val (cells, centers) = semIndexFor(s, d)
         graft.dedup.SemDedup.pruneFromCells(
-            s.read.parquet(p), embs, "vec_id", "embedding",
-            centers, minCos = 0.4)
+            s.read.parquet(cells), Tables.embeddings(s, d), "vec_id",
+            "embedding", centers, minCos = 0.4)
           .orderBy("vec_id")
       },
       d => s"""WITH asg AS (
-         |  SELECT vec_id, cell FROM read_parquet('${semCellPath(d)}/*.parquet')
+         |  SELECT vec_id, cell FROM read_parquet('${Fixtures.tmpPath("graft_sem_cells", d)}/*.parquet')
          |), cents AS (
-         |  SELECT cell, centroid FROM read_parquet('${semCentPath(d)}/*.parquet')
+         |  SELECT cell, centroid FROM read_parquet('${Fixtures.tmpPath("graft_sem_cents", d)}/*.parquet')
          |), v AS (
          |  SELECT a.vec_id, a.cell,
          |    floor((

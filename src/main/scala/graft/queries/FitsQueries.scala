@@ -15,8 +15,11 @@ import graft.sources.fits.FitsWriter
 object FitsQueries {
 
   private def ordersFits(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_fits_orders", d) + ".fits")(p =>
-      writeOrdersFits(s, d, p))
+    Fixtures.memo("graft_fits_orders", d) {
+      val p = Fixtures.tmpPath("graft_fits_orders", d) + ".fits"
+      writeOrdersFits(s, d, p)
+      p
+    }
 
   private def writeOrdersFits(s: org.apache.spark.sql.SparkSession, d: String,
       path: String): Unit = {

@@ -38,11 +38,11 @@ object Hdf5Queries {
     * write — in production the snapshot pre-exists on disk; the
     * measured operator is the DataSource V2 READ. */
   private def ordersSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_h5_orders", d))(p =>
+    Fixtures.writeOnce("graft_h5_orders", d)(p =>
       writeOrdersSnapshot(s, d, new File(p)))
 
   private def particleSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_h5_part", d))(p =>
+    Fixtures.writeOnce("graft_h5_part", d)(p =>
       writeParticleSnapshot(s, d, new File(p)))
 
   /** Contiguous 0..N-1 row index in o_orderkey order via the scalable
@@ -86,7 +86,7 @@ object Hdf5Queries {
   }
 
   private def mtngSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_h5_mtng", d))(p =>
+    Fixtures.writeOnce("graft_h5_mtng", d)(p =>
       writeMtngSnapshot(s, d, new File(p)))
 
   /** An MTNG-shaped snapshot dir (customs/arepo/MTNG/dataset.py):
@@ -124,7 +124,7 @@ object Hdf5Queries {
   }
 
   private def aurigaSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_h5_auriga", d))(p =>
+    Fixtures.writeOnce("graft_h5_auriga", d)(p =>
       writeAurigaSnapshot(s, d, new File(p)))
 
   /** An Auriga-shaped snapshot: gadget/arepo markers and a
@@ -147,7 +147,7 @@ object Hdf5Queries {
   }
 
   private def lgalaxiesCatalog(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_h5_lgal", d))(p =>
+    Fixtures.writeOnce("graft_h5_lgal", d)(p =>
       writeLgalaxiesCatalog(s, d, new File(p)))
 
   /** The fixed-h LGalaxies hubble factor (lgalaxies.yaml `units: h:
@@ -178,7 +178,7 @@ object Hdf5Queries {
   }
 
   private def catalogSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_h5cat", d))(p =>
+    Fixtures.writeOnce("graft_h5cat", d)(p =>
       writeCatalogSnapshot(s, d, new File(p))) + "/snapdir_042"
 
   /** A TNG-layout snapshot+catalog PAIR: `snapdir_042/snap_042.K.hdf5`

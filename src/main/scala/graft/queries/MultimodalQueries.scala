@@ -170,7 +170,7 @@ object MultimodalQueries {
   }
 
   private def clsBlobsFor(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_mm_cls_png", d))(p =>
+    Fixtures.writeOnce("graft_mm_cls_png", d)(p =>
       synthClassImages(s, d).write.mode("overwrite").parquet(p))
 
   /** pHash grouping over an image frame: hash map-side (the real
@@ -241,7 +241,7 @@ object MultimodalQueries {
   }
 
   private def clsWavBlobsFor(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_mm_cls_wav", d))(p =>
+    Fixtures.writeOnce("graft_mm_cls_wav", d)(p =>
       synthClassWavs(s, d).write.mode("overwrite").parquet(p))
 
   /** Executor-parallel PNG synthesis (fixture generation — dims and
@@ -319,10 +319,10 @@ object MultimodalQueries {
   // stays gated: the fixture's encode must be faithful for the decode
   // hash to match the oracle's prediction.
   private def imgBlobsFor(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_mm_png", d))(p =>
+    Fixtures.writeOnce("graft_mm_png", d)(p =>
       synthImages(s, d).write.mode("overwrite").parquet(p))
 
   private def wavBlobsFor(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_mm_wav", d))(p =>
+    Fixtures.writeOnce("graft_mm_wav", d)(p =>
       synthWavs(s, d).write.mode("overwrite").parquet(p))
 }

@@ -19,7 +19,7 @@ object ScidaQueries {
     * is the scan, not the one-time layout write. */
   private def zOrderedPart(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(Fixtures.writeOnce(Fixtures.tmpPath("graft_zpart", d))(p =>
+    s.read.parquet(Fixtures.writeOnce("graft_zpart", d)(p =>
       Spatial.writeZOrdered(Tables.part(s, d), p,
         Seq(("p_size", 1.0, 51.0), ("p_retailprice", 900.0, 2000.0)),
         numFiles = 16)))
@@ -36,43 +36,34 @@ object ScidaQueries {
     * re-execution of the child. */
   private def sortedLineitem(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(Fixtures.writeOnce(Fixtures.tmpPath("graft_li_sorted", d))(p =>
+    s.read.parquet(Fixtures.writeOnce("graft_li_sorted", d)(p =>
       Tables.lineitem(s, d)
         .repartitionByRange(16, col("l_orderkey"), col("l_linenumber"))
         .sortWithinPartitions("l_orderkey", "l_linenumber")
         .write.mode("overwrite").parquet(p)))
 
-  /** Exact quantile boundaries memoized per (dataset, column) — the
-    * same table-statistic argument as hotKeysOf in RelationalQueries:
-    * quartile boundaries are a property of the DATA, maintained at
-    * ingest beside the table in production, so the query path should
-    * read them, not re-derive them. Without this, every execution of
-    * histogram_equidepth paid ExactQuantiles' range-sort shuffle +
-    * two bounded driver jobs BEFORE the one-pass CASE it exists for. */
-  private val quantileMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Seq[Double]), Seq[Double]]()
-
+  /** Exact quantile boundaries of a table column: a property of the
+    * DATA, maintained at ingest beside the table in production, so the
+    * query path reads them instead of paying ExactQuantiles'
+    * range-sort shuffle + two bounded driver jobs before the one-pass
+    * CASE histogram_equidepth exists for. */
   private def quantilesOf(s: org.apache.spark.sql.SparkSession, d: String,
       table: String, column: String, probs: Seq[Double]): Seq[Double] =
     // probs is part of the key: a caller requesting different
     // quantiles of the same column must not get the first caller's
-    quantileMemo.computeIfAbsent((d + "/" + table, column, probs), _ =>
+    Fixtures.memo(s"quantiles/$table/$column/${probs.mkString(",")}", d)(
       graft.operators.ExactQuantiles.values(
         Tables(s, d, table), column, probs))
 
-  /** Ranked-catalog artifacts for rank_match, memoized per (JVM,
-    * dataset) — the same at-rest-layout argument as the Z-order /
-    * cell-partitioned corpora: abundance matching consumes catalogs
-    * RANKED by their ordering statistic, and a production pipeline
-    * ranks each catalog once per snapshot (PrefixSum's bucketed
-    * two-phase scan — never a global window) and keeps the ranked
-    * table beside the snapshot. The query path then reads + joins. */
-  private val rankTablesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
+  /** Ranked-catalog artifacts for rank_match: abundance matching
+    * consumes catalogs RANKED by their ordering statistic, and a
+    * production pipeline ranks each catalog once per snapshot
+    * (PrefixSum's bucketed two-phase scan — never a global window)
+    * and keeps the ranked table beside the snapshot. The query path
+    * then reads + joins. */
   private def rankTablesFor(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String) =
-    rankTablesMemo.computeIfAbsent(d, _ => {
+    Fixtures.memo("graft_rank_tables", d) {
       def ranked(df: org.apache.spark.sql.DataFrame, id: String,
           cents: org.apache.spark.sql.Column, base: Long) =
         PrefixSum.exclusive(
@@ -96,7 +87,7 @@ object ScidaQueries {
           col("cents").as("gal_cents"))
         .coalesce(1).write.mode("overwrite").parquet(gp)
       (hp, gp)
-    })
+    }
 
   // power_spectrum's engine-shared constants: the k-vector probe list
   // (k_idx, kx, ky, kz) and the N=20 integer-micro trig lookup tables

@@ -18,23 +18,19 @@ object TextQueries {
   final case class DeflateRow(doc_id: Long, n_def: Long)
 
   // trained merges are a corpus artifact (maintained at ingest in
-  // production): memoized per (JVM, dataset dir) like quantilesOf, so
-  // only the first execution pays the TakeOrdered word-count job and
-  // the driver-side merge loop. The same pass persists the per-WORD
-  // token-count table the BPE oracles replay against (bpe_tokens'
-  // protocol), written by the SAME codegen'd expression that
-  // tokenizes the corpus, so any distributed-application
-  // inconsistency hash-fails downstream.
-  private val bpeTokMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.broadcast.Broadcast[graft.functions.BpeTokenizer]]()
-
+  // production), so only the first execution pays the TakeOrdered
+  // word-count job and the driver-side merge loop. The same pass
+  // persists the per-WORD token-count table the BPE oracles replay
+  // against (bpe_tokens' protocol), written by the SAME codegen'd
+  // expression that tokenizes the corpus, so any
+  // distributed-application inconsistency hash-fails downstream.
   private[queries] def bpeVocabPath(d: String): String =
     Fixtures.tmpPath("graft_bpe_vocab", d)
 
   private[queries] def bpeTokenizerFor(s: org.apache.spark.sql.SparkSession,
       d: String)
       : org.apache.spark.broadcast.Broadcast[graft.functions.BpeTokenizer] =
-    bpeTokMemo.computeIfAbsent(d, _ => {
+    Fixtures.memo("graft_bpe_vocab", d) {
       // ONE TakeOrdered job: top-64k words by count (deterministic
       // tiebreak on the word) bound the driver fetch at any corpus
       // size; the merge loop is O(vocab · merges) driver work
@@ -52,7 +48,7 @@ object TextQueries {
           graft.functions.BpeColumns.tokenCount(col("word"), tok).as("n_tokens"))
         .write.mode("overwrite").parquet(bpeVocabPath(d))
       tok
-    })
+    }
 
   /** Per-doc bigram-LM score frame (doc_id, lang, score_micro) —
     * ngram_lm_score's add-one-smoothed corpus LM, reduced to ONE
@@ -89,7 +85,7 @@ object TextQueries {
   // written once per (JVM, dataset)
   private def lmScoredPathFor(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_lm_scored", d))(p =>
+    Fixtures.writeOnce("graft_lm_scored", d)(p =>
       lmScored(s, d).write.mode("overwrite").parquet(p))
 
   // text_compress_ratio's per-doc DEFLATE lengths: a spread map-side
@@ -106,8 +102,6 @@ object TextQueries {
           t.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toLong) }
       .toDF()
   }
-  private def deflatePath(d: String): String =
-    Fixtures.tmpPath("graft_deflate", d)
 
   /** CCNet tercile cut over a per-doc score frame: per-LANGUAGE
     * head/middle/tail at exact interpolated terciles, computed
@@ -289,16 +283,13 @@ object TextQueries {
     (feat, weights)
   }
 
-  // The trained model as a maintained artifact (the bpe_tokens /
-  // boilerplate-set discipline): the 32-row weight table collected
-  // once per (JVM, dataset) — a production quality filter trains
-  // periodically and scores continuously, so logreg_predict rides
-  // the weights as a plan literal.
-  private val logregWMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[Int, Long]]()
+  // The trained model as a maintained artifact: the 32-row weight
+  // table — a production quality filter trains periodically and
+  // scores continuously, so logreg_predict rides the weights as a
+  // plan literal.
   private def logregWeightsFor(s: org.apache.spark.sql.SparkSession,
       d: String): Map[Int, Long] =
-    logregWMemo.computeIfAbsent(d, _ =>
+    Fixtures.memo("logreg_weights", d)(
       logregWeights(s, d)._2.select(col("j"), col("new_w_micro"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
 
@@ -316,20 +307,16 @@ object TextQueries {
   }
 
   // SQL fragments mirroring TextOps, kept adjacent to their uses.
-  // corpus row count as a memoized per-dataset table statistic (the
-  // winsorBoundsOf discipline): a bounded one-column count once per
-  // (JVM, dataset), riding into plans as a literal — at scale this is
-  // catalog metadata, never a per-query job wave
-  private val docCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  // corpus row count as a table statistic riding into plans as a
+  // literal — at scale this is catalog metadata, never a per-query
+  // job wave
   private def docCountOf(s: org.apache.spark.sql.SparkSession,
       d: String): Long =
-    docCountMemo.computeIfAbsent(d, _ => Tables.documents(s, d).count())
+    Fixtures.memo("doc_count", d)(Tables.documents(s, d).count())
 
-  // per-(JVM, dataset) document-frequency dictionary — the
-  // inverted-index statistic a retrieval stack maintains AT REST
-  // beside the corpus (the lshBandsFor / codebook discipline): built
-  // once from the native term-count pass and broadcast. Heaps'-law
+  // the document-frequency dictionary — the inverted-index statistic
+  // a retrieval stack maintains AT REST beside the corpus: built once
+  // from the native term-count pass and broadcast. Heaps'-law
   // sized (vocabulary ≈ √ token stream, not corpus-sized), so the
   // driver collect is bounded and the dictionary stays broadcastable
   // far beyond bench scale; an unbounded vocabulary (opaque IDs)
@@ -342,15 +329,11 @@ object TextQueries {
   // is NOT driver-sized — the limit-probe below turns that from an
   // opaque driver OOM hours in into an immediate, actionable error.
   private[graft] val MaxBroadcastVocab: Int = 1 << 21
-  private val tfidfDfBcMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.broadcast.Broadcast[
-      java.util.HashMap[org.apache.spark.unsafe.types.UTF8String,
-        java.lang.Long]]]()
   private def tfidfDfBcFor(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.broadcast.Broadcast[
         java.util.HashMap[org.apache.spark.unsafe.types.UTF8String,
           java.lang.Long]] =
-    tfidfDfBcMemo.computeIfAbsent(d, _ =>
+    Fixtures.memo("tfidf_df", d)(
       tfidfDfBcGuarded(s, d, MaxBroadcastVocab))
   // guard exposed for the spec: the collect is a LIMIT-PROBE (at most
   // maxVocab+1 rows ever reach the driver, the stripLines probe
@@ -650,7 +633,7 @@ object TextQueries {
       // in-plan; the artifact the oracle replays from is the same
       // helper's output, persisted once per (JVM, dataset)
       (s, d) => {
-        Fixtures.writeOnce(deflatePath(d))(p =>
+        Fixtures.writeOnce("graft_deflate", d)(p =>
           deflateRows(s, d).write.mode("overwrite").parquet(p))
         deflateRows(s, d)
           .join(Tables.documents(s, d).select(col("doc_id"),
@@ -665,7 +648,7 @@ object TextQueries {
         |    *1000000 + 0.5)/1000000 AS ratio,
         |  f.n_def * 100 < strlen(d.text) * 35 AS low_entropy
         |FROM documents d
-        |JOIN read_parquet('${deflatePath(d)}/*.parquet') f
+        |JOIN read_parquet('${Fixtures.tmpPath("graft_deflate", d)}/*.parquet') f
         |  ON f.doc_id = d.doc_id
         |ORDER BY d.doc_id""".stripMargin),
 

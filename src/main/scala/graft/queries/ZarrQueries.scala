@@ -18,7 +18,7 @@ import graft.sources.zarr.ZarrWriter
 object ZarrQueries {
 
   private def ordersStore(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Fixtures.writeOnce(Fixtures.tmpPath("graft_zarr_orders", d))(p =>
+    Fixtures.writeOnce("graft_zarr_orders", d)(p =>
       writeOrdersStore(s, d, new File(p)))
 
   private def writeOrdersStore(s: org.apache.spark.sql.SparkSession, d: String,

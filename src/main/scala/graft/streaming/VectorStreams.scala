@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming vector ingest — the arrival-time half of the LSM index
@@ -18,15 +17,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (append touches only the arriving vectors' cell directories).
   */
 object VectorStreams {
-
-  /** Stateless cell assignment: the same codegen'd argmin pass batch
-    * compaction uses, applied per micro-batch. */
-  def cellAssign(vecs: DataFrame, centers: Array[Array[Double]],
-      vec: String = "embedding"): DataFrame = {
-    val centLit = typedLit(centers.map(_.toSeq).toSeq)
-    vecs.withColumn("cell",
-      call_function("graft_nearest_centroid", col(vec), centLit))
-  }
 
   /** One micro-batch's append, made IDEMPOTENT under replay: Spark's
     * foreachBatch contract is at-least-once (a batch whose append

@@ -49,8 +49,9 @@ class PqSpec extends SparkSpec {
     val embs = graft.sources.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") =!= 0)
     val n = embs.count().toInt
-    val (codes, index) = graft.ann.IvfPq.build(embs, "vec_id", "embedding",
-      nCells = 8, m = 8, k = 16)
+    val (codes, index) = graft.ann.IvfPq.build(
+      graft.ann.Ivf.build(embs, "vec_id", "embedding", nCells = 8),
+      "vec_id", "embedding", m = 8, k = 16)
     val query = graft.sources.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
@@ -65,8 +66,9 @@ class PqSpec extends SparkSpec {
   test("IVF-PQ: bounded probe + bounded refine keeps recall and prunes the scan") {
     val embs = graft.sources.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") =!= 0)
-    val (codes, index) = graft.ann.IvfPq.build(embs, "vec_id", "embedding",
-      nCells = 8, m = 8, k = 16)
+    val (codes, index) = graft.ann.IvfPq.build(
+      graft.ann.Ivf.build(embs, "vec_id", "embedding", nCells = 8),
+      "vec_id", "embedding", m = 8, k = 16)
     val cached = codes.cache()
     val query = graft.sources.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") === 0)

@@ -51,8 +51,9 @@ class ScaleLayoutSpec extends SparkSpec {
     import spark.implicits._
     val embs = graft.sources.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") =!= 0)
-    val (codes, index) = graft.ann.IvfPq.build(embs, "vec_id", "embedding",
-      nCells = 8, m = 8, k = 16)
+    val (codes, index) = graft.ann.IvfPq.build(
+      graft.ann.Ivf.build(embs, "vec_id", "embedding", nCells = 8),
+      "vec_id", "embedding", m = 8, k = 16)
     val base = java.nio.file.Files.createTempDirectory("ivfpq").toString
     // the at-rest layout: one directory per coarse cell
     codes.toDF().write.partitionBy("cell").mode("overwrite").parquet(base)

@@ -69,17 +69,16 @@ class VectorStreamsSpec extends SparkSpec {
     // per-cell membership identical to the stateless batch assignment
     val streamCells = compacted.select(col("vec_id"), col("cell"))
       .as[(Long, Int)].collect().toMap
-    val batchCells = VectorStreams
-      .cellAssign(embs.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("embedding")), centers)
+    val batchCells = Ivf.assign(embs.filter(col("vec_id") =!= 0)
+        .select(col("vec_id"), col("embedding")), "embedding", centers)
       .select(col("vec_id"), col("cell")).as[(Long, Int)].collect().toMap
     assert(streamCells == batchCells,
       "stream and batch assignment must agree vector-for-vector")
 
     // statistic maintenance over the streamed delta keeps pruning
     // lossless (cells here are already typed int by the layout read)
-    val deltaAssigned = VectorStreams.cellAssign(
-      delta.select(col("vec_id"), col("embedding")), centers)
+    val deltaAssigned = Ivf.assign(
+      delta.select(col("vec_id"), col("embedding")), "embedding", centers)
     val merged = Ivf.cellRadiiMerge(deltaAssigned, centers, "embedding", radii)
     val qv = embs.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>"))

@@ -735,15 +735,27 @@ object Dedup {
     * the transitive-closure grouping LSH dedup needs when near-dup
     * is not an equivalence relation (a~b, b~c but not a~c).
     *
-    * Iterative min-label propagation: each round, every node takes
-    * the min of its own label and its neighbors' labels; fixpoint in
-    * O(component diameter) rounds, detected by a changed-count that
-    * hits zero. Each round is one shuffle join + partial-agg min —
-    * nothing driver-side but the loop counter. (At billion-edge
-    * scale the same loop is run with the large-star/small-star edge
-    * rewriting [Kiveris et al., CC in MapReduce]; diameters of
-    * near-dup graphs are tiny, so plain propagation is the right
-    * default.) */
+    * Two paths, one output contract:
+    *
+    *  - the EDGE LIST fits the driver (`driverEdgeLimit`, the usual
+    *    case: a near-dup pair graph is orders of magnitude smaller
+    *    than the corpus): union-find on the driver + one broadcast
+    *    join; the corpus side stays distributed;
+    *  - otherwise, alternating large-star / small-star edge rewriting
+    *    (Kiveris et al., "Connected Components in MapReduce and
+    *    Beyond", SoCC 2014): O(log n) distributed rounds on ANY graph
+    *    shape — min-label propagation would need O(component
+    *    diameter) rounds (a 1e6-node chain pays 1e6 shuffles) — by
+    *    re-rooting edges at neighborhood minima:
+    *     - large-star(u): every neighbor v > u re-attaches to
+    *       m = min(Γ(u) ∪ u);
+    *     - small-star(u): every neighbor v <= u re-attaches to m.
+    *    Each phase is one shuffle (group neighborhoods by node, one
+    *    map-side emit); convergence — the edge set reaching its star-
+    *    graph fixpoint — is detected by an order-invariant fingerprint
+    *    (count + xxhash xor + extrema, one tiny action per round);
+    *    `maxIter` bounds the rounds. DedupClustersSpec proves both
+    *    paths equal on chain/star/random graphs. */
   def connectedComponents(ids: DataFrame, pairs: DataFrame,
       maxIter: Int = 25, driverEdgeLimit: Long = 1L << 20): DataFrame = {
     val idCol = ids.columns.head
@@ -751,13 +763,13 @@ object Dedup {
     // Small-graph fast path: a 0.8-threshold near-dup pair graph is
     // typically orders of magnitude smaller than the corpus, so when
     // the EDGE LIST (not the corpus) fits the driver, classic
-    // union-find + one broadcast join beats N propagation rounds.
+    // union-find + one broadcast join beats any distributed rounds.
     // The corpus side stays distributed either way.
     // limit-probe: fetch at most limit+1 edges in ONE action — if we
     // got <= limit, that IS the complete edge list (a second count +
     // collect pair would re-run the whole candidate pipeline's final
-    // stage); if we got limit+1, fall through to distributed
-    // propagation and never materialize more than that on the driver
+    // stage); if we got limit+1, fall through to the distributed star
+    // rounds and never materialize more than that on the driver
     val probe = ab.limit(
       math.min(driverEdgeLimit, Int.MaxValue - 1L).toInt + 1).collect()
     if (probe.length <= driverEdgeLimit) {
@@ -787,83 +799,10 @@ object Dedup {
         .select(col("id").as(idCol),
           coalesce(col("__cc"), col("id")).as("cluster"))
     }
-    // undirected: propagate both ways
-    val edges = graft.CacheScope.track(ab.union(ab.select(col("b"), col("a"))))
-    var labels = graft.CacheScope.track(
-      ids.select(col(idCol).as("id"), col(idCol).as("cluster")))
-    var prevCkpt: DataFrame = null
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val nbrMin = labels.join(edges, col("id") === col("a"))
-        .groupBy(col("b")).agg(min("cluster").as("nbr_min"))
-      // change detection rides INSIDE the update plan (a label only
-      // changes when a neighbor's min undercuts it), so each round is
-      // ONE action — the sum both materializes the persisted labels
-      // and returns the changed count; the old formulation paid a
-      // second join + count job per round, a whole extra pass over
-      // the labels at scale
-      // localCheckpoint (eager) both materializes the round AND
-      // truncates lineage — the join references `labels` twice, so an
-      // un-truncated logical tree doubles per round and the analyzer
-      // cost alone goes exponential on high-diameter graphs
-      val next = labels.join(nbrMin, col("id") === col("b"), "left")
-        .select(col("id"),
-          least(col("cluster"), coalesce(col("nbr_min"), col("cluster")))
-            .as("cluster"),
-          (col("nbr_min").isNotNull && col("nbr_min") < col("cluster"))
-            .as("__chg"))
-        .localCheckpoint(true)
-      changed = next.agg(coalesce(sum(when(col("__chg"), 1L).otherwise(0L)),
-        lit(0L))).head.getLong(0)
-      // round N's checkpoint blocks are dead once round N+1 has
-      // materialized from them — unpersist eagerly instead of letting
-      // maxIter rounds of checkpoint storage pile up on executors
-      if (prevCkpt != null) unpersistCheckpoint(prevCkpt)
-      prevCkpt = next
-      labels = next.select(col("id"), col("cluster"))
-      i += 1
-    }
-    require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
-    labels.select(col("id").as(idCol), col("cluster"))
-  }
-
-  /** Release the cached blocks behind a `localCheckpoint(true)`d frame
-    * whose data no other live plan references. localCheckpoint swaps
-    * the logical plan for a LogicalRDD over a persisted RDD; the RDD
-    * outlives the round otherwise (until GC), so iterative algorithms
-    * must drop round N's blocks once round N+1 is materialized. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** Connected components via alternating large-star / small-star
-    * edge rewriting (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC 2014) — the billion-edge upgrade of
-    * `connectedComponents`' min-label propagation: propagation needs
-    * O(component diameter) rounds (a 1e6-node chain pays 1e6
-    * shuffles), star rewriting converges in O(log n) rounds on ANY
-    * graph shape by re-rooting edges at neighborhood minima:
-    *
-    *  - large-star(u): every neighbor v > u re-attaches to
-    *    m = min(Γ(u) ∪ u);
-    *  - small-star(u): every neighbor v <= u re-attaches to m.
-    *
-    * Each phase is one shuffle (group neighborhoods by node, one
-    * map-side emit); convergence — the edge set reaching its star-
-    * graph fixpoint — is detected by an order-invariant fingerprint
-    * (count + xxhash sum + extrema, one tiny action per round).
-    * Output contract matches `connectedComponents`: every id labeled
-    * with its component's MINIMUM id (equivalence proven in
-    * DedupClustersSpec on chain/star/random graphs). */
-  def connectedComponentsStar(ids: DataFrame, pairs: DataFrame,
-      maxIter: Int = 25): DataFrame = {
-    val idCol = ids.columns.head
+    // distributed: large-star / small-star rounds over the undirected,
+    // deduplicated edge set (each edge stored once as (min, max))
     var edges = graft.CacheScope.track(
-      pairs.toDF("a", "b").filter(col("a") =!= col("b"))
+      ab.filter(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("a"),
           greatest(col("a"), col("b")).as("b"))
         .distinct())
@@ -929,13 +868,25 @@ object Dedup {
       edges = next
       i += 1
     }
-    require(stable, s"connectedComponentsStar did not converge in $maxIter rounds")
+    require(stable, s"connectedComponents did not converge in $maxIter rounds")
     // converged: every edge is (component-min root, member)
     val labels = edges.groupBy(col("b").as("id")).agg(min(col("a")).as("__cc"))
     ids.select(col(idCol).as("id"))
       .join(labels, Seq("id"), "left")
       .select(col("id").as(idCol), coalesce(col("__cc"), col("id")).as("cluster"))
   }
+
+  /** Release the cached blocks behind a `localCheckpoint(true)`d frame
+    * whose data no other live plan references. localCheckpoint swaps
+    * the logical plan for a LogicalRDD over a persisted RDD; the RDD
+    * outlives the round otherwise (until GC), so iterative algorithms
+    * must drop round N's blocks once round N+1 is materialized. */
+  private def unpersistCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 
   /** Substring-level exact dedup: the MAXIMAL word-token spans of
     * length >= k that occur in at least two distinct documents — the

@@ -229,13 +229,13 @@ final class GraftDataset private (
   /** Persist the dataset — scida save() (interface.py:273). Parquet
     * is the 100 TB at-rest format (Spark-native distributed write);
     * zarr mirrors scida's own save target via the executor-parallel
-    * ZarrSave (requires a contiguous 0-based row index column, e.g.
-    * the `row_id` every graft ingestion source emits). */
+    * `ZarrWriter.save` (requires a contiguous 0-based row index
+    * column, e.g. the `row_id` every graft ingestion source emits). */
   def save(path: String): Unit =
     df.write.mode("overwrite").parquet(path)
 
   def saveZarr(path: String, idCol: String, chunkRows: Int = 1 << 16): Unit =
-    graft.sources.zarr.ZarrSave.save(df, idCol, path, chunkRows)
+    graft.sources.zarr.ZarrWriter.save(df, idCol, path, chunkRows)
 
   /** Recursive namespace-tree visitor — scida `walk_container`
     * (reference: src/scida/fields.py:777, exercised by

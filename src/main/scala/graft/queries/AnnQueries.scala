@@ -877,15 +877,10 @@ object AnnQueries {
     // (spec additionally measures candidate-set pruning) ---
     "ann_lsh" -> QueryDef.sql(
       (s, d) => {
-        val spark = s
-        val e = Tables.embeddings(spark, d)
-        // the query vector as plain doubles (tiny driver fetch of ONE
-        // row — the query itself, not corpus data)
-        val q = e.filter(col("vec_id") === 0).select("embedding")
-          .head().getSeq[Float](0).map(_.toDouble)
+        val e = Tables.embeddings(s, d)
         recallVerdict(
           Ann.lshTopK(e.filter(col("vec_id") =!= 0), "vec_id", "embedding",
-            q, k = 10, dims = 64, tables = 4, planes = 4),
+            headOf(s, d).q, k = 10, dims = 64, tables = 4, planes = 4),
           corpusWithQuery(e), minHits = 3)
       },
       ORACLE_RECALL)

@@ -439,10 +439,10 @@ object DedupQueries {
     // --- transitive near-dup clusters: connected components over the
     // MinHash-LSH pair graph (min reachable doc id = cluster id).
     // Near-dup is not transitive, so keep-lists need the closure; the
-    // Spark side is iterative min-label propagation (one shuffle per
-    // round, O(diameter) rounds), the oracle a DuckDB RECURSIVE CTE
-    // over the exact-Jaccard pair graph — LSH dropping a true pair or
-    // the propagation under-converging both hash-fail. ---
+    // Spark side is Dedup.connectedComponents (driver union-find over
+    // the pair list, large-star/small-star rounds past its edge
+    // limit), the oracle a DuckDB RECURSIVE CTE over the exact-Jaccard
+    // pair graph — LSH dropping a true pair hash-fails. ---
     "dedup_clusters" -> QueryDef.sql(
       (s, d) => {
         val docs = Tables.documents(s, d)

@@ -676,9 +676,9 @@ object Load {
   /** Format conversion — scida `utilities.py:10 copy_to_zarr`
     * (Dataset(fp_in).save(fp_out) with a zarr target): read any
     * supported dataset and rewrite it as a zarr store via the
-    * executor-parallel ZarrSave (chunk files written straight from
-    * the partitions carrying those rows — nothing flows through the
-    * driver). Header metadata rides to the store root so the copy
+    * executor-parallel `ZarrWriter.save` (chunk files written straight
+    * from the partitions carrying those rows — nothing flows through
+    * the driver). Header metadata rides to the store root so the copy
     * re-detects its family/cosmology on load exactly like the
     * original (`flavor`/`dataset` read zarr root attrs). Requires a
     * row-indexed source (hdf5/zarr/fits — every graft ingestion
@@ -686,15 +686,10 @@ object Load {
   def copyToZarr(spark: SparkSession, inPath: String, outPath: String,
       group: String = "", chunkRows: Int = 1 << 16,
       compress: Boolean = true): Unit = {
-    val df = dataFrame(spark, inPath, group)
-    require(df.columns.contains("row_id"),
-      s"copyToZarr needs a row-indexed source (hdf5/zarr/fits), got ${detect(inPath)}")
-    val rootAttrs = attrsOf(detect(inPath), inPath)
-      .flatMap(_.get("/Header")).getOrElse(Map.empty)
-    graft.sources.zarr.ZarrSave.save(df, "row_id", outPath, chunkRows,
+    val (df, header) = rowIndexedSource(spark, inPath, group, "copyToZarr")
+    graft.sources.zarr.ZarrWriter.save(df, "row_id", outPath, chunkRows,
       compress,
-      attrs = if (rootAttrs.isEmpty) Map.empty
-        else Map("/" -> rootAttrs))
+      attrs = if (header.isEmpty) Map.empty else Map("/" -> header))
   }
 
   /** The reverse conversion — zarr (or any row-indexed source) →
@@ -709,18 +704,25 @@ object Load {
   def copyToHdf5(spark: SparkSession, inPath: String, outPath: String,
       group: String = "", chunkRows: Int = 1 << 16,
       cols: Seq[String] = Nil, hdf5Group: String = "PartType0"): Unit = {
-    val df0 = dataFrame(spark, inPath, group)
-    require(df0.columns.contains("row_id"),
-      s"copyToHdf5 needs a row-indexed source (hdf5/zarr/fits), got ${detect(inPath)}")
+    val (df0, header) = rowIndexedSource(spark, inPath, group, "copyToHdf5")
     val df = if (cols.isEmpty) df0
       else df0.select("row_id", cols: _*)
-    val rootAttrs = attrsOf(detect(inPath), inPath)
-      .flatMap(_.get("/Header")).orElse(
-        attrsOf(detect(inPath), inPath).flatMap(_.get("/")))
-      .getOrElse(Map.empty)
     graft.sources.hdf5.Hdf5Save.save(df, "row_id", outPath,
       group = hdf5Group, chunkRows = chunkRows,
-      headerAttrs = rootAttrs.toSeq)
+      headerAttrs = header.toSeq)
+  }
+
+  /** A conversion's source: its row-indexed frame and its header
+    * attrs (`/Header`, else the root group's, else none). */
+  private def rowIndexedSource(spark: SparkSession, inPath: String,
+      group: String, op: String): (DataFrame, Map[String, Any]) = {
+    val df = dataFrame(spark, inPath, group)
+    val fmt = detect(inPath)
+    require(df.columns.contains("row_id"),
+      s"$op needs a row-indexed source (hdf5/zarr/fits), got $fmt")
+    val attrs = attrsOf(fmt, inPath)
+    (df, attrs.flatMap(_.get("/Header")).orElse(attrs.flatMap(_.get("/")))
+      .getOrElse(Map.empty))
   }
 
   private def attrsOf(fmt: Format, path: String,

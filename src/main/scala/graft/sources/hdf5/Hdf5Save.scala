@@ -2,8 +2,7 @@ package graft.sources.hdf5
 
 import java.io.File
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import graft.sources.ChunkedSave
 
 /** DISTRIBUTED chunked-HDF5 snapshot save — the write-back scida
   * performs through dask (reference: src/scida/interface.py:273
@@ -14,14 +13,14 @@ import org.apache.spark.sql.types._
   * NumFilesPerSnapshot, caller attrs) and one dataset per column under
   * the particle group.
   *
-  * Scale shape mirrors ZarrSave: rows are repartitioned by chunk id
-  * (every chunk's rows land in one task), executors write their chunk
-  * files IN PARALLEL into the shared directory, and — unlike zarr —
-  * the driver writes NOTHING: the chunked-HDF5 layout has no
-  * store-level metadata, every chunk carries its own header, so the
-  * write has no serial driver tail at all. Gaps or duplicates in the
-  * row index fail loudly rather than writing a silently misaligned
-  * snapshot.
+  * Scale shape is `ChunkedSave`'s (shared with `ZarrWriter.save`):
+  * rows are repartitioned by chunk id (every chunk's rows land in one
+  * task), executors write their chunk files IN PARALLEL into the
+  * shared directory, and — unlike zarr — the driver writes NOTHING:
+  * the chunked-HDF5 layout has no store-level metadata, every chunk
+  * carries its own header, so the write has no serial driver tail at
+  * all. Gaps or duplicates in the row index, and nulls, fail loudly
+  * rather than writing a silently misaligned snapshot.
   *
   * Limits inherited from the fixture-grade writer (`Hdf5Writer`,
   * one SNOD per group): at most 8 datasets per group — enough for
@@ -39,22 +38,10 @@ object Hdf5Save {
       filePrefix: String = "snap",
       headerAttrs: Seq[(String, Any)] = Nil,
       extraGroups: Seq[(String, Seq[(String, Any)])] = Nil): Unit = {
-    require(chunkRows > 0)
-    val dataCols = df.schema.fields.filter(_.name != idCol)
-    require(dataCols.nonEmpty, "no data columns to save")
-    require(dataCols.length <= 8,
-      s"Hdf5Save writes at most 8 datasets per group (one SNOD); " +
-        s"got ${dataCols.length}")
-    dataCols.foreach(f => require(Seq(DoubleType, FloatType, LongType,
-      IntegerType).contains(f.dataType),
-      s"hdf5 save: unsupported column type ${f.dataType} of ${f.name}"))
-
-    val Row0 = df.agg(count(lit(1)).as("n"), max(col(idCol)).as("mx")).head()
-    val rows = Row0.getLong(0)
-    require(rows > 0, "empty frame")
-    require(Row0.get(1).toString.toLong == rows - 1,
-      s"row index must be contiguous 0..${rows - 1} (max=${Row0.get(1)})")
-    val nChunks = ((rows + chunkRows - 1) / chunkRows).toInt
+    val nCols = df.columns.count(_ != idCol)
+    require(nCols <= 8,
+      s"Hdf5Save writes at most 8 datasets per group (one SNOD); got $nCols")
+    val p = ChunkedSave.plan(df, idCol, chunkRows, "hdf5 save")
 
     // Atomic-ish publish: executors write chunk files into a fresh
     // temp sibling directory; only after the whole job SUCCEEDS are
@@ -70,96 +57,30 @@ object Hdf5Save {
       out.getName + ".__hdf5tmp-" + java.util.UUID.randomUUID().toString.take(8))
     require(tmp.mkdirs(), s"cannot create temp write dir $tmp")
 
-    val names = dataCols.map(_.name)
-    val kinds: Array[Int] = dataCols.map(_.dataType match {
-      case DoubleType => 0; case FloatType => 1
-      case LongType => 2; case IntegerType => 3
-    })
-    val cr = chunkRows
-    val totalRows = rows
-    val gName = group
-    val prefix = filePrefix
+    val names = p.cols.map(_.name)
+    val nChunks = p.nChunks
     val outPath = tmp.getPath
-    val hAttrs = headerAttrs
-    val xGroups = extraGroups
 
-    try df.select((col(idCol).cast("long").as("__id")) +: names.map(col): _*)
-      .withColumn("__chunk", expr(s"__id div $cr"))
-      .repartition(col("__chunk"))
-      .sortWithinPartitions("__id")
-      .queryExecution.toRdd
-      .foreachPartition { it =>
-        var curChunk = -1L
-        var filled = 0
-        var d64: Array[Array[Double]] = null
-        var f32: Array[Array[Float]] = null
-        var i64: Array[Array[Long]] = null
-        var i32: Array[Array[Int]] = null
-        def alloc(n: Int): Unit = {
-          d64 = Array.tabulate(kinds.length)(ci =>
-            if (kinds(ci) == 0) new Array[Double](n) else null)
-          f32 = Array.tabulate(kinds.length)(ci =>
-            if (kinds(ci) == 1) new Array[Float](n) else null)
-          i64 = Array.tabulate(kinds.length)(ci =>
-            if (kinds(ci) == 2) new Array[Long](n) else null)
-          i32 = Array.tabulate(kinds.length)(ci =>
-            if (kinds(ci) == 3) new Array[Int](n) else null)
-        }
-        def flush(): Unit = if (curChunk >= 0) {
-          val expect = math.min(cr.toLong, totalRows - curChunk * cr).toInt
-          require(filled == expect, s"chunk $curChunk has $filled rows, " +
-            s"expected $expect — row index has gaps/dups")
-          val children: Seq[(String, Hdf5Writer.Node)] =
-            names.indices.map { ci =>
-              val node: Hdf5Writer.Node = kinds(ci) match {
-                case 0 => Hdf5Writer.F64(d64(ci))
-                case 1 => Hdf5Writer.F32(f32(ci))
-                case 2 => Hdf5Writer.I64(i64(ci))
-                case 3 => Hdf5Writer.I32(i32(ci))
-              }
-              names(ci) -> node
-            }.toSeq
-          val root = Hdf5Writer.Group(children = Seq(
-            "Header" -> Hdf5Writer.Group(attrs = hAttrs ++ Seq(
-              "NumPart_ThisFile" ->
-                Array(filled.toLong, 0L, 0L, 0L, 0L, 0L),
-              "NumFilesPerSnapshot" -> nChunks.toLong))) ++
-            xGroups.map { case (n, as) =>
-              n -> (Hdf5Writer.Group(attrs = as): Hdf5Writer.Node) } ++ Seq(
-            gName -> Hdf5Writer.Group(children = children)))
-          Hdf5Writer.write(s"$outPath/$prefix.$curChunk.hdf5", root)
-          curChunk = -1; filled = 0
-        }
-        while (it.hasNext) {
-          val row = it.next()
-          val id = row.getLong(0)
-          val chunk = id / cr
-          if (chunk != curChunk) {
-            flush()
-            curChunk = chunk
-            alloc(math.min(cr.toLong, totalRows - chunk * cr).toInt)
+    try p.run { c =>
+      val children: Seq[(String, Hdf5Writer.Node)] =
+        names.indices.map { ci =>
+          val node: Hdf5Writer.Node = c.cols(ci) match {
+            case d: Array[Double] => Hdf5Writer.F64(d)
+            case f: Array[Float] => Hdf5Writer.F32(f)
+            case l: Array[Long] => Hdf5Writer.I64(l)
+            case i: Array[Int] => Hdf5Writer.I32(i)
           }
-          val j = (id - chunk * cr).toInt
-          require(j == filled, s"row $id out of order within chunk $chunk")
-          var ci = 0
-          while (ci < kinds.length) {
-            // HDF5 numeric datasets have no null representation, and a
-            // null read through an InternalRow getter is silent garbage
-            require(!row.isNullAt(ci + 1),
-              s"null in column ${names(ci)} at row $id — hdf5 save " +
-                "requires non-null numeric columns (fill or filter first)")
-            kinds(ci) match {
-              case 0 => d64(ci)(j) = row.getDouble(ci + 1)
-              case 1 => f32(ci)(j) = row.getFloat(ci + 1)
-              case 2 => i64(ci)(j) = row.getLong(ci + 1)
-              case 3 => i32(ci)(j) = row.getInt(ci + 1)
-            }
-            ci += 1
-          }
-          filled += 1
-        }
-        flush()
-      }
+          names(ci) -> node
+        }.toSeq
+      val root = Hdf5Writer.Group(children = Seq(
+        "Header" -> Hdf5Writer.Group(attrs = headerAttrs ++ Seq(
+          "NumPart_ThisFile" -> Array(c.rows.toLong, 0L, 0L, 0L, 0L, 0L),
+          "NumFilesPerSnapshot" -> nChunks.toLong))) ++
+        extraGroups.map { case (n, as) =>
+          n -> (Hdf5Writer.Group(attrs = as): Hdf5Writer.Node) } ++ Seq(
+        group -> Hdf5Writer.Group(children = children)))
+      Hdf5Writer.write(s"$outPath/$filePrefix.${c.index}.hdf5", root)
+    }
     catch { case e: Throwable =>
       // failed job: remove the temp dir, leave the previous snapshot
       tmp.listFiles().foreach(_.delete())

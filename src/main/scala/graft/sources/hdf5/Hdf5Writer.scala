@@ -220,7 +220,7 @@ object Hdf5Writer {
         math.min(chunkBytes, d.n * d.elemSize - off))
       var bytes = full
       if (c.shuffle) bytes = shuffleBytes(bytes, d.elemSize)
-      if (c.gzip) bytes = deflate(bytes)
+      if (c.gzip) bytes = graft.sources.ChunkedSave.deflate(bytes, 4)
       val addr = buf.alloc(bytes.length)
       buf.at(addr, bytes.length).put(bytes)
       (k.toLong * c.chunkRows, addr, bytes.length)
@@ -281,16 +281,6 @@ object Hdf5Writer {
       b.putInt(0) // pad to 8 (odd value count)
     }
     Some(b.array())
-  }
-
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(4)
-    d.setInput(data); d.finish()
-    val out = new java.io.ByteArrayOutputStream()
-    val tmp = new Array[Byte](8192)
-    while (!d.finished()) out.write(tmp, 0, d.deflate(tmp))
-    d.end()
-    out.toByteArray
   }
 
   private def shuffleBytes(data: Array[Byte], elemSize: Int): Array[Byte] = {

@@ -51,8 +51,8 @@ object ZarrStore {
     * an EXISTING, NON-EMPTY target must already be a zarr group/array
     * (.zgroup or .zarray present); an empty dir or a fresh path is
     * fine. A regular-file target is always an error (zarr stores are
-    * directories). Shared by ZarrSave (distributed) and ZarrWriter
-    * (driver-side). */
+    * directories). Checked by both ZarrWriter entry points (`write`,
+    * driver-side; `save`, distributed). */
   def assertSaveTarget(root: File): Unit = {
     if (!root.exists()) return
     require(root.isDirectory,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import graft.dedup.Dedup
 
 /** Connected components over near-dup pairs — transitive closure
@@ -105,20 +106,24 @@ class DedupClustersSpec extends SparkSpec {
   }
 
   test("large-star/small-star matches union-find on chain, star, and random graphs") {
-    // chain of 200 (diameter 199): propagation would need ~200 rounds,
-    // star rewriting must land the SAME labels within its default 25
+    // driverEdgeLimit = 0 forces the distributed star rounds; the
+    // default limit takes the driver union-find fast path
+    def dist(ids: DataFrame, pairs: DataFrame) =
+      Dedup.connectedComponents(ids, pairs, driverEdgeLimit = 0L)
+        .as[(Long, Long)].collect().toMap
+    def fast(ids: DataFrame, pairs: DataFrame) =
+      Dedup.connectedComponents(ids, pairs).as[(Long, Long)].collect().toMap
+    // chain of 200 (diameter 199): min-label propagation would need
+    // ~200 rounds, star rewriting must land the SAME labels within its
+    // default 25
     val chainIds = (1L to 200L).toDF("doc_id")
     val chain = (1L until 200L).map(i => (i, i + 1)).toDF("a", "b")
-    val want = Dedup.connectedComponents(chainIds, chain)
-      .as[(Long, Long)].collect().toMap
-    val got = Dedup.connectedComponentsStar(chainIds, chain)
-      .as[(Long, Long)].collect().toMap
-    assert(got == want && got.values.toSet == Set(1L))
+    val got = dist(chainIds, chain)
+    assert(got == fast(chainIds, chain) && got.values.toSet == Set(1L))
     // star graph rooted at a high id (asymmetry check)
     val starIds = (1L to 12L).toDF("doc_id")
     val star = (1L to 11L).map(i => (12L, i)).toDF("a", "b")
-    assert(Dedup.connectedComponentsStar(starIds, star)
-      .as[(Long, Long)].collect().toMap.values.toSet == Set(1L))
+    assert(dist(starIds, star).values.toSet == Set(1L))
     // deterministic pseudo-random pairs over 300 ids: several
     // components of irregular shape; exact match vs union-find
     val rIds = (0L until 300L).toDF("doc_id")
@@ -126,18 +131,13 @@ class DedupClustersSpec extends SparkSpec {
       val h = i * 2654435761L
       ((h % 300 + 300) % 300, (h / 300 % 300 + 300) % 300)
     }.filter(p => p._1 != p._2).toDF("a", "b")
-    val wantR = Dedup.connectedComponents(rIds, rnd)
-      .as[(Long, Long)].collect().toMap
-    val gotR = Dedup.connectedComponentsStar(rIds, rnd)
-      .as[(Long, Long)].collect().toMap
-    assert(gotR == wantR)
+    assert(dist(rIds, rnd) == fast(rIds, rnd))
     // empty pair set: all singletons
-    assert(Dedup.connectedComponentsStar(
-      (1L to 3L).toDF("doc_id"), Seq.empty[(Long, Long)].toDF("a", "b"))
-      .as[(Long, Long)].collect().toMap == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+    assert(dist((1L to 3L).toDF("doc_id"), Seq.empty[(Long, Long)].toDF("a", "b"))
+      == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
   }
 
-  test("distributed propagation path matches the union-find fast path") {
+  test("distributed star path matches the union-find fast path") {
     val ids = (1L to 9L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (6L, 7L), (8L, 9L), (7L, 9L))
       .toDF("a", "b")

@@ -3,11 +3,13 @@ package graft
 import java.io.File
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.zarr.{ZarrSave, ZarrStore}
+import graft.sources.zarr.{ZarrStore, ZarrWriter}
 
-/** Distributed zarr save — scida save() (interface.py:273) with
-  * executor-parallel chunk writes: chunk-aligned repartition, each
-  * task writes its chunks' files directly.
+/** Distributed zarr save (`ZarrWriter.save`) — scida save()
+  * (interface.py:273) with executor-parallel chunk writes:
+  * chunk-aligned repartition, each task writes its chunks' files
+  * directly, through the same encoder as the driver-side
+  * `ZarrWriter.write`.
   */
 class ZarrSaveSpec extends SparkSpec {
   import spark.implicits._
@@ -21,7 +23,7 @@ class ZarrSaveSpec extends SparkSpec {
       col("id").cast("int").as("i"),
       (col("id") * 1.5).cast("double").as("d"),
       (col("id") * 0.5).cast("float").as("f"))
-    ZarrSave.save(df, "id", dir, chunkRows = 7,
+    ZarrWriter.save(df, "id", dir, chunkRows = 7,
       attrs = Map("/" -> Map("Redshift" -> 1.0), "/d" -> Map("unit" -> "Msun")))
     // store shape: 4 chunks (7,7,7,4), zlib-compressed, attrs present
     val st = ZarrStore.open(dir)
@@ -130,10 +132,41 @@ class ZarrSaveSpec extends SparkSpec {
   test("non-contiguous or duplicated row index fails loudly") {
     val dir = Files.createTempDirectory("graft_zsave_bad").toString + "/s"
     val gap = Seq((0L, 1.0), (2L, 2.0)).toDF("id", "v") // id 1 missing
-    intercept[Exception](ZarrSave.save(gap, "id", dir, chunkRows = 2))
+    intercept[Exception](ZarrWriter.save(gap, "id", dir, chunkRows = 2))
     val dup = Seq((0L, 1.0), (1L, 2.0), (1L, 3.0)).toDF("id", "v")
     val dir2 = Files.createTempDirectory("graft_zsave_bad2").toString + "/s"
-    intercept[Exception](ZarrSave.save(dup, "id", dir2, chunkRows = 2))
+    intercept[Exception](ZarrWriter.save(dup, "id", dir2, chunkRows = 2))
+  }
+
+  test("null values fail loudly (zarr numerics have no null representation)") {
+    val df = spark.range(10).select(col("id"),
+      when(col("id") === 5, null).otherwise(col("id").cast("double")).as("v"))
+    val e = intercept[Exception](ZarrWriter.save(df, "id",
+      Files.createTempDirectory("graft_zsave_null").toString + "/s"))
+    assert(e.getMessage.contains("null in column"))
+  }
+
+  test("distributed save and driver write emit byte-identical arrays") {
+    // 23 rows at chunkRows 5: four full chunks and a 3-row edge chunk
+    val n = 23
+    val base = Files.createTempDirectory("graft_zsave_same").toString
+    val l = Array.tabulate(n)(k => k * 7L - 40)
+    val i = Array.tabulate(n)(k => k * 3 - 11)
+    val d = Array.tabulate(n)(k => k / 3.0 - 2.5)
+    val f = Array.tabulate(n)(k => k * 0.25f)
+    ZarrWriter.write(s"$base/driver", Seq("l" -> ZarrWriter.I64(l),
+      "i" -> ZarrWriter.I32(i), "d" -> ZarrWriter.F64(d),
+      "f" -> ZarrWriter.F32(f)), chunkRows = 5)
+    val df = (0 until n).map(k => (k.toLong, l(k), i(k), d(k), f(k)))
+      .toDF("id", "l", "i", "d", "f").repartition(3)
+    ZarrWriter.save(df, "id", s"$base/dist", chunkRows = 5)
+    for (a <- Seq("l", "i", "d", "f")) {
+      def files(root: String) = new File(s"$root/$a").listFiles()
+        .map(x => x.getName -> Files.readAllBytes(x.toPath).toSeq).toMap
+      val (drv, dst) = (files(s"$base/driver"), files(s"$base/dist"))
+      assert(drv.keySet == Set(".zarray", "0", "1", "2", "3", "4"), a)
+      assert(drv == dst, a)
+    }
   }
 
   test("round-trips a real table partition-parallel") {
@@ -146,7 +179,7 @@ class ZarrSaveSpec extends SparkSpec {
     // derive a contiguous index via coalesce(1) ordering for the test
     val indexed = li.drop("rid").coalesce(1)
       .withColumn("rid", monotonically_increasing_id())
-    ZarrSave.save(indexed, "rid", dir, chunkRows = 1000)
+    ZarrWriter.save(indexed, "rid", dir, chunkRows = 1000)
     val back = spark.read.format("graft-zarr").load(dir)
     assert(back.rdd.getNumPartitions > 1) // chunk-aligned read parallelism
     val sums = back.agg(
@@ -164,32 +197,31 @@ class ZarrSaveSpec extends SparkSpec {
     val notZarr = new File(base, "mydir"); notZarr.mkdirs()
     Files.writeString(new File(notZarr, "important.txt").toPath, "data")
     val e = intercept[IllegalArgumentException] {
-      ZarrSave.save(df, "id", notZarr.getPath)
+      ZarrWriter.save(df, "id", notZarr.getPath)
     }
     assert(e.getMessage.contains("is not a zarr group"))
     assert(Files.readString(new File(notZarr, "important.txt").toPath) == "data")
 
     // allows an empty directory
     val empty = new File(base, "emptydir"); empty.mkdirs()
-    ZarrSave.save(df, "id", empty.getPath)
+    ZarrWriter.save(df, "id", empty.getPath)
     assert(new File(empty, ".zgroup").exists())
 
     // allows overwriting an existing zarr group
-    ZarrSave.save(df, "id", empty.getPath)
+    ZarrWriter.save(df, "id", empty.getPath)
     assert(spark.read.format("graft-zarr").load(empty.getPath).count() == 5)
 
     // a regular-file target is a clear error, not an NPE
     val f = new File(base, "plainfile")
     Files.writeString(f.toPath, "x")
     val e2 = intercept[IllegalArgumentException] {
-      ZarrSave.save(df, "id", f.getPath)
+      ZarrWriter.save(df, "id", f.getPath)
     }
     assert(e2.getMessage.contains("not a directory"))
 
     // driver-side writer shares the guard
     val e3 = intercept[IllegalArgumentException] {
-      graft.sources.zarr.ZarrWriter.write(notZarr.getPath,
-        Seq("x" -> graft.sources.zarr.ZarrWriter.F64(Array(1.0))))
+      ZarrWriter.write(notZarr.getPath, Seq("x" -> ZarrWriter.F64(Array(1.0))))
     }
     assert(e3.getMessage.contains("is not a zarr group"))
   }

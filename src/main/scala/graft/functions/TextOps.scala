@@ -63,10 +63,6 @@ object TextOps {
   def bpeishTokenCount(text: Column): Column =
     size(regexp_extract_all(lower(text), lit(bpeishPattern), lit(0)))
 
-  /** Approx chars-per-token proxy used for token-count estimation. */
-  def charsPerWsToken(text: Column): Column =
-    length(text).cast("double") / wsTokenCount(text)
-
   /** Tiny per-language stopword dictionaries for heuristic language
     * ID. Deterministic and engine-portable (plain array_contains). */
   val langDicts: Seq[(String, Seq[String])] = Seq(

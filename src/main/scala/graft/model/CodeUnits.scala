@@ -2,6 +2,7 @@ package graft.model
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.lit
+import graft.sources.Attr
 
 /** The snapshot's code-unit system, read from its own header — the
   * Gadget/AREPO convention of `UnitLength_in_cm`, `UnitMass_in_g`,
@@ -53,25 +54,16 @@ final case class CodeUnits(lengthCm: Double, massG: Double,
 
 object CodeUnits {
 
-  private def num(v: Any): Option[Double] = v match {
-    case d: Double => Some(d)
-    case f: Float => Some(f.toDouble)
-    case l: Long => Some(l.toDouble)
-    case i: Int => Some(i.toDouble)
-    case a: Array[Double] if a.nonEmpty => Some(a.head)
-    case _ => None
-  }
-
   /** Parse the code-unit system from snapshot attributes: each of the
     * three Unit* params searched under /Header then /Parameters (the
     * same group order the cosmology mixin uses — Gadget writes them in
     * Header, AREPO duplicates them into Parameters). None unless all
     * three are present — a partial system would convert some
     * dimensions and silently not others. */
-  def fromAttrs(attrs: Map[String, Map[String, Any]]): Option[CodeUnits] = {
+  def fromAttrs(attrs: Map[String, Map[String, Attr]]): Option[CodeUnits] = {
     def find(name: String): Option[Double] =
       Seq("/Header", "/Parameters").iterator
-        .flatMap(g => attrs.get(g).flatMap(_.get(name)).flatMap(num))
+        .flatMap(g => attrs.get(g).flatMap(_.get(name)).flatMap(_.scalar))
         .nextOption()
     for {
       l <- find("UnitLength_in_cm")

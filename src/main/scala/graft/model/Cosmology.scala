@@ -1,5 +1,7 @@
 package graft.model
 
+import graft.sources.Attr
+
 /** Cosmology metadata derived from snapshot header attributes — the
   * scida CosmologyMixin re-expressed driver-side (reference:
   * src/scida/interfaces/mixins/cosmology.py:16 `CosmologyMixin`,
@@ -165,25 +167,12 @@ object Cosmology {
     lit(HubbleDistMpcTimesH / h) * (z / lit(steps.toDouble)) * terms
   }
 
-  /** First element of array-valued attributes, scalars unchanged —
-    * scida misc.get_scalar. */
-  private def scalar(v: Any): Option[Double] = v match {
-    case d: Double => Some(d)
-    case f: Float => Some(f.toDouble)
-    case l: Long => Some(l.toDouble)
-    case i: Int => Some(i.toDouble)
-    case a: Array[Double] if a.nonEmpty => Some(a.head)
-    case a: Array[Float] if a.nonEmpty => Some(a.head.toDouble)
-    case a: Array[Long] if a.nonEmpty => Some(a.head.toDouble)
-    case _ => None
-  }
-
-  private def attr(attrs: Map[String, Map[String, Any]],
+  private def attr(attrs: Map[String, Map[String, Attr]],
       group: String, name: String): Option[Double] =
-    attrs.get(group).flatMap(_.get(name)).flatMap(scalar)
+    attrs.get(group).flatMap(_.get(name)).flatMap(_.scalar)
 
   /** z from /Header Redshift — cosmology.py:135. */
-  def redshiftFromAttrs(attrs: Map[String, Map[String, Any]]): Option[Double] =
+  def redshiftFromAttrs(attrs: Map[String, Map[String, Attr]]): Option[Double] =
     attr(attrs, "/Header", "Redshift")
 
   /** Gadget-style parameter lookup with scida's alias order
@@ -195,7 +184,7 @@ object Cosmology {
     * as Ω_cdm + Ω_b from /Parameters (cosmology.py:194-205). Returns
     * None when no Hubble parameter is found anywhere (scida likewise
     * returns no cosmology object). */
-  def fromAttrs(attrs: Map[String, Map[String, Any]]): Option[Cosmology] = {
+  def fromAttrs(attrs: Map[String, Map[String, Attr]]): Option[Cosmology] = {
     def find(aliases: Seq[String]): Option[Double] =
       (for {
         grp <- Seq("/Parameters", "/Header").iterator
@@ -258,7 +247,7 @@ object Cosmology {
     * /Config ComovingIntegrationOn=1 wins; otherwise "legacy"
     * detection accepts a /Header whose Time is consistent with
     * a = 1/(1+Redshift); a Redshift with no Time at all also counts. */
-  def isCosmological(attrs: Map[String, Map[String, Any]]): Boolean = {
+  def isCosmological(attrs: Map[String, Map[String, Attr]]): Boolean = {
     val explicit = attr(attrs, "/Config", "ComovingIntegrationOn").contains(1.0)
     lazy val header = attrs.getOrElse("/Header", Map.empty)
     lazy val legacy = (attr(attrs, "/Header", "Time"), redshiftFromAttrs(attrs)) match {

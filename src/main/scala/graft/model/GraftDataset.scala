@@ -299,12 +299,4 @@ object GraftDataset {
         g.withUnit(f.name.replace(NsSep, "/"), f.metadata.getString("unit"))
       else g
     }
-
-  /** Build from per-namespace frames: columns get `ns__` prefixes and
-    * frames are column-concatenated via an index-free crossJoin-safe
-    * union — caller guarantees row alignment is NOT required (each
-    * namespace is independent, as in scida where PartType0/PartType1
-    * have different lengths; here they stay separate frames). */
-  def fromNamespaces(frames: Map[String, DataFrame]): Map[String, GraftDataset] =
-    frames.map { case (ns, f) => ns -> apply(f) }
 }

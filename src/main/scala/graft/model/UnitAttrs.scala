@@ -1,5 +1,7 @@
 package graft.model
 
+import graft.sources.Attr
+
 /** Field-unit extraction from dataset-level attributes — scida
   * `extract_units_from_attrs` (reference:
   * src/scida/interfaces/mixins/units.py:122, `get_unitstr_from_attrs`
@@ -25,21 +27,10 @@ object UnitAttrs {
     "velocity" -> Map("cm" -> 1, "s" -> -1),
     "time" -> Map("s" -> 1))
 
-  private def num(v: Any): Option[Double] = v match {
-    case d: Double => Some(d)
-    case f: Float => Some(f.toDouble)
-    case l: Long => Some(l.toDouble)
-    case i: Int => Some(i.toDouble)
-    case a: Array[Double] if a.nonEmpty => Some(a.head)
-    case a: Array[Float] if a.nonEmpty => Some(a.head.toDouble)
-    case a: Array[Long] if a.nonEmpty => Some(a.head.toDouble)
-    case _ => None
-  }
-
   /** Resolve a field's unit from its dataset attributes. Returns None
     * when nothing resolvable is present (scida returns dimensionless
     * / skips, and flags the field via `missing_units`). */
-  def fromAttrs(attrs: Map[String, Any],
+  def fromAttrs(attrs: Map[String, Attr],
       cosmo: Option[Cosmology] = None): Option[(Double, Units.Measure)] =
     fromUnitString(attrs).orElse(fromCgsScalings(attrs, cosmo))
 
@@ -47,16 +38,15 @@ object UnitAttrs {
     * (units.py:71): SWIFT expression keys (unit inside [...]), then
     * `cgsunits` (EAGLE), then `units`. Unparseable strings are
     * skipped, as scida does on UndefinedUnitError. */
-  private def fromUnitString(attrs: Map[String, Any]): Option[(Double, Units.Measure)] = {
+  private def fromUnitString(attrs: Map[String, Attr]): Option[(Double, Units.Measure)] = {
     val swift = Seq("Conversion factor", "Expression for physical CGS units")
-      .flatMap(attrs.get).headOption.map { v =>
-        val s = v.toString
+      .flatMap(attrs.get).flatMap(_.string).headOption.map { s =>
         val inner = s.split('[').last.split(']').head
         if (inner.trim == "-") "" else inner
       }
     val str = swift
-      .orElse(attrs.get("cgsunits").collect { case s: String => s })
-      .orElse(attrs.get("units").collect { case s: String => s })
+      .orElse(attrs.get("cgsunits").flatMap(_.string))
+      .orElse(attrs.get("units").flatMap(_.string))
     str.filter(s => s.nonEmpty && s.toLowerCase != "none").flatMap { s =>
       try Some((1.0, Units.parse(s)))
       catch { case _: IllegalArgumentException => None }
@@ -69,12 +59,12 @@ object UnitAttrs {
     * registry units from the mixin, cosmology.py:57-63). Returns None
     * if an a/h scaling is present but no cosmology is — the unit is
     * unresolvable, better unreported than wrong. */
-  private def fromCgsScalings(attrs: Map[String, Any],
+  private def fromCgsScalings(attrs: Map[String, Attr],
       cosmo: Option[Cosmology]): Option[(Double, Units.Measure)] = {
     val keys = CgsSyms.keys.toSeq ++ Seq("h", "a")
     if (!keys.exists(k => attrs.contains(k + "_scaling"))) return None
     def exp(k: String): Double =
-      attrs.get(k + "_scaling").flatMap(num).getOrElse(0.0)
+      attrs.get(k + "_scaling").flatMap(_.scalar).getOrElse(0.0)
     val aExp = exp("a"); val hExp = exp("h")
     if ((aExp != 0.0 || hExp != 0.0) && cosmo.isEmpty) return None
     var syms = Map.empty[String, Int]
@@ -86,7 +76,7 @@ object UnitAttrs {
         syms = if (cur == 0) syms - sym else syms + (sym -> cur)
       }
     }
-    val toCgs = attrs.get("to_cgs").flatMap(num).filterNot(v => v == 0.0).getOrElse(1.0)
+    val toCgs = attrs.get("to_cgs").flatMap(_.scalar).filterNot(v => v == 0.0).getOrElse(1.0)
     val cosmoFactor = cosmo.map(c =>
       math.pow(c.scaleFactor, aExp) * math.pow(c.h, hExp)).getOrElse(1.0)
     Some((toCgs * cosmoFactor, Units.Measure(syms)))

@@ -218,8 +218,6 @@ object Units {
     Measure(syms)
   }
 
-  def dimensionOf(unit: String): Dimension = parse(unit).dimension
-
   /** Multiplicative factor converting a quantity in `from` to `to`.
     * Throws for unknown units or dimension mismatch (pint's
     * DimensionalityError). Both sides may be composite expressions. */

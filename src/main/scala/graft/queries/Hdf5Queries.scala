@@ -2,7 +2,7 @@ package graft.queries
 
 import java.io.File
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Attr, Tables}
 import graft.sources.hdf5.{ChunkedHdf5, Hdf5Writer}
 
 /** HDF5 ingestion under the oracle gate — scida's ChunkedHDF5Loader
@@ -29,6 +29,12 @@ object Hdf5Queries {
   private val FixtureUnitLength = 3.085678e21 // kpc/h [cm]
   private val FixtureUnitMass = 1.989e43 // 1e10 Msun/h [g]
   private val FixtureUnitVelocity = 1e5 // km/s [cm/s]
+  /** The cosmological /Header every fixture carries; arepo-family
+    * fixtures append the `Git_commit` marker. */
+  private val FixtureHeader: Seq[(String, Attr)] = Seq(
+    "Time" -> (1.0 / (1.0 + FixtureRedshift)),
+    "Redshift" -> FixtureRedshift, "HubbleParam" -> FixtureHubble)
+  private val ArepoHeader = FixtureHeader :+ ("Git_commit" -> Attr.Str("0badc0de"))
 
   /** One snapshot per (JVM, dataset dir): fixture generation runs the
     * DISTRIBUTED chunked writer (Hdf5Save — executors write their
@@ -74,10 +80,7 @@ object Hdf5Queries {
       col("o_totalprice").as("InternalEnergy"))
     graft.sources.hdf5.Hdf5Save.save(df, "__row", dir.getPath,
       group = "PartType0", chunkRows = 1 << 13, filePrefix = "snap",
-      headerAttrs = Seq(
-        "Time" -> (1.0 / (1.0 + FixtureRedshift)),
-        "Redshift" -> FixtureRedshift, "HubbleParam" -> FixtureHubble,
-        "Git_commit" -> "0badc0de", // arepo family marker
+      headerAttrs = ArepoHeader ++ Seq[(String, Attr)](
         // the snapshot's code-unit system (standard TNG values):
         // kpc/h in cm, 1e10 Msun/h in g, km/s in cm/s
         "UnitLength_in_cm" -> FixtureUnitLength,
@@ -105,18 +108,12 @@ object Hdf5Queries {
       col("o_custkey").cast("double").as("Masses"))
     graft.sources.hdf5.Hdf5Save.save(df, "__row", dir.getPath,
       group = "PartType1", chunkRows = 1 << 13, filePrefix = "snapshot_042",
-      headerAttrs = Seq(
-        "Time" -> (1.0 / (1.0 + FixtureRedshift)),
-        "Redshift" -> FixtureRedshift, "HubbleParam" -> FixtureHubble,
-        "Git_commit" -> "0badc0de"),
+      headerAttrs = ArepoHeader,
       extraGroups = Seq("Config" -> Seq("MTNG" -> 1L)))
     Hdf5Writer.write(
       new File(dir, "snapshot-prevmostboundonly_042.0.hdf5").getPath,
       Hdf5Writer.Group(children = Seq(
-        "Header" -> Hdf5Writer.Group(attrs = Seq(
-          "Time" -> (1.0 / (1.0 + FixtureRedshift)),
-          "Redshift" -> FixtureRedshift, "HubbleParam" -> FixtureHubble,
-          "Git_commit" -> "0badc0de")),
+        "Header" -> Hdf5Writer.Group(attrs = ArepoHeader),
         "Config" -> Hdf5Writer.Group(attrs = Seq("MTNG" -> 1L)),
         "PartType1" -> Hdf5Writer.Group(children = Seq(
           "MostBoundID" -> Hdf5Writer.I64(Array(1L, 2L, 3L, 4L)),
@@ -140,10 +137,7 @@ object Hdf5Queries {
       col("o_totalprice").as("Density"))
     graft.sources.hdf5.Hdf5Save.save(df, "__row", dir.getPath,
       group = "PartType0", chunkRows = 1 << 13, filePrefix = "snap",
-      headerAttrs = Seq(
-        "Time" -> (1.0 / (1.0 + FixtureRedshift)),
-        "Redshift" -> FixtureRedshift, "HubbleParam" -> FixtureHubble,
-        "Git_commit" -> "0badc0de"))
+      headerAttrs = ArepoHeader)
   }
 
   private def lgalaxiesCatalog(s: org.apache.spark.sql.SparkSession, d: String): String =
@@ -171,10 +165,8 @@ object Hdf5Queries {
       (col("o_orderkey") % 997).cast("double").as("MassWeightAge"))
     graft.sources.hdf5.Hdf5Save.save(df, "__row", dir.getPath,
       group = "Galaxy", chunkRows = 1 << 13, filePrefix = "lgal",
-      headerAttrs = Seq(
-        "Simulation" -> "L-Galaxies run on the Millennium Simulation",
-        "Time" -> (1.0 / (1.0 + FixtureRedshift)),
-        "Redshift" -> FixtureRedshift, "HubbleParam" -> FixtureHubble))
+      headerAttrs = Seq[(String, Attr)](
+        "Simulation" -> "L-Galaxies run on the Millennium Simulation") ++ FixtureHeader)
   }
 
   private def catalogSnapshot(s: org.apache.spark.sql.SparkSession, d: String): String =
@@ -200,10 +192,7 @@ object Hdf5Queries {
       col("o_totalprice").as("TotalPrice"))
     graft.sources.hdf5.Hdf5Save.save(df, "__row", snapDir.getPath,
       group = "PartType0", chunkRows = 1 << 12, filePrefix = "snap_042",
-      headerAttrs = Seq(
-        "Time" -> (1.0 / (1.0 + FixtureRedshift)),
-        "Redshift" -> FixtureRedshift, "HubbleParam" -> FixtureHubble,
-        "Git_commit" -> "0badc0de")) // arepo family marker → discovery on
+      headerAttrs = ArepoHeader) // arepo family marker → discovery on
     val gRows = Tables.orders(s, d).groupBy("o_custkey")
       .agg(count(lit(1)).as("len"),
         sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long")).as("cents"))
@@ -217,10 +206,7 @@ object Hdf5Queries {
     catDir.mkdirs()
     Hdf5Writer.write(new File(catDir, "fof_subhalo_tab_042.0.hdf5").getPath,
       Hdf5Writer.Group(children = Seq(
-        "Header" -> Hdf5Writer.Group(attrs = Seq(
-          "Time" -> (1.0 / (1.0 + FixtureRedshift)),
-          "Redshift" -> FixtureRedshift, "HubbleParam" -> FixtureHubble,
-          "Git_commit" -> "0badc0de")),
+        "Header" -> Hdf5Writer.Group(attrs = ArepoHeader),
         "Group" -> Hdf5Writer.Group(children = Seq(
           "GroupCust" -> Hdf5Writer.I64(gRows.map(_.getLong(0))),
           "GroupLen" -> Hdf5Writer.I64(gRows.map(_.getLong(1))),
@@ -243,9 +229,7 @@ object Hdf5Queries {
       col("o_totalprice").as("TotalPrice"))
     graft.sources.hdf5.Hdf5Save.save(df, "__row", dir.getPath,
       group = "PartType0", chunkRows = 1 << 12, filePrefix = "snap",
-      headerAttrs = Seq(
-        "Time" -> (1.0 / (1.0 + FixtureRedshift)),
-        "Redshift" -> FixtureRedshift, "HubbleParam" -> FixtureHubble))
+      headerAttrs = FixtureHeader)
   }
 
   def defs: Map[String, QueryDef] = Map(

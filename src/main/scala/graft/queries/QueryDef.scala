@@ -34,8 +34,6 @@ object QueryDef {
   def gated(b: (SparkSession, String) => DataFrame, o: => String,
       g: (SparkSession, String, DataFrame) => DataFrame): QueryDef =
     QueryDef(b, Some(_ => o), Some(g))
-  def rowsOnly(b: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(b, None)
 
   /** Full-parallelism guard for compute-heavy map stages: the driver's
     * test parquet is ONE row group, so an expensive per-row stage fed

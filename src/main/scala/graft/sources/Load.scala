@@ -352,9 +352,9 @@ object Load {
     * because the cosmology/unit mixins are data-driven — the flavor
     * is informational (logging, unit-default selection by callers). */
   def flavor(path: String, fileprefix: String = ""): String = {
-    def classify(header: Map[String, Any], config: Map[String, Any],
-        code: String, hasRockstarDs: Boolean): String =
-      if (code.contains("SWIFT")) "swift"
+    def classify(header: Map[String, Attr], config: Map[String, Attr],
+        code: Option[Attr], hasRockstarDs: Boolean): String =
+      if (code.flatMap(_.string).exists(_.contains("SWIFT"))) "swift"
       else if (hasRockstarDs) "rockstar"
       else if (header.contains("GIZMO_version")) "gizmo"
       else if (header.contains("Git_commit") &&
@@ -369,12 +369,8 @@ object Load {
         val pfx = if (fileprefix.nonEmpty) fileprefix else autoPrefix(path)
         val f = ChunkedHdf5.metadata(
           ChunkedHdf5.discoverChunks(path, pfx).head)
-        val code = f.attrs.getOrElse("/Code", Map.empty).get("Code") match {
-          case Some(s: String) => s
-          case _ => ""
-        }
         classify(f.attrs.getOrElse("/Header", Map.empty),
-          f.attrs.getOrElse("/Config", Map.empty), code,
+          f.attrs.getOrElse("/Config", Map.empty), f.attrs.get("/Code").flatMap(_.get("Code")),
           f.datasets.exists(_.path == "/cosmology:omega_dm"))
       case Zarr =>
         // zarr stores carry header metadata on the ROOT group (the
@@ -382,11 +378,7 @@ object Load {
         // attrs by "/" and per-array paths only, never "/Header"
         val st = graft.sources.zarr.ZarrStore.open(path)
         val root = st.attrs.getOrElse("/", Map.empty)
-        val code = root.get("Code") match {
-          case Some(s: String) => s
-          case _ => ""
-        }
-        classify(root, Map.empty, code,
+        classify(root, Map.empty, root.get("Code"),
           st.arrays.exists(_.name == "cosmology:omega_dm"))
       case _ => "generic"
     }
@@ -443,42 +435,21 @@ object Load {
     *
     * Returns (name, entry) for every matching candidate; the dataset
     * wiring requires uniqueness like the reference's `unique=True`. */
-  def identifySimulation(metadata: Map[String, Map[String, Any]],
+  def identifySimulation(metadata: Map[String, Map[String, Attr]],
       path: String,
       configPath: String = graft.model.UnitDefaults.configPath)
       : Seq[(String, Map[String, Any])] = {
-    def isCloseNum(a: Double, b: Double): Boolean =
-      math.abs(a - b) <= 1e-8 + 1e-5 * math.abs(b)
-    def asNum(v: Any): Option[Double] = v match {
-      case d: Double => Some(d); case l: Long => Some(l.toDouble)
-      case i: Int => Some(i.toDouble); case f: Float => Some(f.toDouble)
-      case _ => None
-    }
-    def valueMatches(attr: Any, want: Any): Boolean = (want: @unchecked) match {
+    def valueMatches(attr: Attr, want: Any): Boolean = (want: @unchecked) match {
       case m: Map[String @unchecked, Any @unchecked]
           if m.get("match").contains("substring") =>
         m.get("content").exists(c =>
-          String.valueOf(attr).contains(String.valueOf(c)))
+          attr.string.exists(_.contains(String.valueOf(c))))
       case m: Map[String @unchecked, Any @unchecked] =>
         m.get("content").exists(valueMatches(attr, _))
-      // array-valued HDF5 attrs (MassTable-style) compare element-wise
-      // (misc.py:299 np.isclose over the whole array) — String.valueOf
-      // on a JVM array is identity-hash gibberish, never equal
-      case _ => (attr, want) match {
-        case (a: Array[_], w: Array[_]) =>
-          a.length == w.length &&
-            a.iterator.zip(w.iterator).forall { case (x, y) => valueMatches(x, y) }
-        case (a: Array[_], w: Seq[_]) =>
-          a.length == w.length &&
-            a.iterator.zip(w.iterator).forall { case (x, y) => valueMatches(x, y) }
-        case (a: Seq[_], w: Seq[_]) =>
-          a.length == w.length &&
-            a.iterator.zip(w.iterator).forall { case (x, y) => valueMatches(x, y) }
-        case _ => (asNum(attr), asNum(want)) match {
-          case (Some(a), Some(b)) => isCloseNum(a, b)
-          case _ => String.valueOf(attr) == String.valueOf(want)
-        }
-      }
+      // numbers and numeric arrays (MassTable-style, element-wise)
+      // compare np.isclose-style (misc.py:299)
+      case _ => attr.matches(Attr.fromJson(want),
+        (a, b) => math.abs(a - b) <= 1e-8 + 1e-5 * math.abs(b))
     }
     val userSims = loadConfig(configPath).get("simulations")
       .collect { case m: Map[String @unchecked, Any @unchecked] => m }
@@ -550,7 +521,7 @@ object Load {
     attrs.flatMap(graft.model.CodeUnits.fromAttrs)
       .foreach(cu => ds = ds.withCodeUnits(cu))
     // per-field unit discovery from dataset-level attrs
-    val fieldAttrs: String => Option[Map[String, Any]] = fmt match {
+    val fieldAttrs: String => Option[Map[String, Attr]] = fmt match {
       case Hdf5 =>
         val g = if (group.nonEmpty) resolveGroup(group)
           else soleHdf5Group(path, pfx)
@@ -564,8 +535,8 @@ object Load {
         // TUNITn column units — the FITS standard's per-column unit
         // keyword, the same role HDF5 dataset attrs play
         val t = graft.sources.fits.FitsReader.binTable(firstFits(path))
-        val m: Map[String, Map[String, Any]] = t.cols.flatMap(c =>
-          c.unit.map(u => c.name -> Map("units" -> (u: Any)))).toMap
+        val m: Map[String, Map[String, Attr]] = t.cols.flatMap(c =>
+          c.unit.map(u => c.name -> Map("units" -> Attr.Str(u)))).toMap
         name => m.get(name)
       case _ => _ => None
     }
@@ -678,8 +649,8 @@ object Load {
     * supported dataset and rewrite it as a zarr store via the
     * executor-parallel `ZarrWriter.save` (chunk files written straight
     * from the partitions carrying those rows — nothing flows through
-    * the driver). Header metadata rides to the store root so the copy
-    * re-detects its family/cosmology on load exactly like the
+    * the driver). Header attrs ride to the store root's `.zattrs` so
+    * the copy re-detects its family/cosmology on load exactly like the
     * original (`flavor`/`dataset` read zarr root attrs). Requires a
     * row-indexed source (hdf5/zarr/fits — every graft ingestion
     * source emits `row_id`). */
@@ -695,9 +666,10 @@ object Load {
   /** The reverse conversion — zarr (or any row-indexed source) →
     * chunked-HDF5 snapshot layout, through the executor-parallel
     * Hdf5Save (each chunk-id partition writes ONE self-contained
-    * `snap.K.hdf5`; the driver writes nothing). Header attrs carry
-    * into every file's /Header beside the writer's own
-    * NumPart_ThisFile, so the copy re-detects family/cosmology on
+    * `snap.K.hdf5`; the driver writes nothing). Header attrs (any
+    * `Attr`, string arrays included) carry into every file's /Header;
+    * the writer's own NumPart_ThisFile and NumFilesPerSnapshot
+    * replace the source's, so the copy re-detects family/cosmology on
     * load like the original. Column cap: Hdf5Save's 8-dataset SNOD
     * limit — select the fields to convert via `cols` when the source
     * is wider. */
@@ -715,7 +687,7 @@ object Load {
   /** A conversion's source: its row-indexed frame and its header
     * attrs (`/Header`, else the root group's, else none). */
   private def rowIndexedSource(spark: SparkSession, inPath: String,
-      group: String, op: String): (DataFrame, Map[String, Any]) = {
+      group: String, op: String): (DataFrame, Map[String, Attr]) = {
     val df = dataFrame(spark, inPath, group)
     val fmt = detect(inPath)
     require(df.columns.contains("row_id"),
@@ -726,7 +698,7 @@ object Load {
   }
 
   private def attrsOf(fmt: Format, path: String,
-      fileprefix: String = ""): Option[Map[String, Map[String, Any]]] =
+      fileprefix: String = ""): Option[Map[String, Map[String, Attr]]] =
     fmt match {
       case Hdf5 => Some(ChunkedHdf5.attrs(path, fileprefix))
       case Zarr =>
@@ -737,10 +709,8 @@ object Load {
         // scida load_metadata: the primary header IS the metadata
         // (io/_base.py:134); numeric cards become header scalars
         val cards = graft.sources.fits.FitsReader.primaryHeader(firstFits(path))
-        val numeric: Map[String, Any] = cards.flatMap { case (k, v) =>
-          v.toDoubleOption.map(d => k -> (d: Any))
-        }
-        Some(Map("/Header" -> numeric))
+        Some(Map("/Header" -> cards.flatMap { case (k, v) =>
+          v.toDoubleOption.map(d => k -> Attr.F64(d)) }))
       case Parquet => None
     }
 }

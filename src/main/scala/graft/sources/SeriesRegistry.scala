@@ -91,8 +91,7 @@ object SeriesRegistry {
     new SeriesRegistry(dirs.map { case (name, path) =>
       val attrs = graft.sources.hdf5.ChunkedHdf5.attrs(path)
       val z = graft.model.Cosmology.redshiftFromAttrs(attrs)
-      val t = attrs.getOrElse("/Header", Map.empty).get("Time")
-        .collect { case d: Double => d }
+      val t = attrs.get("/Header").flatMap(_.get("Time")).flatMap(_.scalar)
       Member(name, (z.map("redshift" -> _) ++ t.map("time" -> _)).toMap)
     })
 

@@ -95,7 +95,7 @@ object ChunkedHdf5 {
   /** Attributes of the first chunk: object path -> name -> value
     * (scida reads snapshot metadata from chunk 0 the same way,
     * io/_base.py:366 load_metadata). */
-  def attrs(path: String, fileprefix: String = ""): Map[String, Map[String, Any]] =
+  def attrs(path: String, fileprefix: String = ""): Map[String, Map[String, graft.sources.Attr]] =
     metadata(discoverChunks(path, fileprefix).head).attrs
 
   /** Load one particle-type group of a (possibly multi-file) snapshot

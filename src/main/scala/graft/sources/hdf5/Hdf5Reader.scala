@@ -4,6 +4,7 @@ import java.io.RandomAccessFile
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.Inflater
 import scala.collection.mutable
+import graft.sources.Attr
 
 /** Minimal pure-JVM HDF5 reader — the subset real simulation
   * snapshots use (reference: scida reads Gadget/Arepo HDF5 via h5py,
@@ -27,7 +28,6 @@ object Hdf5Reader {
   final case class Dtype(clazz: Int, size: Int, signed: Boolean) {
     def isFloat: Boolean = clazz == 1
     def isInt: Boolean = clazz == 0
-    def isString: Boolean = clazz == 3
   }
 
   sealed trait Layout
@@ -48,9 +48,8 @@ object Hdf5Reader {
   final case class H5File(
       datasets: Seq[Dataset],
       groups: Seq[String],
-      /** object path -> attr name -> value (Double/Long/String or
-        * Array of those — matches scida's tree\["attrs"\]). */
-      attrs: Map[String, Map[String, Any]])
+      /** object path -> attr name -> value (scida's tree\["attrs"\]). */
+      attrs: Map[String, Map[String, Attr]])
 
   private val Signature = Array(0x89, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n').map(_.toByte)
   private val Undef = -1L // 0xFFFF... read as signed long
@@ -76,7 +75,7 @@ object Hdf5Reader {
       val rootAddr = readSuperblock(in)
       val ds = mutable.ArrayBuffer[Dataset]()
       val gs = mutable.ArrayBuffer[String]()
-      val at = mutable.Map[String, Map[String, Any]]()
+      val at = mutable.Map[String, Map[String, Attr]]()
       walkObject(in, rootAddr, "/", ds, gs, at)
       H5File(ds.toSeq, gs.toSeq, at.toMap)
     } finally raf.close()
@@ -267,13 +266,13 @@ object Hdf5Reader {
   }
 
   /** Attribute message → (name, value). */
-  private def parseAttribute(b0: ByteBuffer): (String, Any) = {
+  private def parseAttribute(b0: ByteBuffer): (String, Attr) = {
     val b = b0.duplicate().order(ByteOrder.LITTLE_ENDIAN)
     val ver = b.get() & 0xff
     require(ver >= 1 && ver <= 3, s"attribute version $ver")
     val pad8 = ver == 1
     if (ver == 1) b.get() // reserved
-    else b.get() match { case f => () } // v2/3: flags (shared msgs unsupported but rare)
+    else b.get() // v2/3: flags (shared msgs unsupported but rare)
     val nameSize = b.getShort() & 0xffff
     val dtSize = b.getShort() & 0xffff
     val dsSize = b.getShort() & 0xffff
@@ -286,34 +285,29 @@ object Hdf5Reader {
     val dsBytes = new Array[Byte](aligned(dsSize)); b.get(dsBytes)
     val shape = parseDataspace(ByteBuffer.wrap(dsBytes).order(ByteOrder.LITTLE_ENDIAN))
     val n = if (shape.isEmpty) 1 else shape.product.toInt
-    def one(): Any = dt.clazz match {
-      case 0 => dt.size match {
-        case 1 => (if (dt.signed) b.get().toLong else (b.get() & 0xffL))
-        case 2 => (if (dt.signed) b.getShort().toLong else (b.getShort() & 0xffffL))
-        case 4 => (if (dt.signed) b.getInt().toLong else (b.getInt() & 0xffffffffL))
-        case 8 => b.getLong()
-      }
-      case 1 => if (dt.size == 4) b.getFloat().toDouble else b.getDouble()
-      case 3 =>
-        val s = new Array[Byte](dt.size); b.get(s)
-        new String(s.takeWhile(_ != 0), "UTF-8")
+    def long(): Long = dt.size match {
+      case 1 => if (dt.signed) b.get().toLong else b.get() & 0xffL
+      case 2 => if (dt.signed) b.getShort().toLong else b.getShort() & 0xffffL
+      case 4 => if (dt.signed) b.getInt().toLong else b.getInt() & 0xffffffffL
+      case 8 => b.getLong()
     }
-    // typed arrays (not Array[Any]) so consumers can cast to
-    // Array[Long]/Array[Double]/Array[String] directly
-    val v: Any =
-      if (shape.isEmpty) one()
-      else dt.clazz match {
-        case 0 => Array.fill(n)(one().asInstanceOf[Long])
-        case 1 => Array.fill(n)(one().asInstanceOf[Double])
-        case 3 => Array.fill(n)(one().asInstanceOf[String])
-      }
-    (name, v)
+    def double(): Double = if (dt.size == 4) b.getFloat().toDouble else b.getDouble()
+    def string(): String = {
+      val s = new Array[Byte](dt.size); b.get(s)
+      new String(s.takeWhile(_ != 0), "UTF-8")
+    }
+    val scalar = shape.isEmpty
+    (name, dt.clazz match {
+      case 0 => if (scalar) Attr.I64(long()) else Attr.I64s(Vector.fill(n)(long()))
+      case 1 => if (scalar) Attr.F64(double()) else Attr.F64s(Vector.fill(n)(double()))
+      case 3 => if (scalar) Attr.Str(string()) else Attr.Strs(Vector.fill(n)(string()))
+    })
   }
 
   // ---- group traversal ----
   private def walkObject(in: In, addr: Long, path: String,
       ds: mutable.ArrayBuffer[Dataset], gs: mutable.ArrayBuffer[String],
-      at: mutable.Map[String, Map[String, Any]]): Unit = {
+      at: mutable.Map[String, Map[String, Attr]]): Unit = {
     val msgs = readMessages(in, addr)
     val attrs = msgs.filter(_.tpe == 0x0C).map(m => parseAttribute(m.body)).toMap
     if (attrs.nonEmpty) at(path) = attrs

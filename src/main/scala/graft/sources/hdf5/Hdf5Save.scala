@@ -2,16 +2,17 @@ package graft.sources.hdf5
 
 import java.io.File
 import org.apache.spark.sql.DataFrame
-import graft.sources.ChunkedSave
+import graft.sources.{Attr, ChunkedSave}
 
 /** DISTRIBUTED chunked-HDF5 snapshot save — the write-back scida
   * performs through dask (reference: src/scida/interface.py:273
   * `save`), targeting the chunked-snapshot layout graft READS
   * (`prefix.K.hdf5` files virtually concatenated along axis 0,
   * io/_base.py:348): chunk K holds rows [K·chunkRows, (K+1)·chunkRows)
-  * as one SELF-CONTAINED file — its own `/Header` (NumPart_ThisFile,
-  * NumFilesPerSnapshot, caller attrs) and one dataset per column under
-  * the particle group.
+  * as one SELF-CONTAINED file — its own `/Header` (caller attrs,
+  * then NumPart_ThisFile and NumFilesPerSnapshot, which replace any
+  * caller attrs of those names) and one dataset per column under the
+  * particle group.
   *
   * Scale shape is `ChunkedSave`'s (shared with `ZarrWriter.save`):
   * rows are repartitioned by chunk id (every chunk's rows land in one
@@ -36,8 +37,8 @@ object Hdf5Save {
   def save(df: DataFrame, idCol: String, dir: String,
       group: String = "PartType0", chunkRows: Int = 1 << 16,
       filePrefix: String = "snap",
-      headerAttrs: Seq[(String, Any)] = Nil,
-      extraGroups: Seq[(String, Seq[(String, Any)])] = Nil): Unit = {
+      headerAttrs: Seq[(String, Attr)] = Nil,
+      extraGroups: Seq[(String, Seq[(String, Attr)])] = Nil): Unit = {
     val nCols = df.columns.count(_ != idCol)
     require(nCols <= 8,
       s"Hdf5Save writes at most 8 datasets per group (one SNOD); got $nCols")
@@ -72,10 +73,12 @@ object Hdf5Save {
           }
           names(ci) -> node
         }.toSeq
+      val own = Seq[(String, Attr)](
+        "NumPart_ThisFile" -> Array(c.rows.toLong, 0L, 0L, 0L, 0L, 0L),
+        "NumFilesPerSnapshot" -> nChunks.toLong)
       val root = Hdf5Writer.Group(children = Seq(
-        "Header" -> Hdf5Writer.Group(attrs = headerAttrs ++ Seq(
-          "NumPart_ThisFile" -> Array(c.rows.toLong, 0L, 0L, 0L, 0L, 0L),
-          "NumFilesPerSnapshot" -> nChunks.toLong))) ++
+        "Header" -> Hdf5Writer.Group(attrs =
+          headerAttrs.filterNot(a => own.exists(_._1 == a._1)) ++ own)) ++
         extraGroups.map { case (n, as) =>
           n -> (Hdf5Writer.Group(attrs = as): Hdf5Writer.Node) } ++ Seq(
         group -> Hdf5Writer.Group(children = children)))

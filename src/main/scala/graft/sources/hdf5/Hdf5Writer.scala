@@ -2,6 +2,7 @@ package graft.sources.hdf5
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
+import graft.sources.Attr
 
 /** Minimal HDF5 writer: the "earliest" on-disk layout libhdf5 emits
   * for simple files — superblock v0, version-1 object headers, v1
@@ -15,13 +16,13 @@ import java.nio.file.{Files, Paths}
   * Hdf5Reader parsing these files is parsing the real v0 format.
   *
   * Limits (asserted): ≤8 members per group (one SNOD), fixed set of
-  * scalar/1D/2D numeric types, no filters.
+  * scalar/1D/2D numeric types, `Attr`s on groups only, unique names.
   */
 object Hdf5Writer {
 
   sealed trait Node
   final case class Group(children: Seq[(String, Node)] = Nil,
-      attrs: Seq[(String, Any)] = Nil) extends Node
+      attrs: Seq[(String, Attr)] = Nil) extends Node
 
   /** A numeric dataset; `cols == 0` means a true 1-D dataspace, else
     * an (n/cols, cols) 2-D dataspace. */
@@ -59,11 +60,6 @@ object Hdf5Writer {
     def putAll(b: ByteBuffer): Unit = v.foreach(b.putInt)
     def dtypeBytes: Array[Byte] = dtFixed(4, signed = true)
   }
-  final case class U32(v: Array[Int], cols: Int = 0) extends Data {
-    def n = v.length; def elemSize = 4
-    def putAll(b: ByteBuffer): Unit = v.foreach(b.putInt)
-    def dtypeBytes: Array[Byte] = dtFixed(4, signed = false)
-  }
 
   /** Chunked storage wrapper (B-tree v1 index) with the standard
     * shuffle+deflate filter pipeline — how libhdf5 stores compressed
@@ -73,7 +69,7 @@ object Hdf5Writer {
       gzip: Boolean = true, shuffle: Boolean = true) extends Node
 
   // ---- datatype message encodings (version 1) ----
-  private def dtFixed(size: Int, signed: Boolean): Array[Byte] = {
+  private[sources] def dtFixed(size: Int, signed: Boolean): Array[Byte] = {
     val b = ByteBuffer.allocate(12).order(ByteOrder.LITTLE_ENDIAN)
     b.put(0x10.toByte) // version 1, class 0
     b.put((if (signed) 0x08 else 0x00).toByte); b.put(0.toByte); b.put(0.toByte)
@@ -83,7 +79,7 @@ object Hdf5Writer {
     b.array()
   }
 
-  private def dtFloat(size: Int): Array[Byte] = {
+  private[sources] def dtFloat(size: Int): Array[Byte] = {
     val b = ByteBuffer.allocate(20).order(ByteOrder.LITTLE_ENDIAN)
     b.put(0x11.toByte) // version 1, class 1
     b.put(0x20.toByte) // little-endian, implied-msb mantissa norm
@@ -96,7 +92,7 @@ object Hdf5Writer {
     b.array()
   }
 
-  private def dtString(len: Int): Array[Byte] = {
+  private[sources] def dtString(len: Int): Array[Byte] = {
     val b = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
     b.put(0x13.toByte) // version 1, class 3 (string)
     b.put(0.toByte); b.put(0.toByte); b.put(0.toByte) // null-terminated ASCII
@@ -104,7 +100,7 @@ object Hdf5Writer {
     b.array()
   }
 
-  private def dataspace(shape: Array[Long]): Array[Byte] = {
+  private[sources] def dataspace(shape: Array[Long]): Array[Byte] = {
     val b = ByteBuffer.allocate(8 + shape.length * 8).order(ByteOrder.LITTLE_ENDIAN)
     b.put(1.toByte); b.put(shape.length.toByte); b.put(0.toByte)
     b.put(0.toByte); b.putInt(0) // reserved(5)
@@ -126,48 +122,10 @@ object Hdf5Writer {
     def result: Array[Byte] = java.util.Arrays.copyOf(arr, end)
   }
 
-  private def pad8(n: Int): Int = (n + 7) / 8 * 8
+  private[sources] def pad8(n: Int): Int = (n + 7) / 8 * 8
 
   // one encoded v1 header message: (type, unpadded body)
   private final case class M(tpe: Int, body: Array[Byte])
-
-  private def attrMessage(name: String, value: Any): M = {
-    val (dtB, dsB, dataB): (Array[Byte], Array[Byte], Array[Byte]) = value match {
-      case d: Double =>
-        val b = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN); b.putDouble(d)
-        (dtFloat(8), dataspace(Array.empty), b.array())
-      case l: Long =>
-        val b = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN); b.putLong(l)
-        (dtFixed(8, signed = true), dataspace(Array.empty), b.array())
-      case i: Int =>
-        val b = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN); b.putLong(i.toLong)
-        (dtFixed(8, signed = true), dataspace(Array.empty), b.array())
-      case s: String =>
-        val raw = s.getBytes("UTF-8") :+ 0.toByte
-        (dtString(raw.length), dataspace(Array.empty), raw)
-      case a: Array[Double] =>
-        val b = ByteBuffer.allocate(8 * a.length).order(ByteOrder.LITTLE_ENDIAN)
-        a.foreach(b.putDouble)
-        (dtFloat(8), dataspace(Array(a.length.toLong)), b.array())
-      case a: Array[Long] =>
-        val b = ByteBuffer.allocate(8 * a.length).order(ByteOrder.LITTLE_ENDIAN)
-        a.foreach(b.putLong)
-        (dtFixed(8, signed = true), dataspace(Array(a.length.toLong)), b.array())
-      case v => sys.error(s"unsupported attribute type: ${v.getClass}")
-    }
-    val nameB = name.getBytes("UTF-8") :+ 0.toByte
-    val body = ByteBuffer.allocate(8 + pad8(nameB.length) + pad8(dtB.length) +
-      pad8(dsB.length) + dataB.length).order(ByteOrder.LITTLE_ENDIAN)
-    body.put(1.toByte); body.put(0.toByte)
-    body.putShort(nameB.length.toShort)
-    body.putShort(dtB.length.toShort)
-    body.putShort(dsB.length.toShort)
-    body.put(java.util.Arrays.copyOf(nameB, pad8(nameB.length)))
-    body.put(java.util.Arrays.copyOf(dtB, pad8(dtB.length)))
-    body.put(java.util.Arrays.copyOf(dsB, pad8(dsB.length)))
-    body.put(dataB)
-    M(0x0C, body.array())
-  }
 
   /** Write a version-1 object header with the given messages. */
   private def writeHeader(buf: Buf, msgs: Seq[M]): Int = {
@@ -188,7 +146,7 @@ object Hdf5Writer {
     addr
   }
 
-  private def writeDataset(buf: Buf, d: Data, attrs: Seq[(String, Any)]): Int = {
+  private def writeDataset(buf: Buf, d: Data): Int = {
     val dataAddr = buf.alloc(d.n * d.elemSize)
     d.putAll(buf.at(dataAddr, d.n * d.elemSize))
     val layout = ByteBuffer.allocate(18).order(ByteOrder.LITTLE_ENDIAN)
@@ -198,7 +156,7 @@ object Hdf5Writer {
     val msgs = Seq(
       M(0x01, dataspace(d.shape)),
       M(0x03, d.dtypeBytes),
-      M(0x08, layout.array())) ++ attrs.map { case (k, v) => attrMessage(k, v) }
+      M(0x08, layout.array()))
     writeHeader(buf, msgs)
   }
 
@@ -301,7 +259,7 @@ object Hdf5Writer {
     val kids = g.children.sortBy(_._1).map { case (name, node) =>
       val a = node match {
         case child: Group => writeGroup(buf, child)
-        case d: Data => writeDataset(buf, d, Nil)
+        case d: Data => writeDataset(buf, d)
         case c: Chunked => writeChunkedDataset(buf, c)
       }
       (name, a)
@@ -350,8 +308,11 @@ object Hdf5Writer {
     tb.putLong(kids.lastOption.map(k => nameOffs(k._1).toLong).getOrElse(0L))
     val stMsg = ByteBuffer.allocate(16).order(ByteOrder.LITTLE_ENDIAN)
     stMsg.putLong(btAddr.toLong); stMsg.putLong(heapAddr.toLong)
+    val names = g.attrs.map(_._1)
+    require(names.distinct == names, s"attribute set twice on one group " +
+      s"(HDF5 names are unique per object): ${names.diff(names.distinct).mkString(", ")}")
     val msgs = Seq(M(0x11, stMsg.array())) ++
-      g.attrs.map { case (k, v) => attrMessage(k, v) }
+      g.attrs.map { case (k, v) => M(0x0C, v.hdf5Message(k)) }
     writeHeader(buf, msgs)
   }
 

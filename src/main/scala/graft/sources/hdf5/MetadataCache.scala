@@ -26,7 +26,7 @@ import java.security.MessageDigest
   */
 object MetadataCache {
 
-  private val FormatVersion = 1
+  private val FormatVersion = 2 // 2: attribute values are `Attr`s
 
   /** Resolution order: `graft.cache.dir` system property (tests),
     * `GRAFT_CACHE_DIR` env, else a per-user directory under the JVM

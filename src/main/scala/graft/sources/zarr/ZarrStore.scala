@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 import java.util.zip.Inflater
+import graft.sources.Attr
 
 /** Pure-JVM reader for zarr v2 directory stores — written against the
   * public zarr v2 storage specification
@@ -44,7 +45,7 @@ object ZarrStore {
   }
 
   final case class Store(path: String, arrays: Seq[ArrayMeta],
-      attrs: Map[String, Map[String, Any]])
+      attrs: Map[String, Map[String, Attr]])
 
   /** Save-target safety (reference: src/scida/interface.py:311-320 —
     * scida's save() refuses to clobber a directory it did not write):
@@ -134,9 +135,9 @@ object ZarrStore {
           meta(k).asInstanceOf[Map[String, Any]])
       }
       val attrs = meta.collect {
-        case (".zattrs", v) => "/" -> v.asInstanceOf[Map[String, Any]]
+        case (".zattrs", v) => "/" -> attrsOf(v)
         case (k, v) if k.endsWith("/.zattrs") =>
-          s"/${k.stripSuffix("/.zattrs")}" -> v.asInstanceOf[Map[String, Any]]
+          s"/${k.stripSuffix("/.zattrs")}" -> attrsOf(v)
       }
       Some(Store(path, arrays, attrs))
     } catch { case _: Exception => None }
@@ -154,13 +155,14 @@ object ZarrStore {
     val attrDirs = (root -> "/") +: arrays.map(a => new File(a.dir) -> s"/${a.name}")
     val attrs = attrDirs.flatMap { case (dir, key) =>
       val f = new File(dir, ".zattrs")
-      if (f.exists())
-        Some(key -> MiniJson.parse(Files.readString(f.toPath))
-          .asInstanceOf[Map[String, Any]])
+      if (f.exists()) Some(key -> attrsOf(MiniJson.parse(Files.readString(f.toPath))))
       else None
     }.toMap
     Store(path, arrays, attrs)
   }
+
+  private def attrsOf(json: Any): Map[String, Attr] =
+    json.asInstanceOf[Map[String, Any]].map { case (k, v) => k -> Attr.fromJson(v) }
 
   /** Write `.zmetadata` for a store by embedding every metadata file
     * verbatim — zarr.consolidate_metadata() for this store layout.

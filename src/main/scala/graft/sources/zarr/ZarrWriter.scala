@@ -5,7 +5,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
-import graft.sources.ChunkedSave
+import graft.sources.{Attr, ChunkedSave}
 
 /** Zarr v2 directory-store writer (public spec, little-endian C-order
   * arrays, optional zlib chunks) — the `save()` target scida writes
@@ -49,9 +49,9 @@ object ZarrWriter {
 
   /** Write a group store: one array per (name → Arr), `attrs` keyed
     * like `ZarrStore.open` returns them ("/" root, "/name" per
-    * array). */
+    * array), each map written as that object's `.zattrs`. */
   def write(path: String, arrays: Seq[(String, Arr)],
-      attrs: Map[String, Map[String, Any]] = Map.empty,
+      attrs: Map[String, Map[String, Attr]] = Map.empty,
       chunkRows: Int = 1 << 16, compress: Boolean = true): Unit = {
     val metas = arrays.map { case (name, arr) => Meta(name, arr.dtype,
       arr.rows, arr.cols, math.min(chunkRows, math.max(arr.rows, 1))) }
@@ -72,7 +72,7 @@ object ZarrWriter {
     * DirectoryStore contract). Gaps, duplicates or nulls fail loudly. */
   def save(df: DataFrame, idCol: String, path: String,
       chunkRows: Int = 1 << 16, compress: Boolean = true,
-      attrs: Map[String, Map[String, Any]] = Map.empty): Unit = {
+      attrs: Map[String, Map[String, Attr]] = Map.empty): Unit = {
     val p = ChunkedSave.plan(df, idCol, chunkRows, "zarr save")
     writeMeta(path, p.cols.toSeq.map(f =>
       Meta(f.name, dtypeOf(f.dataType), p.rows, 1, chunkRows)), attrs, compress)
@@ -97,13 +97,13 @@ object ZarrWriter {
   /** .zgroup, the root .zattrs, and each array's dir with its .zarray
     * and .zattrs. */
   private def writeMeta(path: String, arrays: Seq[Meta],
-      attrs: Map[String, Map[String, Any]], compress: Boolean): Unit = {
+      attrs: Map[String, Map[String, Attr]], compress: Boolean): Unit = {
     val root = new File(path)
     ZarrStore.assertSaveTarget(root) // scida save() overwrite safety
     root.mkdirs()
     Files.writeString(new File(root, ".zgroup").toPath, """{"zarr_format": 2}""")
     attrs.get("/").foreach(a =>
-      Files.writeString(new File(root, ".zattrs").toPath, jsonObj(a)))
+      Files.writeString(new File(root, ".zattrs").toPath, Attr.jsonObject(a)))
     val comp = if (compress) """{"id": "zlib", "level": 1}""" else "null"
     arrays.foreach { m =>
       val dir = new File(root, m.name)
@@ -115,7 +115,7 @@ object ZarrWriter {
            | "dtype": "${m.dtype}", "compressor": $comp,
            | "fill_value": 0, "order": "C", "filters": null}""".stripMargin)
       attrs.get(s"/${m.name}").foreach(a =>
-        Files.writeString(new File(dir, ".zattrs").toPath, jsonObj(a)))
+        Files.writeString(new File(dir, ".zattrs").toPath, Attr.jsonObject(a)))
     }
   }
 
@@ -139,24 +139,4 @@ object ZarrWriter {
     Files.write(new File(dir, name).toPath,
       if (compress) ChunkedSave.deflate(bytes, 1) else bytes)
   }
-
-  private def jsonVal(v: Any): String = v match {
-    case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    case d: Double => d.toString
-    case f: Float => f.toString
-    case l: Long => l.toString
-    case i: Int => i.toString
-    case b: Boolean => b.toString
-    case xs: Seq[Any] @unchecked => xs.map(jsonVal).mkString("[", ", ", "]")
-    // primitive arrays too: HDF5 attributes (e.g. Hdf5Save's
-    // NumPart_ThisFile, a long[]) read back as JVM arrays
-    case a: Array[_] => jsonVal(a.toSeq)
-    case null => "null"
-    case other => sys.error(s"unsupported attr value $other")
-  }
-
-  private def jsonObj(m: Map[String, Any]): String =
-    m.toSeq.sortBy(_._1)
-      .map { case (k, v) => jsonVal(k) + ": " + jsonVal(v) }
-      .mkString("{", ", ", "}")
 }

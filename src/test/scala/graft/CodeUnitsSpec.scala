@@ -1,6 +1,7 @@
 package graft
 
 import graft.model.{CodeUnits, GraftDataset, Units}
+import graft.sources.Attr
 
 /** Code-unit system parsing + conversion — scida units="code"/"cgs"
   * load modes (units.py _get_default_units("code"), and the code-time
@@ -12,7 +13,7 @@ class CodeUnitsSpec extends SparkSpec {
   private val tng = CodeUnits(3.085678e21, 1.989e43, 1e5)
 
   test("fromAttrs: Header first, Parameters fallback, all-or-nothing") {
-    val full = Map("/Header" -> Map[String, Any](
+    val full = Map("/Header" -> Map[String, Attr](
       "UnitLength_in_cm" -> 3.085678e21, "UnitMass_in_g" -> 1.989e43,
       "UnitVelocity_in_cm_per_s" -> 1e5))
     assert(CodeUnits.fromAttrs(full).contains(tng))
@@ -20,7 +21,7 @@ class CodeUnitsSpec extends SparkSpec {
     val params = Map("/Parameters" -> full("/Header"))
     assert(CodeUnits.fromAttrs(params).contains(tng))
     // a partial system must not parse — silent partial conversion
-    val partial = Map("/Header" -> Map[String, Any](
+    val partial = Map("/Header" -> Map[String, Attr](
       "UnitLength_in_cm" -> 3.085678e21))
     assert(CodeUnits.fromAttrs(partial).isEmpty)
   }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.model.{Cosmology, GraftDataset}
 import graft.sources.hdf5.{ChunkedHdf5, Hdf5Writer}
+import graft.sources.Attr
 
 /** Cosmology mixin — scida CosmologyMixin semantics (reference:
   * src/scida/interfaces/mixins/cosmology.py:50-52 attach z/cosmology,
@@ -13,7 +14,7 @@ import graft.sources.hdf5.{ChunkedHdf5, Hdf5Writer}
   */
 class CosmologySpec extends SparkSpec {
 
-  private def snapshotWith(attrs: Seq[(String, Any)], extra: Seq[(String, Hdf5Writer.Group)] = Nil): String = {
+  private def snapshotWith(attrs: Seq[(String, Attr)], extra: Seq[(String, Hdf5Writer.Group)] = Nil): String = {
     val dir = Files.createTempDirectory("graft_cosmo").toString
     val root = Hdf5Writer.Group(children =
       Seq("Header" -> Hdf5Writer.Group(attrs = attrs)) ++ extra ++
@@ -23,7 +24,7 @@ class CosmologySpec extends SparkSpec {
     dir
   }
 
-  private val gadgetHeader = Seq[(String, Any)](
+  private val gadgetHeader = Seq[(String, Attr)](
     "Time" -> 0.25, "Redshift" -> 3.0, "HubbleParam" -> 0.6774,
     "Omega0" -> 0.3089, "OmegaBaryon" -> 0.0486)
 

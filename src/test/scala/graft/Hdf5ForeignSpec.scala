@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import java.util.zip.Deflater
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.hdf5.Hdf5Reader
+import graft.sources.Attr
 
 /** Foreign-bytes validation of the HDF5 reader: a file hand-assembled
   * here, byte by byte from the public HDF5 File Format Specification
@@ -194,8 +195,8 @@ class Hdf5ForeignSpec extends AnyFunSuite {
   test("v3 attribute messages inside a v2 header parse") {
     val f = Hdf5Reader.open(foreignPath)
     val a = f.attrs("/grid")
-    assert(a("Redshift") == 1.5)
-    assert(a("BoxSize") == 35000.0)
+    assert(a("Redshift") == Attr.F64(1.5))
+    assert(a("BoxSize") == Attr.F64(35000.0))
   }
 
   test("v2 filter pipeline + per-chunk mask: optional deflate skipped on the raw chunk") {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.hdf5.{ChunkedHdf5, Hdf5Reader, Hdf5Writer}
+import graft.sources.Attr
 
 /** On-disk metadata cache semantics (scida io/_base.py:366
   * `load_metadata` with `use_cachefile`): the second JVM/driver to
@@ -40,7 +41,7 @@ class Hdf5MetaCacheSpec extends AnyFunSuite {
       assert(second.groups == first.groups)
       assert(second.datasets.map(_.path) == first.datasets.map(_.path))
       assert(second.datasets.head.shape.toSeq == Seq(6L, 1L))
-      assert(second.attrs("/Header")("Redshift") == 2.0)
+      assert(second.attrs("/Header")("Redshift") == Attr.F64(2.0))
       // and the cached metadata still drives real data reads
       val buf = Hdf5Reader.readRows(path, second.datasets.head, 2, 3)
       assert(Array.fill(3)(buf.getDouble()).toSeq == Seq(3.0, 4.5, 6.0))
@@ -64,6 +65,33 @@ class Hdf5MetaCacheSpec extends AnyFunSuite {
       assert(Hdf5Reader.openCount.get() == before + 1,
         "stale sidecar must fall back to a real parse")
       assert(meta.datasets.head.shape.toSeq == Seq(9L, 1L))
+    }
+  }
+
+  test("a sidecar stamped with another format version is re-parsed, never served") {
+    withCacheDir {
+      val path = writeFixture()
+      val file = new java.io.File(path)
+      ChunkedHdf5.clearMemo()
+      val parsed = ChunkedHdf5.metadata(path)
+      val entry = new java.io.File(sys.props("graft.cache.dir")).listFiles()
+        .filter(_.getName.endsWith(".h5meta")).head
+      // an otherwise valid entry for this very file, holding a marker
+      // value, under each version but the current one
+      val marked = parsed.copy(attrs = Map("/Header" -> Map("Redshift" -> Attr.F64(99.0))))
+      Seq(1, 3).foreach { ver =>
+        val out = new java.io.ObjectOutputStream(new java.io.FileOutputStream(entry))
+        try {
+          out.writeInt(ver); out.writeUTF(file.getCanonicalPath)
+          out.writeLong(file.lastModified()); out.writeLong(file.length())
+          out.writeObject(marked)
+        } finally out.close()
+        ChunkedHdf5.clearMemo()
+        val before = Hdf5Reader.openCount.get()
+        val meta = ChunkedHdf5.metadata(path)
+        assert(Hdf5Reader.openCount.get() == before + 1, s"version $ver served")
+        assert(meta.attrs("/Header")("Redshift") == Attr.F64(2.0))
+      }
     }
   }
 

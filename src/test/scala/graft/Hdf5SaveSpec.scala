@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.hdf5.{ChunkedHdf5, Hdf5Save}
+import graft.sources.Attr
 
 /** Distributed chunked-HDF5 save (scida interface.py:273 save →
   * chunked snapshot layout): executor-parallel chunk files, driver
@@ -29,7 +30,7 @@ class Hdf5SaveSpec extends SparkSpec {
     assert(files.length == 8)
     // every chunk is self-contained: its own header with its own count
     val attrs = ChunkedHdf5.attrs(dir)
-    assert(attrs("/Header")("Redshift") == 1.5)
+    assert(attrs("/Header")("Redshift") == Attr.F64(1.5))
     // read-back: exact values in row order through the DSv2 source
     val back = ChunkedHdf5.load(spark, dir, "PartType0")
     assert(back.count() == n)

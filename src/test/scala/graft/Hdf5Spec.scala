@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.sources.hdf5.{ChunkedHdf5, Hdf5Reader, Hdf5Writer}
+import graft.sources.Attr
 
 /** HDF5 ingestion: the pure-JVM reader/writer pair, chunked-snapshot
   * discovery, and the graft-hdf5 DataSource V2 (scida
@@ -55,8 +56,8 @@ class Hdf5Spec extends SparkSpec {
     val ids = f.datasets.find(_.path == "/PartType0/ParticleIDs").get
     assert(ids.dtype.isInt && !ids.dtype.signed)
     val h = f.attrs("/Header")
-    assert(h("Redshift") == 1.0 && h("HubbleParam") == 0.6774)
-    assert(h("NumPart_ThisFile").asInstanceOf[Array[Long]].toSeq.head == 5L)
+    assert(h("Redshift") == Attr.F64(1.0) && h("HubbleParam") == Attr.F64(0.6774))
+    assert(h("NumPart_ThisFile").asInstanceOf[Attr.I64s].v.head == 5L)
   }
 
   test("reader returns raw rows matching what the writer stored") {
@@ -115,8 +116,8 @@ class Hdf5Spec extends SparkSpec {
   test("snapshot attrs feed driver-side metadata (header cosmology)") {
     val a = ChunkedHdf5.attrs(snapDir)
     val h = a("/Header")
-    assert(h("Omega0") == 0.3089)
-    assert(h("NumFilesPerSnapshot") == 3L)
+    assert(h("Omega0") == Attr.F64(0.3089))
+    assert(h("NumFilesPerSnapshot") == Attr.I64(3L))
   }
 
   test("scan planning opens each chunk file at most once (metadata memoized)") {

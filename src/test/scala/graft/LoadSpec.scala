@@ -4,6 +4,7 @@ import java.nio.file.Files
 import graft.sources.Load
 import graft.sources.hdf5.Hdf5Writer
 import graft.sources.zarr.ZarrWriter
+import graft.sources.Attr
 
 /** Format auto-detection — scida load()/discovertypes semantics
   * (reference: src/scida/convenience.py:287, src/scida/
@@ -54,7 +55,7 @@ class LoadSpec extends SparkSpec {
   }
 
   test("flavor: family markers vote as in scida's per-class validate_path") {
-    def snap(header: Seq[(String, Any)],
+    def snap(header: Seq[(String, Attr)],
         extra: Seq[(String, Hdf5Writer.Node)] = Nil): String = {
       val dir = Files.createTempDirectory("graft_flavor").toString
       Hdf5Writer.write(s"$dir/s.0.hdf5", Hdf5Writer.Group(children =

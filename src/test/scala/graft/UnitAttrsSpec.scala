@@ -4,6 +4,7 @@ import java.nio.file.Files
 import graft.model.{Cosmology, UnitAttrs, Units}
 import graft.sources.Load
 import graft.sources.zarr.ZarrWriter
+import graft.sources.Attr
 
 /** Unit extraction from dataset attributes — scida
   * extract_units_from_attrs semantics (reference:
@@ -34,7 +35,7 @@ class UnitAttrsSpec extends SparkSpec {
 
   test("TNG-style cgs scalings: to_cgs x dims, a/h through cosmology") {
     // ckpc/h coordinates: length^1, a^1, h^-1, to_cgs = kpc in cm
-    val attrs = Map[String, Any](
+    val attrs = Map[String, Attr](
       "to_cgs" -> 3.085677581e21, "length_scaling" -> 1.0,
       "a_scaling" -> 1.0, "h_scaling" -> -1.0)
     val Some((f, m)) = UnitAttrs.fromAttrs(attrs, Some(cosmo))

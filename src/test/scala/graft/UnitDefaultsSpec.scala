@@ -4,6 +4,7 @@ import java.nio.file.Files
 import graft.model.{Cosmology, UnitDefaults, Units}
 import graft.sources.Load
 import graft.sources.zarr.ZarrWriter
+import graft.sources.Attr
 
 /** Flavor-keyed unit defaults — scida's configfiles/units yaml files
   * resolved via units.py:411 add_units: per-family default units for
@@ -331,10 +332,10 @@ class UnitDefaultsSpec extends SparkSpec {
   }
 
   test("array-valued identifier attrs compare element-wise (misc.py:299)") {
-    // an HDF5 MassTable-style attr arrives as Array[Double]; the
+    // an HDF5 MassTable-style attr arrives as a double array; the
     // config side as a parsed JSON list — equality is element-wise
     // with numeric closeness, never String.valueOf identity
-    val meta: Map[String, Map[String, Any]] = Map("/Header" -> Map(
+    val meta: Map[String, Map[String, Attr]] = Map("/Header" -> Map(
       "MassTable" -> Array(0.0, 0.1, 0.0)))
     val cfg = cfgAt("""{"simulations": {"ArrSim": {"identifiers":
       |{"Header": {"MassTable": [0.0, 0.1000000001, 0.0]}},

@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.zarr.{ZarrStore, ZarrWriter}
+import graft.sources.Attr
 
 /** Distributed zarr save (`ZarrWriter.save`) — scida save()
   * (interface.py:273) with executor-parallel chunk writes:
@@ -30,7 +31,7 @@ class ZarrSaveSpec extends SparkSpec {
     assert(st.arrays.map(_.name).sorted == Seq("d", "f", "i", "l"))
     assert(st.arrays.forall(a => a.rows == n && a.chunkRows == 7 &&
       a.compressor.contains("zlib")))
-    assert(st.attrs("/")("Redshift") == 1.0 && st.attrs("/d")("unit") == "Msun")
+    assert(st.attrs("/")("Redshift") == Attr.F64(1.0) && st.attrs("/d")("unit") == Attr.Str("Msun"))
     assert(new File(s"$dir/l/3").exists() && !new File(s"$dir/l/4").exists())
     // read back through the DataSource and compare exactly
     val back = spark.read.format("graft-zarr").load(dir).orderBy("row_id")

@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.zarr.{MiniJson, ZarrStore, ZarrWriter}
+import graft.sources.Attr
 
 /** Zarr v2 store reader/writer and the graft-zarr DataSource V2 —
   * scida ZarrLoader semantics (reference: src/scida/io/_base.py:267)
@@ -41,13 +42,13 @@ class ZarrSpec extends SparkSpec {
     val dir = tmp()
     ZarrWriter.write(dir, Seq("x" -> ZarrWriter.F64(Array(1.0))),
       attrs = Map(
-        "/" -> Map("Redshift" -> 1.0, "name" -> "snap \"zero\"", "ids" -> Seq(1L, 2L)),
+        "/" -> Map("Redshift" -> 1.0, "name" -> "snap \"zero\"", "ids" -> Array(1L, 2L)),
         "/x" -> Map("unit" -> "Msun")))
     val st = ZarrStore.open(dir)
-    assert(st.attrs("/")("Redshift") == 1.0)
-    assert(st.attrs("/")("name") == "snap \"zero\"")
-    assert(st.attrs("/")("ids") == Seq(1.0, 2.0))
-    assert(st.attrs("/x")("unit") == "Msun")
+    assert(st.attrs("/")("Redshift") == Attr.F64(1.0))
+    assert(st.attrs("/")("name") == Attr.Str("snap \"zero\""))
+    assert(st.attrs("/")("ids") == Attr.F64s(Vector(1.0, 2.0)))
+    assert(st.attrs("/x")("unit") == Attr.Str("Msun"))
   }
 
   test("consolidated metadata: one-file open identical to the walk, stale-safe fallback") {

@@ -146,7 +146,9 @@ def main():
         ["sbt", "-batch", "Test/runMain graft.FuzzMain " + out + " "
          + ",".join(QUERIES) + " " + " ".join(dirs)],
         cwd="/root/repo", capture_output=True, text=True)
-    if "[success]" not in r.stdout:
+    # sbt -batch exits non-zero when the run fails; the build prints no
+    # `[success]` trailer to look for (build.sbt: showSuccess := false)
+    if r.returncode != 0:
         print(r.stdout[-4000:])
         print(r.stderr[-2000:])
         sys.exit(1)

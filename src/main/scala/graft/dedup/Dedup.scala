@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{Hashing, TextOps, VectorOps}
+import graft.operators.Partitions.spread
 
 /** Near-duplicate detection family for document corpora (SURVEY.md §2
   * "LLM-data-pipeline: deduplication").
@@ -116,18 +117,6 @@ object Dedup {
       k: Int, minJ: Double): DataFrame =
     ngramJaccardPairsFromShingles(persisted(withShingles(spread(docs), id, text, k)),
       id, minJ)
-
-  /** Shingling is the CPU-heavy stage (split + windowed slices per
-    * doc); materializing the persisted shingle frame runs it inside
-    * the input's scan stage, whose task count equals the input's
-    * split count. Repartition the (cheap) raw text first so the
-    * expensive compute always runs at full parallelism — the driver's
-    * test parquet has a single row group, and at 100 TB a skewed or
-    * under-split source gets the same guard for one small shuffle of
-    * raw text. */
-  private def spread(docs: DataFrame): DataFrame =
-    docs.repartition(docs.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt)
 
   /** The shingle frame is scanned three times downstream (prefix
     * ranking, verify side a, verify side b) — materialize it once

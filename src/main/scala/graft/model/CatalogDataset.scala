@@ -2,7 +2,7 @@ package graft.model
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.functions._
-import graft.operators.{GroupCatalog, GroupedChain, PrefixSum, RangeAssign}
+import graft.operators.{GroupCatalog, GroupedChain, Partitions, PrefixSum, RangeAssign}
 
 /** The halo-catalog-aware dataset — scida's ArepoSnapshot surface
   * (reference: src/scida/customs/arepo/dataset.py: `add_catalogIDs`
@@ -30,7 +30,7 @@ final class CatalogDataset(
 
   /** Exclusive per-group offsets in ascending group order —
     * get_groupoffsets, via the two-phase parallel prefix sum. */
-  def groupOffsets(buckets: Int = 32): DataFrame =
+  def groupOffsets(buckets: Int = Partitions.FromPlan): DataFrame =
     PrefixSum.exclusive(groupLengths, groupKey, col("len"), buckets)
 
   /** Per-subhalo lengths — get_subhalolengths (requires subKey). */
@@ -39,7 +39,7 @@ final class CatalogDataset(
 
   /** Fuzz-aware nested subhalo offsets — get_subhalooffsets:
     * groupOffset(parent) + local cumulative of earlier subhalos. */
-  def subhaloOffsets(buckets: Int = 32): DataFrame =
+  def subhaloOffsets(buckets: Int = Partitions.FromPlan): DataFrame =
     GroupCatalog.subhaloOffsets(
       groupLengths, groupKey, col("len"),
       subhaloLengths, requireSub, col("slen"), buckets)

@@ -76,8 +76,8 @@ object AsOfJoin {
     val unioned0 = l.withColumn("__p", lit(null).cast(r.schema("__p").dataType))
       .select((leftCols.map(col) :+ col("__side") :+ col("__p")): _*)
       .unionByName(r, allowMissingColumns = true)
-    val unioned = if (rangeBuckets > 0)
-      unioned0.repartitionByRange(rangeBuckets, col(key)) else unioned0
+    val unioned = if (rangeBuckets == 0) unioned0
+      else Partitions.byRange(unioned0, rangeBuckets, col(key))
     val wB = Window.partitionBy(key)
       .orderBy(col(time), col("__side"), col("__p").cast("string"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -98,9 +98,10 @@ object AsOfJoin {
   /** @param left  rows to enrich; must contain `key` and `time`
     * @param right rows providing `payload` columns; must contain
     *              `key`, `time`, and `payload`
-    * @param rangeBuckets when > 0, the union is RANGE-partitioned by
-    *              `key` into this many buckets instead of letting the
-    *              window plan a hash exchange — same single shuffle,
+    * @param rangeBuckets when non-zero, the union is RANGE-partitioned
+    *              by `key` into this many buckets ([[Partitions.FromPlan]]:
+    *              the plan's count) instead of letting the window plan
+    *              a hash exchange — same single shuffle,
     *              but the output leaves key-range-clustered, so a
     *              caller can pin a (key, ...) display order with a
     *              LOCAL sort instead of a second global sort
@@ -121,8 +122,8 @@ object AsOfJoin {
     // RangePartitioning(key) satisfies the window's
     // ClusteredDistribution(key) — same key, same partition — so the
     // window adds no further exchange on top of it
-    val unioned = if (rangeBuckets > 0)
-      unioned0.repartitionByRange(rangeBuckets, col(key)) else unioned0
+    val unioned = if (rangeBuckets == 0) unioned0
+      else Partitions.byRange(unioned0, rangeBuckets, col(key))
     // final tie-break on the payload's string form: multiple right
     // rows at the same (key, time) would otherwise resolve by shuffle
     // order — run-to-run nondeterminism the oracle hash would catch

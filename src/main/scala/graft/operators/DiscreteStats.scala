@@ -70,7 +70,7 @@ object DiscreteStats {
     val hist = guard(
       df.groupBy(value.as("v")).agg(count(lit(1)).as("c")),
       s"CDF feature", maxDistinct)
-    PrefixSum.exclusive(hist, "v", col("c"), buckets = 32, outCol = "cnt_lt")
+    PrefixSum.exclusive(hist, "v", col("c"), outCol = "cnt_lt")
       .select(col("v"), col("cnt_lt"))
   }
 

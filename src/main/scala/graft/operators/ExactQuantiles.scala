@@ -32,7 +32,7 @@ object ExactQuantiles {
   /** One row of exact interpolated quantiles for `probs`, columns
     * named by `names` (rounded to `scale` dp, engine-portable). */
   def quantiles(df: DataFrame, valueCol: String, probs: Seq[Double],
-      names: Seq[String], partitions: Int = 32, scale: Int = 4): DataFrame = {
+      names: Seq[String], partitions: Int = Partitions.FromPlan, scale: Int = 4): DataFrame = {
     require(probs.size == names.size)
     val spark = df.sparkSession
     val vals = values(df, valueCol, probs, partitions, scale)
@@ -45,15 +45,15 @@ object ExactQuantiles {
     * executors) — for consumers that feed them back into a plan as
     * literals (equi-depth binning, boundary-based pruning). */
   def values(df: DataFrame, valueCol: String, probs: Seq[Double],
-      partitions: Int = 32, scale: Int = 4): Seq[Double] = {
+      partitions: Int = Partitions.FromPlan, scale: Int = 4): Seq[Double] = {
     require(probs.nonEmpty, "probs must be non-empty")
     require(probs.forall(p => p >= 0.0 && p <= 1.0), "probs must be in [0,1]")
     val spark = df.sparkSession
     // the sorted frame feeds two passes (counts, rank extraction)
+    val vs = df.select(col(valueCol).cast("double").as("v"))
+      .filter(col("v").isNotNull)
     val sorted = graft.CacheScope.track(
-      df.select(col(valueCol).cast("double").as("v"))
-        .filter(col("v").isNotNull)
-        .repartitionByRange(partitions, col("v"))
+      Partitions.byRange(vs, partitions, col("v"))
         .sortWithinPartitions("v"))
     // pass 1: per-partition counts -> exclusive offsets (driver-side,
     // |partitions| longs)

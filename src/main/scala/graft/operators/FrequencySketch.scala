@@ -119,8 +119,7 @@ object FrequencySketch {
     // trivial at test scale; at 100 TB the scan has thousands of
     // natural splits and this branch never fires (shuffling the key
     // column of a 100 TB table IS the anti-pattern).
-    val target = df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
+    val target = Partitions.cap(df.sparkSession)
     // hash-partition BY KEY: each key's full count lands in one
     // summary, so bounded trims can never split-and-drop a hot key
     val spreadKeys =

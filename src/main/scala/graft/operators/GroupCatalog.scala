@@ -31,10 +31,14 @@ object GroupCatalog {
     * groupLen — may exceed the subhalo sum, fuzz included);
     * `subhalos`: one row per subhalo (groupKey = parent, subKey,
     * subLen). Adds `local_offset` (first-particle index within the
-    * parent group) and `offset` (global first-particle index). */
+    * parent group) and `offset` (global first-particle index).
+    * `buckets` is the range-bucket count of both the group prefix sum
+    * and the subhalo side; by default each side takes its own count
+    * from its plan ([[Partitions]]), so a 15,000-row catalog runs one
+    * bucket and a 1e8-halo catalog as many as the session allows. */
   def subhaloOffsets(groups: DataFrame, groupKey: String, groupLen: Column,
       subhalos: DataFrame, subKey: String, subLen: Column,
-      buckets: Int = 32): DataFrame = {
+      buckets: Int = Partitions.FromPlan): DataFrame = {
     val goff = PrefixSum.exclusive(groups, groupKey, groupLen, buckets, "__goff")
       .select(col(groupKey), col("__goff"))
     val inGroup = Window.partitionBy(groupKey).orderBy(subKey)
@@ -42,13 +46,15 @@ object GroupCatalog {
     // RANGE-partition the subhalo side by parent: RangePartitioning
     // (groupKey) satisfies the window's ClusteredDistribution
     // (groupKey) — same key, same partition, by binary search on the
-    // key — so the window adds NO further exchange, and the output
+    // key — and so does the SinglePartition a one-bucket count plans
+    // (no sampling job then), so the window adds NO further exchange,
+    // and the output
     // leaves here range-partitioned by group and sorted
     // (groupKey, subKey) inside each partition (the window's own
     // sort order), i.e. globally ordered across ascending partition
     // ids. Callers wanting ordered output `sortWithinPartitions`
     // instead of paying a global re-sort.
-    subhalos.repartitionByRange(buckets, col(groupKey))
+    Partitions.byRange(subhalos, buckets, col(groupKey))
       .withColumn("local_offset", sum(subLen).over(inGroup) - subLen)
       .join(goff, Seq(groupKey))
       .withColumn("offset", col("__goff") + col("local_offset"))
@@ -66,7 +72,8 @@ object GroupCatalog {
     * array columns; `pType` selects the component (0-based). */
   def subhaloOffsetsByType(groups: DataFrame, groupKey: String,
       groupLenType: Column, subhalos: DataFrame, subKey: String,
-      subLenType: Column, pType: Int, buckets: Int = 32): DataFrame = {
+      subLenType: Column, pType: Int,
+      buckets: Int = Partitions.FromPlan): DataFrame = {
     require(pType >= 0, s"particle type must be >= 0, got $pType")
     // out-of-range element_at returns null in non-ANSI mode and nulls
     // would silently propagate through every prefix sum — fail loudly

@@ -15,7 +15,11 @@ import org.apache.spark.sql.types._
   *   1. range-partition by key, sort within each partition, and stamp
   *      each row with its frozen bucket id (`spark_partition_id()`
   *      evaluated once, at cache materialization) — the layout this
-  *      operator trusts is IN the cached data, not in task ids,
+  *      operator trusts is IN the cached data, not in task ids. The
+  *      bucket count is the caller's, or by default the input plan's
+  *      ([[Partitions]]: estimated bytes over Spark's advisory
+  *      partition size, capped at the shuffle partitions), so a small
+  *      input runs ONE bucket with no range-sampling job,
   *   2. per-bucket totals — ONE bounded driver collect (<= `buckets`
   *      values, a partition STATISTIC, never data), exclusive-scanned
   *      driver-side,
@@ -34,10 +38,13 @@ import org.apache.spark.sql.types._
   * ONE task, and the whole query ran as 12 jobs (measured with
   * JobPeek: half the wall time was inter-stage scheduling barriers).
   * Per-partition running state is the textbook genuine
-  * `mapPartitions` case; this form runs 3 jobs and shuffles nothing
-  * after the range partitioning. At 1e8+ groups nothing serializes:
+  * `mapPartitions` case; this form runs 3 jobs (input cache, ranged
+  * cache, totals collect; Spark adds its range-sampling job when the
+  * count exceeds one) and shuffles nothing after the range
+  * partitioning. At 1e8+ groups nothing serializes:
   * the collect is `buckets` longs, everything else is
-  * partition-parallel.
+  * partition-parallel — and at that size the plan's bucket count is
+  * the session's full parallelism.
   */
 object PrefixSum {
 
@@ -54,8 +61,8 @@ object PrefixSum {
     * output should `sortWithinPartitions(key)` (a near-no-op local
     * pass over already-sorted runs), never `orderBy(key)` — a global
     * sort would resample + reshuffle what is already in order. */
-  def exclusive(dfIn: DataFrame, key: String, len: Column, buckets: Int,
-      outCol: String = "offset"): DataFrame = {
+  def exclusive(dfIn: DataFrame, key: String, len: Column,
+      buckets: Int = Partitions.FromPlan, outCol: String = "offset"): DataFrame = {
     val lenType = dfIn.select(len).schema.head.dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(lenType),
       s"prefix-sum length must be integral (a count/length), got $lenType")
@@ -71,7 +78,8 @@ object PrefixSum {
     // (MEMORY_AND_DISK spills rather than evicts; within one query
     // action the materialization is single).
     val ranged = graft.CacheScope.track(
-      in.repartitionByRange(buckets, col(key)).sortWithinPartitions(key)
+      Partitions.byRange(in, buckets, col(key))
+        .sortWithinPartitions(key)
         .withColumn("__b", spark_partition_id()))
     // phase 2: per-bucket totals, aggregated per task then merged
     // driver-side — no shuffle, bounded by the bucket count
@@ -141,13 +149,14 @@ object PrefixSum {
     * pairs must be unique; `group` must be non-null. Output layout:
     * range-partitioned by (group, key), sorted within partitions. */
   def exclusivePerGroup(dfIn: DataFrame, group: String, key: String,
-      len: Column, buckets: Int, outCol: String = "offset"): DataFrame = {
+      len: Column, buckets: Int = Partitions.FromPlan,
+      outCol: String = "offset"): DataFrame = {
     val lenType = dfIn.select(len).schema.head.dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(lenType),
       s"prefix-sum length must be integral (a count/length), got $lenType")
     val in = graft.CacheScope.track(dfIn.withColumn("__len", len.cast(LongType)))
     val ranged = graft.CacheScope.track(
-      in.repartitionByRange(buckets, col(group), col(key))
+      Partitions.byRange(in, buckets, col(group), col(key))
         .sortWithinPartitions(group, key)
         .withColumn("__b", spark_partition_id()))
     // phase 2: per-(bucket, group) totals — bounded by run count

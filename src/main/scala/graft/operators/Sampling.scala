@@ -120,7 +120,7 @@ object Sampling {
     * into one task. */
   def budgetSelect(df: DataFrame, idCol: String, stratumCol: String,
       weight: Column, budgets: Map[String, Long],
-      buckets: Int = 32): DataFrame = {
+      buckets: Int = Partitions.FromPlan): DataFrame = {
     val inBudget = budgets.keys.toSeq
     val pri = PrefixSum.exclusivePerGroup(
       df.filter(col(stratumCol).isin(inBudget: _*))

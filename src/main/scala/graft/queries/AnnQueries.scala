@@ -195,7 +195,7 @@ object AnnQueries {
       val centers = sqrtQuantizer(s, d)
       val p = Fixtures.tmpPath(prefix, d)
       writeCells(Ivf.assign(rows, "embedding", centers))(p)
-      (p, centers, Ivf.cellRadii(s.read.parquet(p), centers, "embedding"))
+      (p, centers, Ivf.cellRadii(Tables.parquetCached(s, p), centers, "embedding"))
     }
 
   private[queries] def ivfRadiusIndexFor(s: org.apache.spark.sql.SparkSession,
@@ -475,7 +475,7 @@ object AnnQueries {
         val q = headOf(s, d).q
         val probes = Ivf.radiusProbeCells(centers, radii, q, minCos = 0.2)
         graft.ann.Ann.radiusSearch(
-          s.read.parquet(p)
+          Tables.parquetCached(s, p)
             .filter(col("cell").isin(probes.map(Integer.valueOf): _*)),
           "vec_id", "embedding", typedLit(q), minCos = 0.2)
       },
@@ -500,7 +500,7 @@ object AnnQueries {
         val q = headOf(s, d).q
         val probes = Ivf.radiusProbeCells(centers, radii, q, minCos = 0.2)
         Ann.radiusSearch(
-            s.read.parquet(p)
+            Tables.parquetCached(s, p)
               .filter(col("cell").isin(probes.map(Integer.valueOf): _*)),
             "vec_id", "embedding", typedLit(q), minCos = 0.2)
           .unionByName(Ann.radiusSearch(deltaRows(s, d), "vec_id", "embedding",
@@ -524,7 +524,7 @@ object AnnQueries {
     "ann_stream_search" -> QueryDef.sql(
       (s, d) => {
         val (p, centers, radii) = streamSearchFor(s, d)
-        Ivf.radiusSearch(s.read.parquet(p), centers, radii,
+        Ivf.radiusSearch(Tables.parquetCached(s, p), centers, radii,
             "vec_id", "embedding", headOf(s, d).q, minCos = 0.2)
           .orderBy("vec_id")
       },
@@ -539,7 +539,7 @@ object AnnQueries {
       (s, d) => {
         val (indexed, centers) = ivfIndexed(s, d)
         val p = Fixtures.writeOnce("graft_ivf_index", d)(writeCells(indexed))
-        Ivf.topK(s.read.parquet(p), centers, "vec_id", "embedding",
+        Ivf.topK(Tables.parquetCached(s, p), centers, "vec_id", "embedding",
           headOf(s, d).q, k = 10, nProbe = 6)
       },
       ORACLE_RECALL,
@@ -563,7 +563,7 @@ object AnnQueries {
         val p = Fixtures.writeOnce("graft_pq_index", d)(out =>
           Pq.encode(corpus, "vec_id", "embedding", cb).toDF()
             .write.mode("overwrite").parquet(out))
-        Pq.topK(s.read.parquet(p).as[graft.ann.Pq.Code], corpus, cb,
+        Pq.topK(Tables.parquetCached(s, p).as[graft.ann.Pq.Code], corpus, cb,
           "vec_id", "embedding", headOf(s, d).q, k = 10, refine = 100)
       },
       ORACLE_RECALL,
@@ -584,7 +584,7 @@ object AnnQueries {
         val (p, index) = ivfpqIndexFor(s, d)
         val q = headOf(s, d).q
         val probes = graft.ann.IvfPq.probeCells(index, q, nProbe = 6)
-        val codes = s.read.parquet(p)
+        val codes = Tables.parquetCached(s, p)
           .filter(col("cell").isin(probes.map(Int.box): _*))
           .as[graft.ann.IvfPq.CellCode]
         val corpus = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
@@ -650,7 +650,7 @@ object AnnQueries {
       // (the query table is re-read per execution: it is the live input)
       (s, d) => {
         val (p, centers) = ivfBatchIndexFor(s, d)
-        Ivf.batchTopK(s.read.parquet(p), centers, "vec_id", "embedding",
+        Ivf.batchTopK(Tables.parquetCached(s, p), centers, "vec_id", "embedding",
           batchQueries(Tables.embeddings(s, d)), "q_id", "q_emb", k = 3,
           nProbe = batchIvfProbe(centers.length))
       },

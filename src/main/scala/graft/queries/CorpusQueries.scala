@@ -73,7 +73,7 @@ object CorpusQueries {
       val p = Fixtures.tmpPath("graft_boiler_lines", d)
       Dedup.boilerplateLineSet(linedDocs(s, d), "doc_id", "aug", minDocs = 3L)
         .write.mode("overwrite").parquet(p)
-      s.read.parquet(p).collect().map(_.getString(0)).toSet
+      Tables.parquetCached(s, p).collect().map(_.getString(0)).toSet
     }
 
   // split_by_cluster's persisted full-corpus label table (the dedup
@@ -521,7 +521,7 @@ object CorpusQueries {
     "split_by_cluster" -> QueryDef.sqlAt(
       (s, d) => {
         val p = ccFullFor(s, d)
-        val labels = s.read.parquet(p).select(col("doc_id"), col("cluster"))
+        val labels = Tables.parquetCached(s, p).select(col("doc_id"), col("cluster"))
         val a = labels.select(col("doc_id"), col("cluster"),
           splitFate(col("doc_id")).as("naive_split"),
           splitFate(col("cluster")).as("split"))
@@ -662,7 +662,7 @@ object CorpusQueries {
         val toks = Tables.documents(s, d).select(col("doc_id"),
           TextOps.bpeishTokenCount(col("text")).cast("long").as("n_tokens"))
         graft.operators.PrefixSum.exclusive(toks, "doc_id", col("n_tokens"),
-            buckets = 32, outCol = "start_tok")
+            outCol = "start_tok")
           .select(col("doc_id"), col("n_tokens"), col("start_tok"),
             expr(s"start_tok div $ctx").as("seq_id"),
             (col("start_tok") % ctx).as("seq_off"),
@@ -709,7 +709,7 @@ object CorpusQueries {
           graft.functions.BpeColumns.tokenCount(col("text"), tok)
             .cast("long").as("n_tokens"))
         graft.operators.PrefixSum.exclusive(toks, "doc_id", col("n_tokens"),
-            buckets = 32, outCol = "start_tok")
+            outCol = "start_tok")
           .select(col("doc_id"), col("n_tokens"), col("start_tok"),
             expr(s"start_tok div $ctx").as("seq_id"),
             (col("start_tok") % ctx).as("seq_off"),
@@ -758,7 +758,7 @@ object CorpusQueries {
           concat_ws("-", md5(col("doc_id").cast("string")),
             lpad(col("doc_id").cast("string"), 8, "0")).as("h"))
         graft.operators.PrefixSum.exclusive(toks, "h", col("n_tokens"),
-            buckets = 32, outCol = "start_tok")
+            outCol = "start_tok")
           .select(col("n_tokens"), expr(s"start_tok div $budget").as("shard"))
           .groupBy("shard")
           .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("tokens"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
+import graft.operators.Partitions
 import graft.sources.Tables
 
 /** Deduplication family over `documents` / `embeddings` (SURVEY.md §2).
@@ -365,7 +366,7 @@ object DedupQueries {
     // (signature correctness itself is pinned by HashingSpec).
     // s·(s−1) is even, so `div 2` stays exact integer arithmetic. ---
     "lsh_bucket_stats" -> QueryDef.sqlAt(
-      (s, d) => s.read.parquet(lshBandsFor(s, d))
+      (s, d) => Tables.parquetCached(s, lshBandsFor(s, d))
         .groupBy("band", "key").agg(count(lit(1)).as("sz"))
         .groupBy("band")
         .agg(count(lit(1)).as("n_buckets"),
@@ -398,7 +399,7 @@ object DedupQueries {
     "ngram_novelty" -> QueryDef.sql(
       (s, d) => {
         val sh = graft.CacheScope.track(
-          Dedup.withShingles(QueryDef.spread(Tables.documents(s, d)),
+          Dedup.withShingles(Partitions.spread(Tables.documents(s, d)),
               "doc_id", "text", 3)
             .select(col("doc_id"), explode(col("sh")).as("shingle")))
         val first = sh.groupBy("shingle").agg(min("doc_id").as("first_doc"))
@@ -540,10 +541,10 @@ object DedupQueries {
         val (pb, ps) = ccIndexFor(s, d)
         val batch = Tables.documents(s, d)
           .filter(pmod(col("doc_id"), lit(3)) === 0)
-        val baseLabels = s.read.parquet(ccBaseFor(s, d))
+        val baseLabels = Tables.parquetCached(s, ccBaseFor(s, d))
           .select("doc_id", "cluster")
         val edges = Dedup.minhashIncrementalEdgesFromIndex(
-          s.read.parquet(pb), s.read.parquet(ps), batch, "doc_id", "text",
+          Tables.parquetCached(s, pb), Tables.parquetCached(s, ps), batch, "doc_id", "text",
           k = 3, sigLen = 64, bands = 16, minJ = 0.8)
         Dedup.clustersIncremental(baseLabels, batch.select("doc_id"), edges)
           .orderBy("doc_id")
@@ -629,7 +630,7 @@ object DedupQueries {
       // shuffle files) — the ORDER BY's sampling would re-run every
       // pairwise dot product without the barrier
       (s, d) => QueryDef.sortBarrier(
-          Dedup.embCosPairsFromCells(s.read.parquet(embcosCellsFor(s, d)),
+          Dedup.embCosPairsFromCells(Tables.parquetCached(s, embcosCellsFor(s, d)),
             Tables.embeddings(s, d), "vec_id", "embedding", minCos = 0.4))
         .orderBy("id_a", "id_b"),
       d => s"""WITH asg AS (
@@ -658,7 +659,7 @@ object DedupQueries {
       (s, d) => {
         val (cells, centers) = semIndexFor(s, d)
         graft.dedup.SemDedup.pruneFromCells(
-            s.read.parquet(cells), Tables.embeddings(s, d), "vec_id",
+            Tables.parquetCached(s, cells), Tables.embeddings(s, d), "vec_id",
             "embedding", centers, minCos = 0.4)
           .orderBy("vec_id")
       },

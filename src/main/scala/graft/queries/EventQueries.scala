@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps.roundAt
-import graft.operators.{AsOfJoin, RangeJoin, Sessionize}
+import graft.operators.{AsOfJoin, Partitions, RangeJoin, Sessionize}
 import graft.sources.Tables
 
 /** Event-time operators over the `events` table: tumbling-window
@@ -160,11 +160,11 @@ object EventQueries {
       // windows AND the per-session rollup cluster on user_id, which
       // RangePartitioning(user_id) satisfies — no hash exchange, no
       // global output sort (local sort over the range layout pins the
-      // order). Explicit bucket count keeps the windows parallel
-      // instead of AQE-coalescing a ~MB shuffle into one task.
+      // order). The windows are per-row CPU, so the bucket count is
+      // the session's parallelism (Partitions.cap), not the plan's
+      // byte count, which plans one task for a ~MB table.
       (s, d) => Sessionize.sessions(
-        Tables.events(s, d)
-          .repartitionByRange(32, col("user_id")),
+        Partitions.byRange(Tables.events(s, d), Partitions.cap(s), col("user_id")),
         "user_id", col("ts_us"), GapUs, col("value"))
         .select(col("user_id"), col("session_seq"), col("n_events"),
           (col("t_end") - col("t_start")).as("dur_us"),
@@ -206,7 +206,7 @@ object EventQueries {
         // display order is pinned with a local sort over that layout
         // (the old orderBy(event_id) re-sorted the output globally)
         AsOfJoin.asof(clicks, views, "user_id", "ts_us", Seq("view_value"),
-            rangeBuckets = 32)
+            rangeBuckets = Partitions.cap(s))
           .filter(col("view_value").isNotNull)
           .select(col("event_id"), col("user_id"),
             roundAt(col("view_value"), 2).as("view_value"))
@@ -232,7 +232,7 @@ object EventQueries {
         val views = e.filter(col("event_type") === "view")
           .select(col("user_id"), col("ts_us"), col("value").as("view_value"))
         AsOfJoin.asofTolerance(clicks, views, "user_id", "ts_us",
-            Seq("view_value"), TolUs, rangeBuckets = 32)
+            Seq("view_value"), TolUs, rangeBuckets = Partitions.cap(s))
           .filter(col("view_value").isNotNull)
           .select(col("event_id"), col("user_id"),
             roundAt(col("view_value"), 2).as("view_value"))
@@ -258,7 +258,7 @@ object EventQueries {
         val views = e.filter(col("event_type") === "view")
           .select(col("user_id"), col("ts_us"), col("value").as("view_value"))
         AsOfJoin.asofForward(clicks, views, "user_id", "ts_us",
-            Seq("view_value"), rangeBuckets = 32)
+            Seq("view_value"), rangeBuckets = Partitions.cap(s))
           .filter(col("view_value").isNotNull)
           .select(col("event_id"), col("user_id"),
             roundAt(col("view_value"), 2).as("view_value"))

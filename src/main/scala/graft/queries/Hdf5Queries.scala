@@ -57,7 +57,7 @@ object Hdf5Queries {
   private def indexedOrders(s: org.apache.spark.sql.SparkSession, d: String) =
     graft.operators.PrefixSum.exclusive(
       Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"),
-      "o_orderkey", lit(1L), buckets = 32, outCol = "__row")
+      "o_orderkey", lit(1L), outCol = "__row")
 
   /** A TNG-shaped particle snapshot: arepo family markers
     * (`Git_commit` in /Header, customs/arepo/dataset.py:230), a

@@ -12,13 +12,13 @@ import graft.sources.Tables
   */
 object MultimodalQueries {
 
-  // QueryDef.spread: the codec loops must not inherit the scan's
+  // Partitions.spread: the codec loops must not inherit the scan's
   // (possibly single-task) split; QueryDef.sortBarrier: their ORDER
   // BY must not re-run the encode+decode for range sampling. Worth it
   // HERE because per-row codec work dwarfs the guards' fixed shuffle+
   // cache cost — the cheap map-side text queries measured faster
   // without the guards at bench scale, so they don't carry them.
-  private val spread = QueryDef.spread _
+  private val spread = graft.operators.Partitions.spread _
 
   def defs: Map[String, QueryDef] = Map(
     "multimodal_meta" -> QueryDef.sql(
@@ -58,7 +58,7 @@ object MultimodalQueries {
       // tiny (4 scalars/doc) — cache it and let both the sample and
       // the sort read the cache. CacheScope releases it at query end.
       (s, d) => QueryDef.sortBarrier(
-        BinaryMeta.decodeImageMeta(s.read.parquet(imgBlobsFor(s, d)),
+        BinaryMeta.decodeImageMeta(Tables.parquetCached(s, imgBlobsFor(s, d)),
           "doc_id", "payload")
           .toDF()
           .select(col("id"), col("width"), col("height"), col("format")))
@@ -80,7 +80,7 @@ object MultimodalQueries {
       // same map-only-child barrier as multimodal_decode: without it
       // the orderBy's sampling job parses every WAV a second time
       (s, d) => QueryDef.sortBarrier(
-        BinaryMeta.decodeAudioMeta(s.read.parquet(wavBlobsFor(s, d)),
+        BinaryMeta.decodeAudioMeta(Tables.parquetCached(s, wavBlobsFor(s, d)),
           "doc_id", "payload")
           .toDF()
           .select(col("id"), col("sample_rate").cast("int").as("sample_rate"),
@@ -107,7 +107,7 @@ object MultimodalQueries {
     // tolerance (the property hash-equality can't gate) is pinned in
     // ImageDecodeSpec. ---
     "dedup_phash" -> QueryDef.sql(
-      (s, d) => phashGroups(s.read.parquet(clsBlobsFor(s, d))),
+      (s, d) => phashGroups(Tables.parquetCached(s, clsBlobsFor(s, d))),
       """SELECT doc_id,
         |  min(doc_id) OVER (PARTITION BY doc_id % 16) AS keep_doc,
         |  count(*) OVER (PARTITION BY doc_id % 16) AS n_dups
@@ -124,7 +124,7 @@ object MultimodalQueries {
     // collision across classes, a split within one, or a dropped
     // blob all hash-fail. ---
     "dedup_audiofp" -> QueryDef.sql(
-      (s, d) => afpGroups(s.read.parquet(clsWavBlobsFor(s, d))),
+      (s, d) => afpGroups(Tables.parquetCached(s, clsWavBlobsFor(s, d))),
       """SELECT doc_id,
         |  min(doc_id) OVER (PARTITION BY doc_id % 12) AS keep_doc,
         |  count(*) OVER (PARTITION BY doc_id % 12) AS n_dups

@@ -35,15 +35,6 @@ object QueryDef {
       g: (SparkSession, String, DataFrame) => DataFrame): QueryDef =
     QueryDef(b, Some(_ => o), Some(g))
 
-  /** Full-parallelism guard for compute-heavy map stages: the driver's
-    * test parquet is ONE row group, so an expensive per-row stage fed
-    * straight from the scan runs in a single task regardless of
-    * cluster size — shuffle the (cheap) raw rows first. The same
-    * guard an under-split or skewed source needs at 100 TB. */
-  def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt)
-
   /** DuckDB replay of VectorOps.cosineFast over two 64-dim embedding
     * column refs (e.g. `"e.embedding"`, `"q.q_emb"`): cast each
     * element to double, products and strict left-to-right sums in

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps.roundAt
+import graft.operators.Partitions
 import graft.sources.Tables
 
 /** Relational engine core: joins, sorts, windows, rollups, quantiles,
@@ -199,9 +200,9 @@ object RelationalQueries {
         // the window adds no hash exchange, and the range layout makes
         // the display order pinnable with a LOCAL sort — the old
         // hash-window + global orderBy planned two shuffles + a
-        // sampled sort of the full output. Explicit bucket count so
-        // AQE never coalesces the window into one task.
-        Tables.orders(s, d).repartitionByRange(32, col("o_custkey"))
+        // sampled sort of the full output. The window is per-row
+        // CPU, so the bucket count is the session's parallelism.
+        Partitions.byRange(Tables.orders(s, d), Partitions.cap(s), col("o_custkey"))
           .select(col("o_custkey"), col("o_orderkey"),
             round(sum(col("o_totalprice")).over(w), 2).as("running"))
           .sortWithinPartitions("o_custkey", "o_orderkey")

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{GroupTopK, Histograms, PrefixSum, RangeAssign, Spatial}
+import graft.operators.{GroupTopK, Histograms, Partitions, PrefixSum, RangeAssign, Spatial}
 import graft.sources.Tables
 
 /** Queries that re-express scida's own capability surface
@@ -19,7 +19,7 @@ object ScidaQueries {
     * is the scan, not the one-time layout write. */
   private def zOrderedPart(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(Fixtures.writeOnce("graft_zpart", d)(p =>
+    Tables.parquetCached(s, Fixtures.writeOnce("graft_zpart", d)(p =>
       Spatial.writeZOrdered(Tables.part(s, d), p,
         Seq(("p_size", 1.0, 51.0), ("p_retailprice", 900.0, 2000.0)),
         numFiles = 16)))
@@ -33,12 +33,14 @@ object ScidaQueries {
     * query is the scan, not the one-time layout write. Narrow per-row
     * queries ordered by the key then need only a LOCAL sort over the
     * already-sorted scan — no range exchange, no boundary-sampling
-    * re-execution of the child. */
+    * re-execution of the child. One file per session partition
+    * ([[Partitions.cap]]), so a scan of the copy keeps the session's
+    * parallelism. */
   private def sortedLineitem(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(Fixtures.writeOnce("graft_li_sorted", d)(p =>
-      Tables.lineitem(s, d)
-        .repartitionByRange(16, col("l_orderkey"), col("l_linenumber"))
+    Tables.parquetCached(s, Fixtures.writeOnce("graft_li_sorted", d)(p =>
+      Partitions.byRange(Tables.lineitem(s, d), Partitions.cap(s),
+          col("l_orderkey"), col("l_linenumber"))
         .sortWithinPartitions("l_orderkey", "l_linenumber")
         .write.mode("overwrite").parquet(p)))
 
@@ -69,12 +71,12 @@ object ScidaQueries {
         PrefixSum.exclusive(
           df.select(col(id), cents.as("cents"),
             ((lit(base) - cents) * 10000000L + col(id)).as("rk_key")),
-          "rk_key", lit(1), buckets = 32, outCol = "rank")
+          "rk_key", lit(1), outCol = "rank")
       val hp = Fixtures.tmpPath("graft_rank_halo", d)
       val gp = Fixtures.tmpPath("graft_rank_gal", d)
       // coalesce(1): one globally-rank-ordered file per catalog
       // (PrefixSum's row-stamp bases make the concatenation safe) —
-      // at bench scale 32 bucket files would cost more in footer
+      // at bench scale one file per bucket would cost more in footer
       // reads than the data; a petabyte catalog keeps the buckets
       ranked(Tables.orders(s, d), "o_orderkey",
           floor(col("o_totalprice") * 100 + 0.5).cast("long"), 100000000L)
@@ -495,7 +497,7 @@ object ScidaQueries {
       (s, d) => PrefixSum.exclusive(
         Tables.lineitem(s, d)
           .groupBy("l_orderkey").agg(count(lit(1)).as("len")),
-        "l_orderkey", col("len"), buckets = 32)
+        "l_orderkey", col("len"))
         .select("l_orderkey", "len", "offset")
         // PrefixSum's contract: already range-partitioned + sorted by
         // key — the local sort just pins the ordering Catalyst can't
@@ -542,15 +544,18 @@ object ScidaQueries {
         // 1-3-task partial agg made the query ~0.5 s SLOWER — the
         // extra 600k-row exchange exceeds what it parallelizes. The
         // hot spot is fixture-layout, not plan shape.
-        // Trace-pinned MINIMAL (r13 JobPeek, warm): 13 jobs = perOrder
-        // agg + sub cache + PrefixSum's declared waves (input cache,
-        // range-boundary sampling, ranged cache, totals collect) + the
-        // subhalo range exchange + window/join + output — each wave is
-        // the two-phase-scan algorithm, no second exchange stacks on
-        // the PrefixSum output (the window rides the repartitionByRange
-        // layout, the goff join is broadcast). Locally wave-bound
-        // (~0.1 s/wave at local[32]); at 1e8 groups the same waves are
-        // amortized over real data — the scale-correct shape.
+        // Job shape (graft.Peek jobs, warm, sf0.01 at local[4]): 11
+        // jobs and 26 tasks = perOrder agg + sub cache + PrefixSum's
+        // declared waves (input cache, ranged cache, totals collect) +
+        // the subhalo exchange + window/join + output. Both bucket
+        // counts come from the plan (operators.Partitions): this
+        // catalog is a few hundred KB, so each side plans ONE
+        // partition and no range-boundary sampling job runs (the
+        // literal 32 buckets cost 13 jobs and 158 tasks). No second
+        // exchange stacks on the PrefixSum output (the window rides
+        // the repartition layout, the goff join is broadcast); at 1e8
+        // groups the plan's count reaches the session's parallelism
+        // and the sampling waves return, amortized over real data.
         val perOrder = Tables.lineitem(s, d)
           .groupBy("l_orderkey").agg(count(lit(1)).as("slen"))
         val sub = graft.CacheScope.track(
@@ -612,8 +617,8 @@ object ScidaQueries {
         // so a local sort pins the output order with no second
         // exchange. Same row movement at 100 TB: the fact shuffles
         // once either way; the dim broadcasts either way.
-        val l = Tables.lineitem(s, d)
-          .repartitionByRange(32, col("l_orderkey"), col("l_linenumber"))
+        val l = Partitions.byRange(Tables.lineitem(s, d), Partitions.cap(s),
+          col("l_orderkey"), col("l_linenumber"))
         val o = Tables.orders(s, d).select("o_orderkey", "o_totalprice")
         l.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
           .select(col("l_orderkey"), col("l_linenumber"),
@@ -1307,8 +1312,8 @@ object ScidaQueries {
         // broadcast joins preserve the layout, so a local sort pins
         // the output order — same move as group_quantity_join
         graft.operators.GroupCatalog.localSubhaloIndex(
-          Tables.lineitem(s, d).select("l_orderkey", "l_linenumber")
-            .repartitionByRange(32, col("l_orderkey"), col("l_linenumber"))
+          Partitions.byRange(Tables.lineitem(s, d).select("l_orderkey", "l_linenumber"),
+              Partitions.cap(s), col("l_orderkey"), col("l_linenumber"))
             .join(broadcast(o.select("o_orderkey", "o_custkey")),
               col("l_orderkey") === col("o_orderkey")),
           "l_orderkey", bound, "o_custkey", "o_orderkey")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
 import graft.functions.VectorOps.roundAt
+import graft.operators.Partitions
 import graft.sources.Tables
 
 /** Text-analysis pipeline over the `documents` table: language ID,
@@ -62,7 +63,7 @@ object TextQueries {
     // positional bigrams with multiplicity (ngram_lm_score's build,
     // lang carried through for the per-language bucket cut)
     val bigrams = graft.CacheScope.track(
-      QueryDef.spread(words.filter(size(col("w")) >= 2))
+      Partitions.spread(words.filter(size(col("w")) >= 2))
         .select(col("doc_id"), col("lang"), explode(expr(
           "transform(sequence(0, size(w)-2), i -> struct(w[i] AS w1, concat(w[i], ' ', w[i+1]) AS bg))")).as("t"))
         .select(col("doc_id"), col("lang"),
@@ -94,7 +95,7 @@ object TextQueries {
   private def deflateRows(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    QueryDef.spread(Tables.documents(s, d))
+    Partitions.spread(Tables.documents(s, d))
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, t) =>
@@ -170,7 +171,7 @@ object TextQueries {
     // (matching docs × |qTerms|) rows — the retrieval index sliver,
     // not the corpus.
     val tf = graft.CacheScope.track(
-      QueryDef.spread(docs.select(col("doc_id"), col("text")))
+      Partitions.spread(docs.select(col("doc_id"), col("text")))
         .select(col("doc_id"), size(split(col("text"), " ")).as("dl"),
           explode(split(col("text"), " ")).as("term"))
         .filter(col("term").isInCollection(qTerms))
@@ -241,7 +242,7 @@ object TextQueries {
   private def logregFeatures(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     graft.CacheScope.track(
-      QueryDef.spread(Tables.documents(s, d)
+      Partitions.spread(Tables.documents(s, d)
           .select(col("doc_id"), col("text")))
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .select(col("doc_id"),
@@ -468,7 +469,7 @@ object TextQueries {
     "ngram_support" -> QueryDef.sql(
       (s, d) => {
         val bg = graft.CacheScope.track(
-          QueryDef.spread(Tables.documents(s, d))
+          Partitions.spread(Tables.documents(s, d))
             .select(col("doc_id"),
               explode(graft.functions.Hashing.shingles(col("text"), 2)).as("bg")))
         val df = bg.groupBy("bg")
@@ -587,7 +588,7 @@ object TextQueries {
     // All-integer counts; ties broken by pair text. ---
     "bpe_pair_counts" -> QueryDef.sql(
       (s, d) => {
-        val wc = QueryDef.spread(Tables.documents(s, d))
+        val wc = Partitions.spread(Tables.documents(s, d))
           .select(explode(split(col("text"), " ")).as("word"))
           .filter(length(col("word")) > 0)
           .groupBy("word").agg(count(lit(1)).as("c"))
@@ -667,7 +668,7 @@ object TextQueries {
     "cooc_lift" -> QueryDef.sql(
       (s, d) => {
         val wl = filter(split(col("text"), " "), w => length(w) > 0)
-        val docs = QueryDef.spread(Tables.documents(s, d))
+        val docs = Partitions.spread(Tables.documents(s, d))
           .select(wl.as("wl"))
         val uni = graft.CacheScope.track(
           docs.select(explode(col("wl")).as("w"))
@@ -727,7 +728,7 @@ object TextQueries {
     "vocab_coverage" -> QueryDef.sql(
       (s, d) => {
         val words = graft.CacheScope.track(
-          QueryDef.spread(Tables.documents(s, d))
+          Partitions.spread(Tables.documents(s, d))
             .select(col("source"), explode(split(col("text"), " ")).as("word"))
             .filter(length(col("word")) > 0))
         val vocab = words.groupBy("word").agg(count(lit(1)).as("cnt"))
@@ -776,7 +777,7 @@ object TextQueries {
     "rouge_overlap" -> QueryDef.sql(
       (s, d) => {
         val sh = graft.CacheScope.track(
-          QueryDef.spread(Tables.documents(s, d))
+          Partitions.spread(Tables.documents(s, d))
             .select(floor(col("doc_id") / 2).cast("long").as("pair"),
               (col("doc_id") % 2 === 1).as("is_cand"),
               explode(graft.functions.Hashing.shingles(col("text"), 2))
@@ -1200,7 +1201,7 @@ object TextQueries {
         // occurrences — graft_shingles dedups, so build in-plan);
         // guard size>=2: sequence(0,-1) would run DESCENDING
         val bigrams = graft.CacheScope.track(
-          QueryDef.spread(words.filter(size(col("w")) >= 2))
+          Partitions.spread(words.filter(size(col("w")) >= 2))
             .select(col("doc_id"), explode(expr(
               "transform(sequence(0, size(w)-2), i -> struct(w[i] AS w1, concat(w[i], ' ', w[i+1]) AS bg))")).as("t"))
             .select(col("doc_id"), col("t.w1").as("w1"), col("t.bg").as("bg")))
@@ -1266,7 +1267,7 @@ object TextQueries {
       // the per-doc score table is persisted once per (JVM, dataset)
       // — the CCNet production shape: scores are computed at ingest,
       // the tercile cut is the steady-state op
-      (s, d) => perplexityBucketize(s.read.parquet(lmScoredPathFor(s, d))),
+      (s, d) => perplexityBucketize(Tables.parquetCached(s, lmScoredPathFor(s, d))),
       {
         val q1 = 1.0 / 3; val q2 = 2.0 / 3
         s"""WITH ws AS (
@@ -1417,7 +1418,7 @@ object TextQueries {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val occ = graft.CacheScope.track(
-          QueryDef.spread(docs.select(col("doc_id"), col("lang"),
+          Partitions.spread(docs.select(col("doc_id"), col("lang"),
               split(col("text"), " ").as("w")))
             .filter(size(col("w")) >= 2)
             .select(col("doc_id"), col("lang"), explode(expr(

@@ -15,6 +15,33 @@ class PlanAuditSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
+  /** `name`'s plan as a large input plans it: with the advisory
+    * partition size shrunk to 1 KB, every plan-derived partition count
+    * (operators.Partitions) reaches the session's cap of 4. */
+  private def planAtScale(name: String): String = {
+    val k = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val old = spark.conf.getOption(k)
+    spark.conf.set(k, "1k")
+    try plan(name)
+    finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** The partitioning of every exchange in a plan string, in order. */
+  private def exchanges(p: String): Seq[String] =
+    "Exchange (\\w+)".r.findAllMatchIn(p).map(_.group(1)).toSeq
+
+  /** The at-scale plan of a range-layout query, after pinning its
+    * sf0.001 plan exactly: that input plans one partition, so each
+    * range exchange becomes a SinglePartition one (no boundary-sampling
+    * job), and an exchange a single partition already satisfies goes. */
+  private def smallThenAtScale(name: String, small: String*): String = {
+    val s = exchanges(plan(name))
+    assert(s == small, s"$name at sf0.001 plans exchanges $s")
+    val p = planAtScale(name)
+    assert(exchanges(p).contains("rangepartitioning"), p.take(1200))
+    p
+  }
+
   /** (windowCount, allPartitioned) for a query's OPTIMIZED LOGICAL
     * plan: a Window with an empty partitionSpec serializes its whole
     * input through one task at scale, which is the hazard these
@@ -98,7 +125,19 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("group_offsets: two-phase prefix sum — range buckets, no window, no join") {
-    val p = plan("group_offsets")
+    val p = smallThenAtScale("group_offsets", "SinglePartition",
+      "hashpartitioning", "hashpartitioning", "SinglePartition",
+      "hashpartitioning", "hashpartitioning")
+    // the operator keeps its range layout at an explicit count
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val explicit = graft.operators.PrefixSum.exclusive(
+      graft.sources.Tables.lineitem(spark, sfDir)
+        .groupBy("l_orderkey").agg(count(lit(1)).as("len")),
+      "l_orderkey", col("len"), buckets = 2).queryExecution.executedPlan.toString
+    assert("rangepartitioning\\(l_orderkey#\\d+L ASC NULLS FIRST, 2\\)".r
+      .findFirstIn(explicit).isDefined, explicit.take(1200))
+    assert("rangepartitioning\\(l_orderkey#\\d+L ASC NULLS FIRST, 4\\)".r
+      .findFirstIn(p).isDefined, p.take(1200))
     // buckets are Spark's own range partitioning (its sample job runs
     // inside the consuming action — no separate driver quantile pass)
     assert(p.contains("rangepartitioning"), p.take(1200))
@@ -201,7 +240,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("pack_sequences: stream offsets via bucketed prefix sum, no global window") {
-    val p = plan("pack_sequences")
+    val p = smallThenAtScale("pack_sequences",
+      "SinglePartition", "SinglePartition")
     // token start offsets come from the bucketed two-phase prefix
     // sum — a narrow streaming pass over range buckets; a global
     // Window.orderBy(doc_id) would serialize the whole corpus into
@@ -213,7 +253,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("sample_budget: per-stratum fill via bucketed prefix sum, no stratum window") {
-    val p = plan("sample_budget")
+    val p = smallThenAtScale("sample_budget",
+      "SinglePartition", "SinglePartition")
     // budget fill runs on the per-GROUP bucketed prefix sum; a
     // PARTITION BY lang window would serialize each whole language
     // into one task at corpus scale
@@ -412,7 +453,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("shuffle_export: bucketed prefix sum feeds a partial-agg manifest, no window") {
-    val p = plan("shuffle_export")
+    val p = smallThenAtScale("shuffle_export",
+      "SinglePartition", "SinglePartition")
     // the shard cut is PrefixSum's range layout + streaming pass —
     // a global cumsum window would serialize the corpus at 100 TB
     assert(p.contains("rangepartitioning"), p.take(1200))
